@@ -548,14 +548,7 @@ def main() -> None:
         # steady-state cache-served graph-family numbers — the production
         # amortization model — while this key keeps the build cost
         # visible in the artifact).
-        candidate_build: float | None = None
-        probe_build: float | None = None
-        semantic_build: float | None = None
-        status_build: float | None = None
-        pairs_build: float | None = None
-        simhash_build: float | None = None
-        lsh_cc_build: float | None = None
-        simhash_cc_build: float | None = None
+        timings_by_key: dict[str, float] = {}
         try:
             from iceberg_explorer_spark.operators.dedup import (
                 invalidate_shared_candidates,
@@ -602,7 +595,6 @@ def main() -> None:
                 ("lsh_cc_build", shared_lsh_labels),
                 ("simhash_cc_build", shared_simhash_labels),
             ]
-            timings_by_key: dict[str, float] = {}
             for err_key, builder_fn in builds:
                 # per-build error keys: a status-waterfall failure must
                 # never be recorded as a candidate-build failure (the
@@ -615,14 +607,6 @@ def main() -> None:
                     )
                 except Exception as exc:  # noqa: BLE001 — never abort
                     errors[err_key] = f"{type(exc).__name__}: {exc}"[:500]
-            candidate_build = timings_by_key.get("candidate_build")
-            probe_build = timings_by_key.get("probe_build")
-            semantic_build = timings_by_key.get("semantic_build")
-            status_build = timings_by_key.get("status_build")
-            pairs_build = timings_by_key.get("pairs_build")
-            simhash_build = timings_by_key.get("simhash_build")
-            lsh_cc_build = timings_by_key.get("lsh_cc_build")
-            simhash_cc_build = timings_by_key.get("simhash_cc_build")
         except Exception as exc:  # noqa: BLE001 — the import guard
             errors["candidate_build"] = f"{type(exc).__name__}: {exc}"[:500]
 
@@ -659,20 +643,13 @@ def main() -> None:
             errors,
             sf,
             ITERS,
-            candidate_build,
             extended=EXTENDED,
             graduating=GRADUATING_R15,
-            probe_build=probe_build,
-            semantic_build=semantic_build,
             cpu_probe_sec=cpu_probe_sec,
             cpu_probe_1t_sec=cpu_probe_1t_sec,
             cpu_probe_post_sec=cpu_probe_post_sec,
             cpu_probe_post_1t_sec=cpu_probe_post_1t_sec,
-            status_build=status_build,
-            pairs_build=pairs_build,
-            simhash_build=simhash_build,
-            lsh_cc_build=lsh_cc_build,
-            simhash_cc_build=simhash_cc_build,
+            **timings_by_key,
         )
         # Detail line: the complete per-query map, own line, parse-optional.
         print(detail_line)

@@ -24,9 +24,11 @@ from __future__ import annotations
 
 import hashlib
 import os
+import functools
 import threading
 import time
 from collections import OrderedDict
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -421,23 +423,22 @@ def pairs_from_band_rows(
     )
 
 
-#: session-scoped materializations of candidate sets, keyed by
-#: (spark application id, sf_dir, input-table fingerprint, kind) where kind
-#: is the candidate GENERATOR ("lsh" = MinHash bands, "probe" = rare-shingle
-#: inverted index, "semantic" = embedding-cosine edges over embeddings,
-#: "semantic_cc" = the cluster labels over those edges),
+#: session-scoped materializations of shared artifacts, keyed by
+#: (spark application id, sf_dir, input tables, input fingerprint, kind)
+#: where kind names the declared artifact (``@shared_artifact``),
 #: LRU-bounded: holding a strong reference pins the
 #: checkpointed RDD blocks (ContextCleaner frees them only after the
 #: DataFrame is garbage collected), so an unbounded dict would grow
 #: block-manager memory monotonically in a long-lived session that touches
 #: many corpora (the adversarial sweeps build a fresh tmp corpus per run).
-#: Twelve slots cover every steady-state workload (the bench and driver
-#: use one sf_dir each × four kinds; tests use three corpora) while
-#: evicted entries become collectable again.
+#: The cap is two entries per declared kind: every artifact of two corpora,
+#: so a session that alternates between two corpora rebuilds nothing, while
+#: entries evicted past that become collectable again.
 _SHARED_CANDIDATES: OrderedDict[
     tuple[str, str, str, str, str], DataFrame
 ] = OrderedDict()
-_SHARED_CANDIDATES_MAX = 12
+#: kind -> cached accessor, one entry per ``@shared_artifact`` declaration
+_SHARED_ARTIFACTS: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 #: Guards the registry dict itself — held only for reads/inserts, NEVER
 #: across a build. The service layer runs each query on its own daemon
 #: thread (lifecycle/executor.py), so without dedup two concurrent
@@ -673,11 +674,11 @@ def _shared_candidates(
     spark: SparkSession,
     sf_dir: str,
     kind: str,
-    build,
-    cleanup=None,
-    table: str | tuple[str, ...] = "documents",
+    build: Callable[[], DataFrame],
+    tables: tuple[str, ...],
 ) -> DataFrame:
-    """Keyed check-then-build for session-shared candidate checkpoints.
+    """Keyed check-then-build for session-shared artifact checkpoints;
+    reached only through ``shared_artifact`` accessors.
 
     A production 100 TB dedup run materializes each candidate set to
     parquet once and feeds every downstream consumer (verify, clusters,
@@ -686,9 +687,9 @@ def _shared_candidates(
     mirrors that with a session-scoped ``localCheckpoint``: the first
     caller pays the pipeline, every later consumer reads the checkpointed
     blocks. The registry is keyed by (application id, corpus dir, input
-    table, content fingerprint, generator kind) — a new session or a
-    rewritten input re-materializes — and LRU-bounded: while an entry is cached its
-    strong reference pins the checkpoint blocks; once evicted,
+    tables, content fingerprint, artifact kind) — a new session or a
+    rewritten input re-materializes — and LRU-bounded: while an entry is
+    cached its strong reference pins the checkpoint blocks; once evicted,
     ContextCleaner frees them when the DataFrame is garbage collected.
     Thread-safe with PER-KEY build dedup: the service layer runs queries
     on concurrent daemon threads; a cold-cache race on one key
@@ -698,32 +699,19 @@ def _shared_candidates(
     registry lock is held only for dict reads/inserts, never across the
     multi-second builds the semantic family added). A failed build
     releases its waiters, and the first to re-check retakes the build.
-    ``cleanup``, if given, runs after the miss-path materialization
-    completes (success or failure) — the hook for builders that persist
-    an intermediate frame for the build's duration (currently the
-    semantic builder's CC label table; the probe builder used it for a
-    private shingle persist until round 9 replaced that with the
-    session-shared ``shared_hashed_shingles`` checkpoint — do NOT
-    re-introduce a build-scoped shingle persist on that path) and must
-    release it once the checkpoint holds the result.
+    The built frame is checkpointed eagerly unless the build already
+    returned a checkpoint (``_cc_labels``).
 
-    ``table`` may be a TUPLE for kinds whose build reads more than one
-    input table (the incremental status waterfall fingerprints
-    documents AND embeddings): the key's table slot becomes the joined
-    name and the fingerprint the concatenation of per-table
-    fingerprints, so a rewrite of EITHER input re-materializes. The
-    staleness eviction below compares PER table component, so a
-    single-table rebuild also evicts stale multi-table entries that
-    contain the rebuilt table — while an entry over a genuinely
-    different input can never be evicted by another family's cold build
-    (the r8 cross-table eviction lesson).
+    ``tables`` may hold more than one input table (the incremental
+    status waterfall fingerprints documents AND embeddings): the key's
+    table slot becomes the joined name and the fingerprint the
+    concatenation of per-table fingerprints, so a rewrite of EITHER
+    input re-materializes. The staleness eviction below compares PER
+    table component, so a single-table rebuild also evicts stale
+    multi-table entries that contain the rebuilt table — while an entry
+    over a genuinely different input can never be evicted by another
+    family's cold build (the r8 cross-table eviction lesson).
     """
-    tables = (table,) if isinstance(table, str) else tuple(table)
-    if any("+" in t for t in tables):
-        # the key's table slot re-splits on '+' during staleness
-        # eviction — a '+' inside a name would silently misalign the
-        # per-component zip and evict the wrong entries
-        raise ValueError(f"table names must not contain '+': {tables}")
 
     def _fp() -> str:
         fp = "|".join(_corpus_fingerprint(sf_dir, table=t) for t in tables)
@@ -765,11 +753,9 @@ def _shared_candidates(
         try:
             with _SHARED_CANDIDATES_LOCK:
                 gen_at_start = _SHARED_CANDIDATES_GEN
-            try:
-                df = build().localCheckpoint(eager=True)
-            finally:
-                if cleanup is not None:
-                    cleanup()
+            df = build()
+            if not getattr(df, "is_checkpoint", False):
+                df = df.localCheckpoint(eager=True)
             # Builds run OUTSIDE the lock, so two things can supersede
             # this result before it is inserted: an explicit
             # invalidation (generation bump) or an in-place rewrite of
@@ -830,7 +816,7 @@ def _shared_candidates(
                 ]:
                     del _SHARED_CANDIDATES[k]
                 _SHARED_CANDIDATES[key] = df
-                while len(_SHARED_CANDIDATES) > _SHARED_CANDIDATES_MAX:
+                while len(_SHARED_CANDIDATES) > 2 * len(_SHARED_ARTIFACTS):
                     _SHARED_CANDIDATES.popitem(last=False)
             return df
         finally:
@@ -839,9 +825,42 @@ def _shared_candidates(
             in_flight.set()
 
 
+def shared_artifact(kind: str, tables: tuple[str, ...] = ("documents",)):
+    """Declare ``build(spark, sf_dir) -> DataFrame`` as the session-shared
+    artifact ``kind`` and return its cached accessor (same name and
+    signature). The accessor serves the checkpoint from
+    ``_SHARED_CANDIDATES`` keyed by (application id, corpus dir,
+    ``tables``, their content fingerprint, ``kind``) and runs ``build``
+    only on a miss, so parent artifacts called inside ``build`` are
+    resolved only when the child is actually rebuilt. ``tables`` names
+    every input table the build reads: a rewrite of any of them
+    re-materializes the artifact."""
+    if any("+" in t for t in tables):
+        # the key's table slot re-splits on '+' during staleness
+        # eviction — a '+' inside a name would silently misalign the
+        # per-component zip and evict the wrong entries
+        raise ValueError(f"table names must not contain '+': {tables}")
+
+    def declare(build: Callable[[SparkSession, str], DataFrame]):
+        if kind in _SHARED_ARTIFACTS:
+            raise ValueError(f"shared artifact {kind!r} is declared twice")
+
+        @functools.wraps(build)
+        def accessor(spark: SparkSession, sf_dir: str) -> DataFrame:
+            return _shared_candidates(
+                spark, sf_dir, kind, lambda: build(spark, sf_dir), tables
+            )
+
+        _SHARED_ARTIFACTS[kind] = accessor
+        return accessor
+
+    return declare
+
+
+@shared_artifact("shingles")
 def shared_hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DISTINCT (doc_id, hb) shingle-hash table, materialized ONCE per
-    corpus per session (kind="shingles" in the keyed candidate cache).
+    corpus per session.
 
     This is the tokenize-once artifact of a production dedup pipeline: at
     100 TB the corpus is tokenized+hashed exactly once, the 16-byte
@@ -857,48 +876,29 @@ def shared_hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     it the same rewrite-detection contract as every other cached kind.
     min over a multiset equals min over its set, so the LSH signature
     build is unchanged by reading the distinct table."""
-    return _shared_candidates(
-        spark,
-        sf_dir,
-        "shingles",
-        # (r17: fanning this table out before the checkpoint was A/B'd —
-        # interleaved, cache-invalidated, twice — and REJECTED: consumers
-        # summed 8-10% slower with a 32-partition checkpoint; the verify
-        # joins and signature aggs are shuffle-plumbing-bound here, and
-        # extra partitions multiply per-stage task overhead)
-        lambda: hashed_shingles(spark, sf_dir),
-    )
+    # (r17: fanning this table out before the checkpoint was A/B'd —
+    # interleaved, cache-invalidated, twice — and REJECTED: consumers
+    # summed 8-10% slower with a 32-partition checkpoint; the verify
+    # joins and signature aggs are shuffle-plumbing-bound here, and
+    # extra partitions multiply per-stage task overhead)
+    return hashed_shingles(spark, sf_dir)
 
 
-def shared_lsh_candidates(
-    spark: SparkSession, sf_dir: str, hashed: DataFrame | None = None
-) -> DataFrame:
+@shared_artifact("lsh")
+def shared_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The (doc_a, doc_b) LSH candidate set, materialized ONCE per session
-    (see ``_shared_candidates`` for the caching/consistency contract).
-
-    ``hashed``: optional precomputed (doc_id, hb) shingle hashes, used only
-    on a cache miss; when omitted, a miss reads the session-shared shingle
-    checkpoint (``shared_hashed_shingles``) so the corpus is tokenized at
-    most once per session however the builds interleave.
+    (see ``shared_artifact`` for the caching/consistency contract). A
+    miss reads the session-shared shingle checkpoint
+    (``shared_hashed_shingles``), so the corpus is tokenized at most once
+    per session however the builds interleave.
 
     The checkpoint keeps the full (doc_a, doc_b, n_shared_bands) rows —
     exactly what the parquet artifact would hold — so the candidate-list
     query itself (``dedup_minhash_lsh``) serves from it too; graph
     consumers project the two id columns.
     """
-    return _shared_candidates(
-        spark,
-        sf_dir,
-        "lsh",
-        lambda: lsh_candidates(
-            spark,
-            sf_dir,
-            hashed=(
-                hashed
-                if hashed is not None
-                else shared_hashed_shingles(spark, sf_dir)
-            ),
-        ),
+    return lsh_candidates(
+        spark, sf_dir, hashed=shared_hashed_shingles(spark, sf_dir)
     )
 
 
@@ -1106,55 +1106,32 @@ def dedup_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@shared_artifact("simhash")
 def shared_simhash_hamming(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``simhash_candidate_hamming`` materialized ONCE per corpus per
-    session (kind="simhash" in the keyed candidate cache): the pair
-    operator and its calibration sweep consume the identical
-    candidate+distance frame, so the second consumer reads the
+    session: the pair operator and its calibration sweep consume the
+    identical candidate+distance frame, so the second consumer reads the
     checkpoint instead of re-paying the signature build, the band
     shuffle and both verify joins — the same two-operators-one-
     candidate-set case the cache exists for (dedup_minhash_lsh)."""
-    return _shared_candidates(
-        spark,
-        sf_dir,
-        "simhash",
-        lambda: simhash_candidate_hamming(spark, sf_dir),
-    )
+    return simhash_candidate_hamming(spark, sf_dir)
 
 
+@shared_artifact("simhash_cc")
 def shared_simhash_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Component labels (doc_id, cluster_id) over the corpus-wide
     banded-Hamming graph at the HAM_MAX contract, materialized ONCE per
-    corpus per session (kind="simhash_cc") — the SimHash member of the
-    per-modality cluster-label artifact family (semantic_cc, lsh_cc).
+    corpus per session — the SimHash member of the per-modality
+    cluster-label artifact family (semantic_cc, lsh_cc).
     pipeline_clean_corpus_v3's simhash stage re-ran this O(diameter)-
     round propagation in-plan per call before r18 (its largest
     marginal cost over v2: ~10 s summed executor time per call at
     sf0.1); now the report reads the stored assignment like every
-    other stage. Cleanup hook releases the loop's interim persist once
-    the checkpoint holds the labels."""
-    edges_src = shared_simhash_hamming(spark, sf_dir)
-    temp: list[DataFrame] = []
-
-    def _build() -> DataFrame:
-        cc = connected_components(
-            edges_src.filter(F.col("hamming") <= SIMHASH_HAM_MAX).select(
-                "doc_a", "doc_b"
-            )
-        )
-        temp.append(cc.cc_persisted_labels)
-        return cc.select(
-            F.col("node").alias("doc_id"),
-            F.col("component").alias("cluster_id"),
-        )
-
-    def _cleanup() -> None:
-        for df in temp:
-            df.unpersist()
-
-    return _shared_candidates(
-        spark, sf_dir, "simhash_cc", _build, cleanup=_cleanup
+    other stage."""
+    edges = shared_simhash_hamming(spark, sf_dir).filter(
+        F.col("hamming") <= SIMHASH_HAM_MAX
     )
+    return _cc_labels(edges.select("doc_a", "doc_b"), "doc_id")
 
 
 def simhash_candidate_hamming(
@@ -1387,9 +1364,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the candidate set feeds the pair join AND the candidate-doc semi-join
     # filter; the session-shared checkpoint materializes it exactly once
     # for the whole graph family (triangles/PageRank/overlap/sweep included)
-    cands = shared_lsh_candidates(spark, sf_dir, hashed=sh).select(
-        "doc_a", "doc_b"
-    )
+    cands = shared_lsh_candidates(spark, sf_dir).select("doc_a", "doc_b")
     return jaccard_verify(cands, sh)
 
 
@@ -1547,9 +1522,7 @@ def containment_verify(
 )
 def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shared_hashed_shingles(spark, sf_dir)
-    cands = shared_lsh_candidates(spark, sf_dir, hashed=sh).select(
-        "doc_a", "doc_b"
-    )
+    cands = shared_lsh_candidates(spark, sf_dir).select("doc_a", "doc_b")
     return containment_verify(cands, sh)
 
 
@@ -1613,30 +1586,27 @@ def probe_candidates(
     )
 
 
-def shared_probe_candidates(
-    spark: SparkSession, sf_dir: str, hashed: DataFrame | None = None
-) -> DataFrame:
+@shared_artifact("probe")
+def shared_probe_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The rare-shingle probe candidate set, materialized ONCE per session —
     the probe-index twin of ``shared_lsh_candidates`` (same keyed cache,
-    consistency contract in ``_shared_candidates``). Production shape:
+    consistency contract in ``shared_artifact``). Production shape:
     candidates to parquet, every verify/report reads the artifact.
 
-    Cold builds with no caller-provided ``hashed`` read the session-shared
-    shingle checkpoint (``shared_hashed_shingles``): the probe plan
-    references the shingle table from THREE branches (df aggregation,
-    rare filter join, probe hits join), and the checkpoint means no
-    branch — and no sibling build — ever re-runs tokenize+hash+distinct
-    (r8 persisted a build-scoped copy instead, measured 2.17 → 1.86 s
-    cold; r9's shared checkpoint removes the scan from this build
-    entirely whenever any shingle consumer ran first, the normal case —
-    see SCALE.md round-9 probe_build audit for the stage numbers).
+    Cold builds read the session-shared shingle checkpoint
+    (``shared_hashed_shingles``): the probe plan references the shingle
+    table from THREE branches (df aggregation, rare filter join, probe
+    hits join), and the checkpoint means no branch — and no sibling
+    build — ever re-runs tokenize+hash+distinct (r8 persisted a
+    build-scoped copy instead, measured 2.17 → 1.86 s cold; r9's shared
+    checkpoint removes the scan from this build entirely whenever any
+    shingle consumer ran first, the normal case — see SCALE.md round-9
+    probe_build audit for the stage numbers). Do NOT re-introduce a
+    build-scoped shingle persist on this path.
     """
-
-    def _build() -> DataFrame:
-        sh = hashed if hashed is not None else shared_hashed_shingles(spark, sf_dir)
-        return probe_candidates(spark, sf_dir, hashed=sh)
-
-    return _shared_candidates(spark, sf_dir, "probe", _build)
+    return probe_candidates(
+        spark, sf_dir, hashed=shared_hashed_shingles(spark, sf_dir)
+    )
 
 
 #: Probe-candidate CTEs (reference ``shh``; yield ``probe_c``) — shared by
@@ -1699,7 +1669,7 @@ def dedup_containment_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-executes the probe pipeline concurrently (measured: heap thrash
     # and a blown 3× point at sf0.1). The shared cache additionally makes
     # repeat invocations steady-state (build once per corpus per session).
-    cands = shared_probe_candidates(spark, sf_dir, hashed=sh)
+    cands = shared_probe_candidates(spark, sf_dir)
     return containment_verify(cands, sh)
 
 
@@ -1757,11 +1727,11 @@ def dedup_containment_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_overlap_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shared_hashed_shingles(spark, sf_dir)
     lsh = (
-        shared_lsh_candidates(spark, sf_dir, hashed=sh)
+        shared_lsh_candidates(spark, sf_dir)
         .select("doc_a", "doc_b")
         .withColumn("src", F.lit("lsh"))
     )
-    probe = shared_probe_candidates(spark, sf_dir, hashed=sh).withColumn(
+    probe = shared_probe_candidates(spark, sf_dir).withColumn(
         "src", F.lit("probe")
     )
     srcs = (
@@ -1821,37 +1791,41 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return shared_lsh_labels(spark, sf_dir)
 
 
+@shared_artifact("lsh_cc")
 def shared_lsh_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster labels (doc_id, cluster_id) over the LSH candidate graph,
-    materialized ONCE per corpus per session (kind="lsh_cc" in the keyed
-    cache) — the MinHash twin of ``shared_semantic_labels`` and the same
-    production shape: cluster the corpus once, then every dedup decision
-    and report reads the stored assignment. THREE registered queries
-    consumed this label table and each re-ran the CC loop per call
-    before r18 (dedup_clusters, dedup_keep_best, dedup_cluster_stats);
-    now the propagation runs once per corpus. connected_components
-    returns its final label table persisted (the loop's own caching);
-    once the cache's eager checkpoint holds a copy that interim persist
-    is dead weight — released via the cleanup hook, same discipline as
-    the semantic builder."""
-    edges_src = shared_lsh_candidates(spark, sf_dir)
-    temp: list[DataFrame] = []
+    materialized ONCE per corpus per session — the MinHash twin of
+    ``shared_semantic_labels`` and the same production shape: cluster
+    the corpus once, then every dedup decision and report reads the
+    stored assignment. THREE registered queries consumed this label
+    table and each re-ran the CC loop per call before r18
+    (dedup_clusters, dedup_keep_best, dedup_cluster_stats); now the
+    propagation runs once per corpus."""
+    edges = shared_lsh_candidates(spark, sf_dir).select("doc_a", "doc_b")
+    return _cc_labels(edges, "doc_id")
 
-    def _build() -> DataFrame:
-        cc = connected_components(edges_src.select("doc_a", "doc_b"))
-        temp.append(cc.cc_persisted_labels)
-        return cc.select(
-            F.col("node").alias("doc_id"),
+
+def _cc_labels(edges: DataFrame, node_alias: str) -> DataFrame:
+    """(node_alias, cluster_id) component labels of a (doc_a, doc_b) edge
+    frame, eagerly checkpointed. connected_components returns its final
+    label table persisted (the loop's own caching); once the checkpoint
+    holds a copy that persist is dead weight, so it is released here —
+    after the checkpoint, and also when the checkpoint fails. unpersist
+    must target the frame that was actually persisted (CacheManager
+    matches exact plans; releasing the projection is a silent no-op),
+    which connected_components exposes as ``cc_persisted_labels``. The
+    result carries ``is_checkpoint`` so the shared-artifact cache does
+    not checkpoint it a second time."""
+    cc = connected_components(edges)
+    try:
+        labels = cc.select(
+            F.col("node").alias(node_alias),
             F.col("component").alias("cluster_id"),
-        )
-
-    def _cleanup() -> None:
-        for df in temp:
-            df.unpersist()
-
-    return _shared_candidates(
-        spark, sf_dir, "lsh_cc", _build, cleanup=_cleanup
-    )
+        ).localCheckpoint(eager=True)
+    finally:
+        cc.cc_persisted_labels.unpersist()
+    labels.is_checkpoint = True
+    return labels
 
 
 def connected_components(
@@ -2084,9 +2058,9 @@ def connected_components(
                 # projection returned here never matches the persisted
                 # label table, so a caller calling out.unpersist() gets a
                 # silent no-op. Expose the actually-persisted frame for
-                # callers (shared_semantic_labels' cleanup hook) that
-                # checkpoint a copy and then want these blocks released
-                # rather than pinned until session end.
+                # callers (``_cc_labels``) that checkpoint a copy and
+                # then want these blocks released rather than pinned
+                # until session end.
                 out.cc_persisted_labels = labels
                 # measured-convergence telemetry for tests and the
                 # SCALE.md deep-diameter stress (not part of the schema)
@@ -2857,9 +2831,7 @@ def dedup_jaccard_threshold_sweep(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     sh = shared_hashed_shingles(spark, sf_dir)
-    cands = shared_lsh_candidates(spark, sf_dir, hashed=sh).select(
-        "doc_a", "doc_b"
-    )
+    cands = shared_lsh_candidates(spark, sf_dir).select("doc_a", "doc_b")
     # threshold=0.0 keeps every candidate pair with its exact jaccard; the
     # grid filter below is the only thresholding
     pairs = jaccard_verify(cands, sh, threshold=0.0)
@@ -3620,17 +3592,10 @@ def incremental_component_cls(
     # checkpoint the tiny contact list instead of re-running its
     # distinct per branch (the oracle marks the same CTE MATERIALIZED)
     contact = _spine_contact(be, ids, a_b, b_b).localCheckpoint(eager=True)
-    cc = connected_components(bb)
     # comp feeds TWO branches (tainted + cls); the eager checkpoint is
     # the multi-branch materialization AND lets the loop's interim label
-    # persist be released immediately — unpersist must target the frame
-    # that was actually persisted (CacheManager matches exact plans;
-    # releasing a projection is a silent no-op), which
-    # connected_components exposes for exactly this
-    comp = cc.select(
-        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
-    ).localCheckpoint(eager=True)
-    cc.cc_persisted_labels.unpersist()
+    # persist be released immediately
+    comp = _cc_labels(bb, "doc_id")
     return _cls_assemble(batch, comp, contact)
 
 
@@ -3711,9 +3676,7 @@ def component_cls_report(cls: DataFrame, kind: str) -> DataFrame:
 )
 def dedup_incremental_near(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = shared_hashed_shingles(spark, sf_dir)
-    cands = shared_lsh_candidates(spark, sf_dir, hashed=sh).select(
-        "doc_a", "doc_b"
-    )
+    cands = shared_lsh_candidates(spark, sf_dir).select("doc_a", "doc_b")
     bc = cands.filter(
         (F.col("doc_a") % INCR_MOD == 0) | (F.col("doc_b") % INCR_MOD == 0)
     )
@@ -3894,9 +3857,7 @@ def dedup_incremental_two_day_near(
     d1 = parity_batch_predicate
     d2 = lambda c: c % INCR_MOD == INCR_DAY2_REM  # noqa: E731
     sh = shared_hashed_shingles(spark, sf_dir)
-    cands = shared_lsh_candidates(spark, sf_dir, hashed=sh).select(
-        "doc_a", "doc_b"
-    )
+    cands = shared_lsh_candidates(spark, sf_dir).select("doc_a", "doc_b")
     # ONE verify over candidates touching EITHER generation; the
     # verified edge table feeds both days' classifications — checkpoint
     bc = cands.filter(
@@ -3938,11 +3899,7 @@ def dedup_incremental_two_day_near(
     # an identity — skipped to keep the sink action's exchange count
     # down (every join is an AQE stage with a fixed scheduling cost).
     bb = _spine_bb(be1, None, a1, b1).unionByName(_spine_bb(be, None, a2, b2))
-    cc = connected_components(bb)
-    comp = cc.select(
-        F.col("node").alias("doc_id"), F.col("component").alias("cluster_id")
-    ).localCheckpoint(eager=True)
-    cc.cc_persisted_labels.unpersist()
+    comp = _cc_labels(bb, "doc_id")
     # per-generation contact seeds + the shared classification tail
     # (_cls_assemble — the same taint/min-keep rule the single-
     # generation path runs). Contacts are NOT checkpointed here: both

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from iceberg_explorer_spark.operators.dedup import shared_artifact
 from iceberg_explorer_spark.operators.registry import query
 from iceberg_explorer_spark.operators.text import FINGERPRINT_MAX_CHARS
 from iceberg_explorer_spark.sources.registry import load_table, repartition_for_compute
@@ -944,29 +945,19 @@ def _pair_keys_sql() -> str:
     )"""
 
 
+@shared_artifact("pairs")
 def shared_pair_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus's (doc_id, source, ahash, caption_fp) pair-key table,
-    materialized ONCE per corpus per session through the keyed candidate
-    cache (kind="pairs", fingerprinting documents.parquet) — the
-    in-session mirror of the persisted "pairs" artifact
-    (incremental_artifacts.ARTIFACT_NAMES). The aHash decode is the
-    expensive half; consumers that need the whole-corpus key table
-    (dedup_incremental_paired, pipeline_incremental_ingest_v2) read the
-    checkpoint instead of re-running the kernel per call, and the eager
-    checkpoint doubles as the multi-branch materialization the flags
-    helper needs."""
-    from iceberg_explorer_spark.operators.dedup import _shared_candidates
-    from iceberg_explorer_spark.sources.registry import (
-        repartition_for_compute,
-    )
-
-    return _shared_candidates(
-        spark,
-        sf_dir,
-        "pairs",
-        lambda: paired_pair_keys(
-            repartition_for_compute(load_table(spark, sf_dir, "documents"))
-        ),
+    materialized ONCE per corpus per session through the keyed artifact
+    cache (fingerprinting documents.parquet) — the in-session mirror of
+    the persisted "pairs" artifact (incremental_artifacts.ARTIFACT_NAMES).
+    The aHash decode is the expensive half; consumers that need the
+    whole-corpus key table (dedup_incremental_paired,
+    pipeline_incremental_ingest_v2) read the checkpoint instead of
+    re-running the kernel per call, and the eager checkpoint doubles as
+    the multi-branch materialization the flags helper needs."""
+    return paired_pair_keys(
+        repartition_for_compute(load_table(spark, sf_dir, "documents"))
     )
 
 

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from iceberg_explorer_spark.operators.dedup import (
     _cc_closure_sql,
     _LSH_CANDIDATES_SQL,
+    shared_artifact,
     shared_lsh_candidates,
 )
 from iceberg_explorer_spark.operators.registry import query
@@ -1815,28 +1816,20 @@ def pipeline_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@shared_artifact("incr_status", tables=("documents", "embeddings"))
 def shared_incremental_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``incremental_status`` materialized ONCE per corpus per session
-    through the keyed candidate cache (kind="incr_status") — the first
-    MULTI-TABLE kind: the waterfall reads documents AND embeddings, so
-    the entry fingerprints both and a rewrite of either
-    re-materializes. Production shape: the nightly job computes the
-    batch's status table once and BOTH its consumers — the stage report
-    (pipeline_incremental_ingest) and the artifact append bill
-    (pipeline_incremental_artifact_delta) — read that artifact; before
-    round 11 each consumer re-ran the full exact→near→semantic waterfall
-    per call (disclosed in SCALE.md round-10 as the known recompute).
-    The increment-sized (doc_id, source, stage) frame is the cheapest
-    checkpoint in the family."""
-    from iceberg_explorer_spark.operators.dedup import _shared_candidates
-
-    return _shared_candidates(
-        spark,
-        sf_dir,
-        "incr_status",
-        lambda: incremental_status(spark, sf_dir),
-        table=("documents", "embeddings"),
-    )
+    through the keyed artifact cache — a MULTI-TABLE kind: the waterfall
+    reads documents AND embeddings, so the entry fingerprints both and a
+    rewrite of either re-materializes. Production shape: the nightly job
+    computes the batch's status table once and BOTH its consumers — the
+    stage report (pipeline_incremental_ingest) and the artifact append
+    bill (pipeline_incremental_artifact_delta) — read that artifact;
+    before round 11 each consumer re-ran the full exact→near→semantic
+    waterfall per call (disclosed in SCALE.md round-10 as the known
+    recompute). The increment-sized (doc_id, source, stage) frame is the
+    cheapest checkpoint in the family."""
+    return incremental_status(spark, sf_dir)
 
 
 def incremental_status(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1865,9 +1858,7 @@ def incremental_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-running the digest shuffle
     flags = incremental_exact_flags(docs).localCheckpoint(eager=True)
     sh = shared_hashed_shingles(spark, sf_dir)
-    cands = shared_lsh_candidates(spark, sf_dir, hashed=sh).select(
-        "doc_a", "doc_b"
-    )
+    cands = shared_lsh_candidates(spark, sf_dir).select("doc_a", "doc_b")
     bc = cands.filter(
         (F.col("doc_a") % INCR_MOD == 0) | (F.col("doc_b") % INCR_MOD == 0)
     )
@@ -2183,25 +2174,18 @@ def _incremental_v2_oracle() -> str:
     """
 
 
+@shared_artifact("incr_status_v2", tables=("documents", "embeddings"))
 def shared_incremental_status_v2(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """``incremental_status_v2`` materialized ONCE per corpus per session
-    (kind="incr_status_v2", fingerprinting documents AND embeddings —
-    the pair keys read documents, the inner status both): the v2
-    capstone and its artifact delta each consume the four-stage status;
-    without this they would re-run the paired-stage probe per call —
-    the same per-consumer recompute the three-stage
-    ``shared_incremental_status`` exists to prevent."""
-    from iceberg_explorer_spark.operators.dedup import _shared_candidates
-
-    return _shared_candidates(
-        spark,
-        sf_dir,
-        "incr_status_v2",
-        lambda: incremental_status_v2(spark, sf_dir),
-        table=("documents", "embeddings"),
-    )
+    (fingerprinting documents AND embeddings — the pair keys read
+    documents, the inner status both): the v2 capstone and its artifact
+    delta each consume the four-stage status; without this they would
+    re-run the paired-stage probe per call — the same per-consumer
+    recompute the three-stage ``shared_incremental_status`` exists to
+    prevent."""
+    return incremental_status_v2(spark, sf_dir)
 
 
 def incremental_status_v2(spark: SparkSession, sf_dir: str) -> DataFrame:

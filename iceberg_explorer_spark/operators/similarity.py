@@ -25,10 +25,12 @@ from pyspark.sql import functions as F
 
 from iceberg_explorer_spark.operators.dedup import (
     _cc_closure_sql,
+    _cc_labels,
     _incremental_edges_sql,
     _incremental_report_sql,
     incremental_component_report,
     INCR_MOD,
+    shared_artifact,
 )
 from iceberg_explorer_spark.operators.registry import query
 from iceberg_explorer_spark.sources.registry import (
@@ -1612,7 +1614,8 @@ def _bucket_pairs_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectorized numpy, not via _with_normalized: each vector lives in exactly
     one bucket so the work is identical, but interpreted Catalyst
     higher-order lambdas cost ~40% of the whole query at sf0.1 (A/B in
-    scripts/perf_ab.py: 0.99 s JVM-norm vs 0.60 s numpy-norm) and the
+    SCALE.md, 'Round-2 bench "regression": accounted': 0.99 s JVM-norm
+    vs 0.60 s numpy-norm) and the
     raw-embedding Arrow transfer is no wider than the normalized one.
     Rounding is left to callers (JVM-side F.round, HALF_UP) so numpy's
     banker's rounding never touches the cross-engine contract.
@@ -4201,89 +4204,46 @@ def similarity_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EDGE_COS_MICRO = 1_000_000
 
 
+@shared_artifact("semantic", tables=("embeddings",))
 def shared_semantic_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The embedding-cosine near-dup edge set (id_a, id_b, micro),
-    materialized ONCE per session through the same keyed candidate cache
-    as the LSH and probe generators (kind="semantic", fingerprinting
+    materialized ONCE per session through the same keyed artifact cache
+    as the LSH and probe generators (fingerprinting
     ``embeddings.parquet``). Production shape: edges to parquet once,
     every cluster/report reads the artifact — and in-session the eager
     checkpoint doubles as the multi-branch materialization (the CC loop
     and the intra-cluster stats join both consume this frame)."""
-    from iceberg_explorer_spark.operators.dedup import _shared_candidates
-
-    def _build() -> DataFrame:
-        return (
-            _bucket_pairs_gemm(spark, sf_dir)
-            .select(
-                F.col("vec_a").alias("id_a"),
-                F.col("vec_b").alias("id_b"),
-                F.round("cos_sim", 6).alias("cos_sim"),
-            )
-            .filter(F.col("cos_sim") >= NEAR_DUP_TAU)
-            .withColumn(
-                "micro",
-                F.round(F.col("cos_sim") * _EDGE_COS_MICRO).cast("bigint"),
-            )
-            .select("id_a", "id_b", "micro")
+    return (
+        _bucket_pairs_gemm(spark, sf_dir)
+        .select(
+            F.col("vec_a").alias("id_a"),
+            F.col("vec_b").alias("id_b"),
+            F.round("cos_sim", 6).alias("cos_sim"),
         )
-
-    return _shared_candidates(
-        spark, sf_dir, "semantic", _build, table="embeddings"
+        .filter(F.col("cos_sim") >= NEAR_DUP_TAU)
+        .withColumn(
+            "micro",
+            F.round(F.col("cos_sim") * _EDGE_COS_MICRO).cast("bigint"),
+        )
+        .select("id_a", "id_b", "micro")
     )
 
 
-
+@shared_artifact("semantic_cc", tables=("embeddings",))
 def shared_semantic_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster labels (id_a, cluster_id) over the semantic edge graph,
-    materialized ONCE per corpus per session (kind="semantic_cc" in the
-    keyed cache). SemDeDup's production shape is exactly this: cluster
-    the corpus once, then every dedup decision and report reads the
-    stored assignment — re-running the O(diameter)-round label
-    propagation per report would dominate its cost (measured at sf0.1:
-    the 5-round propagation is ~3 s/call; the materialized labels read
-    in ~0.1 s). The checkpoint also IS the multi-branch materialization:
-    the size rollup and the intra-cluster stats join both consume it.
-    connected_components returns its final label table persisted (the
-    loop's own caching); once the cache's eager checkpoint holds a copy,
-    that interim persist is dead weight — released via the cleanup hook,
-    same discipline as the probe builder's shingle scan."""
-    from iceberg_explorer_spark.operators.dedup import (
-        _shared_candidates,
-        connected_components,
+    materialized ONCE per corpus per session. SemDeDup's production
+    shape is exactly this: cluster the corpus once, then every dedup
+    decision and report reads the stored assignment — re-running the
+    O(diameter)-round label propagation per report would dominate its
+    cost (measured at sf0.1: the 5-round propagation is ~3 s/call; the
+    materialized labels read in ~0.1 s). The checkpoint also IS the
+    multi-branch materialization: the size rollup and the intra-cluster
+    stats join both consume it."""
+    edges = shared_semantic_edges(spark, sf_dir).select(
+        F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
     )
-
-    edges = shared_semantic_edges(spark, sf_dir)
-    temp: list[DataFrame] = []
-
-    def _build() -> DataFrame:
-        cc = connected_components(
-            edges.select(
-                F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
-            )
-        )
-        # unpersist must target the frame that was actually persisted:
-        # Spark's CacheManager matches the exact cached plan, so calling
-        # unpersist on the returned projection is a silent no-op —
-        # connected_components exposes its persisted label table for
-        # exactly this release
-        temp.append(cc.cc_persisted_labels)
-        return cc.select(
-            F.col("node").alias("id_a"),
-            F.col("component").alias("cluster_id"),
-        )
-
-    def _cleanup() -> None:
-        for df in temp:
-            df.unpersist()
-
-    return _shared_candidates(
-        spark,
-        sf_dir,
-        "semantic_cc",
-        _build,
-        cleanup=_cleanup,
-        table="embeddings",
-    )
+    return _cc_labels(edges, "id_a")
 
 
 @query(

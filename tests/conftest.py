@@ -83,20 +83,22 @@ def assert_all_match_oracle(spark, con, named_specs, build):
     serial loop it replaces.
 
     ``named_specs`` is an iterable of (name, oracle_sql); ``build`` maps
-    a name to the Spark DataFrame."""
+    a name to the Spark DataFrame. A builder or action that raises is
+    re-raised naming its query."""
     from concurrent.futures import ThreadPoolExecutor
 
     named_specs = list(named_specs)
     wants = {n: con.execute(sql).arrow() for n, sql in named_specs}
     with ThreadPoolExecutor(max_workers=4) as pool:
-        gots = dict(
-            zip(
-                (n for n, _ in named_specs),
-                pool.map(lambda n: build(n).toArrow(), (n for n, _ in named_specs)),
-            )
-        )
-    for name, _sql in named_specs:
-        _assert_tables_match(gots[name], wants[name], name)
+        futures = {
+            n: pool.submit(lambda n=n: build(n).toArrow()) for n, _ in named_specs
+        }
+        for name, _sql in named_specs:
+            try:
+                got = futures[name].result()
+            except Exception as exc:
+                raise AssertionError(f"{name}: {type(exc).__name__}: {exc}") from exc
+            _assert_tables_match(got, wants[name], name)
 
 
 def assert_matches_oracle(spark_df, con: duckdb.DuckDBPyConnection, sql: str, name=""):

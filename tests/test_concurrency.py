@@ -16,6 +16,7 @@ import os
 import threading
 
 import pyarrow as pa
+import pytest
 
 from iceberg_explorer_spark.lifecycle.executor import QueryExecutor
 from iceberg_explorer_spark.lifecycle.models import QueryStatus
@@ -25,6 +26,32 @@ from tests.conftest import SF_DIR_SMALL
 # ---------------------------------------------------------------------------
 # shared_lsh_candidates under a concurrent cold cache
 # ---------------------------------------------------------------------------
+
+
+@pytest.fixture
+def declare_kind():
+    """``declare_kind(kind, *bodies)`` declares a test-local
+    ``@shared_artifact`` kind and returns its accessor; each cache miss
+    runs the next body. The kinds leave the registry after the test."""
+    from iceberg_explorer_spark.operators import dedup
+
+    declared = []
+
+    def declare(kind, *bodies):
+        queue = list(bodies)
+
+        @dedup.shared_artifact(kind)
+        def accessor(spark, sf_dir):
+            return queue.pop(0)()
+
+        declared.append(kind)
+        return accessor
+
+    dedup.invalidate_shared_candidates()
+    yield declare
+    for kind in declared:
+        del dedup._SHARED_ARTIFACTS[kind]
+    dedup.invalidate_shared_candidates()
 
 
 def test_shared_candidates_materialize_once_under_race(spark, monkeypatch):
@@ -251,38 +278,48 @@ def test_multi_table_kind_fingerprints_both_inputs(spark, tmp_path):
     dedup.invalidate_shared_candidates(d)
 
 
-def test_build_cleanup_runs_after_materialization_and_on_failure(spark):
-    """The cache's ``cleanup`` hook (used by the probe builder to release
-    its interim persisted shingle scan) must run exactly once after the
-    miss-path checkpoint materializes — and ALSO when the build raises,
-    so a failed build never leaks a pinned frame."""
+def test_build_cleanup_runs_after_materialization_and_on_failure(
+    spark, declare_kind, monkeypatch
+):
+    """A cluster-label build (``_cc_labels``) must release the CC loop's
+    interim label persist exactly once, after the miss-path checkpoint
+    materializes — and ALSO when the checkpoint raises, so a failed
+    build never leaks a pinned frame. A cache hit runs neither."""
     from iceberg_explorer_spark.operators import dedup
 
-    dedup.invalidate_shared_candidates()
-    ran = []
-    df = spark.range(3).toDF("doc_a")
-    out = dedup._shared_candidates(
-        spark, SF_DIR_SMALL, "lsh", lambda: df, cleanup=lambda: ran.append(1)
-    )
-    assert out.count() == 3 and ran == [1]
-    # cache hit: build and cleanup both skipped
-    again = dedup._shared_candidates(
-        spark, SF_DIR_SMALL, "lsh", lambda: df, cleanup=lambda: ran.append(2)
-    )
-    assert again is out and ran == [1]
+    ccs = []
+    real_cc = dedup.connected_components
+
+    def capturing(edges):
+        cc = real_cc(edges)
+        assert cc.cc_persisted_labels.storageLevel.useMemory
+        ccs.append(cc)
+        return cc
+
+    monkeypatch.setattr(dedup, "connected_components", capturing)
+    edges = spark.createDataFrame([(1, 2), (2, 3), (7, 8)], "doc_a long, doc_b long")
+    def body():
+        return dedup._cc_labels(edges, "doc_id")
+
+    labels = declare_kind("test_cc", body, body)
+    out = labels(spark, SF_DIR_SMALL)
+    assert sorted(map(tuple, out.collect())) == [
+        (1, 1), (2, 1), (3, 1), (7, 7), (8, 7)
+    ]
+    assert len(ccs) == 1
+    assert not ccs[0].cc_persisted_labels.storageLevel.useMemory
+    # cache hit: no build, no second release
+    assert labels(spark, SF_DIR_SMALL) is out and len(ccs) == 1
     dedup.invalidate_shared_candidates()
 
-    def boom():
-        raise RuntimeError("build failed")
+    def boom(self, *args, **kwargs):
+        raise RuntimeError("checkpoint failed")
 
-    try:
-        dedup._shared_candidates(
-            spark, SF_DIR_SMALL, "lsh", boom, cleanup=lambda: ran.append(3)
-        )
-    except RuntimeError:
-        pass
-    assert ran == [1, 3]
-    dedup.invalidate_shared_candidates()
+    monkeypatch.setattr(type(edges), "localCheckpoint", boom)
+    with pytest.raises(RuntimeError, match="checkpoint failed"):
+        labels(spark, SF_DIR_SMALL)
+    assert len(ccs) == 2
+    assert not ccs[1].cc_persisted_labels.storageLevel.useMemory
 
 
 def test_corpus_is_tokenized_at_most_once_per_session(spark):
@@ -345,18 +382,14 @@ def test_candidate_families_over_different_tables_coexist(spark):
     dedup.invalidate_shared_candidates()
 
 
-def test_warm_hit_never_blocks_behind_other_key_cold_build(spark):
+def test_warm_hit_never_blocks_behind_other_key_cold_build(
+    spark, declare_kind
+):
     """The registry lock is held only for dict reads/inserts — a warm
     cache hit must return promptly while ANOTHER key's multi-second cold
     build is in flight (the semantic family's ~4 s builds made the old
     build-spanning global lock a real stall for unrelated queries)."""
     import time
-
-    from iceberg_explorer_spark.operators import dedup
-
-    dedup.invalidate_shared_candidates()
-    warm = spark.range(1).toDF("doc_a")
-    dedup._shared_candidates(spark, SF_DIR_SMALL, "lsh", lambda: warm)
 
     gate = threading.Event()
     started = threading.Event()
@@ -366,35 +399,33 @@ def test_warm_hit_never_blocks_behind_other_key_cold_build(spark):
         assert gate.wait(timeout=60)
         return spark.range(2).toDF("doc_a")
 
+    warm = declare_kind("test_warm", lambda: spark.range(1).toDF("doc_a"))
+    cold = declare_kind("test_cold", slow_build)
+    warmed = warm(spark, SF_DIR_SMALL)
     t = threading.Thread(
-        target=lambda: dedup._shared_candidates(
-            spark, SF_DIR_SMALL, "probe", slow_build
-        ),
-        name="cold-build",
+        target=lambda: cold(spark, SF_DIR_SMALL), name="cold-build"
     )
     t.start()
     assert started.wait(timeout=10)
     t0 = time.monotonic()
-    hit = dedup._shared_candidates(spark, SF_DIR_SMALL, "lsh", lambda: warm)
+    hit = warm(spark, SF_DIR_SMALL)
     dt = time.monotonic() - t0
     gate.set()
     t.join(timeout=60)
-    assert hit.count() == 1
+    assert hit is warmed and hit.count() == 1
     assert dt < 2.0, f"warm hit stalled {dt:.1f}s behind a cold build"
-    dedup.invalidate_shared_candidates()
 
 
-def test_build_in_flight_during_invalidation_does_not_reenter_cache(spark):
+def test_build_in_flight_during_invalidation_does_not_reenter_cache(
+    spark, declare_kind
+):
     """Builds run outside the registry lock, so a build that straddles an
     invalidate_shared_candidates call must NOT insert its result
     afterwards — that would resurrect an entry the caller explicitly
     cleared. The caller still receives the built frame (correct for the
     corpus state at build time); only the cache entry is declined."""
-    import time
-
     from iceberg_explorer_spark.operators import dedup
 
-    dedup.invalidate_shared_candidates()
     started = threading.Event()
     gate = threading.Event()
     out: list = []
@@ -404,10 +435,11 @@ def test_build_in_flight_during_invalidation_does_not_reenter_cache(spark):
         assert gate.wait(timeout=60)
         return spark.range(3).toDF("doc_a")
 
+    straddling = declare_kind(
+        "test_straddle", slow_build, lambda: spark.range(5).toDF("doc_a")
+    )
     t = threading.Thread(
-        target=lambda: out.append(
-            dedup._shared_candidates(spark, SF_DIR_SMALL, "lsh", slow_build)
-        ),
+        target=lambda: out.append(straddling(spark, SF_DIR_SMALL)),
         name="straddling-build",
     )
     t.start()
@@ -421,11 +453,8 @@ def test_build_in_flight_during_invalidation_does_not_reenter_cache(spark):
             k for k in dedup._SHARED_CANDIDATES if k[1] == SF_DIR_SMALL
         ], "invalidated-mid-build entry resurrected in the cache"
     # and the NEXT call is a fresh materialization
-    fresh = dedup._shared_candidates(
-        spark, SF_DIR_SMALL, "lsh", lambda: spark.range(5).toDF("doc_a")
-    )
+    fresh = straddling(spark, SF_DIR_SMALL)
     assert fresh.count() == 5 and fresh is not out[0]
-    dedup.invalidate_shared_candidates()
 
 
 def test_inflight_frame_survives_cache_invalidation(spark):

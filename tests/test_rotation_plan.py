@@ -79,11 +79,10 @@ class TestLeaveOut:
 class TestRealArtifacts:
     """The corrected r17 derivation against the repo's real artifacts.
 
-    The r17-era pins run on the history AS OF r16 (rows ≤ r16) — the
-    state the corrected r17 plan was derived from; the r17 driver rows
-    landing in the repo must not retroactively change what that
-    derivation was. The executed r18 window is pinned separately below
-    against the FULL history."""
+    Every pin runs on the history AS OF the round its plan was derived
+    from: the r17-era pins on rows ≤ r16, the executed r18 window on
+    rows ≤ r17. Driver rows of later rounds landing in the repo must not
+    retroactively change what a derivation was."""
 
     @pytest.fixture(scope="class")
     def full_history(self):
@@ -92,13 +91,21 @@ class TestRealArtifacts:
         assert bearing is not None
         return {n: r for n, r in h.items() if n in bearing}
 
+    @staticmethod
+    def _as_of(full_history, last_round):
+        return {
+            n: {rnd: ok for rnd, ok in rows.items() if rnd <= last_round}
+            for n, rows in full_history.items()
+            if any(rnd <= last_round for rnd in rows)
+        }
+
     @pytest.fixture(scope="class")
     def history(self, full_history):
-        return {
-            n: {rnd: ok for rnd, ok in rows.items() if rnd <= 16}
-            for n, rows in full_history.items()
-            if any(rnd <= 16 for rnd in rows)
-        }
+        return self._as_of(full_history, 16)
+
+    @pytest.fixture(scope="class")
+    def history_r17(self, full_history):
+        return self._as_of(full_history, 17)
 
     def test_r14_cohort_is_49_wide(self, history):
         by_latest = rotation_plan.cohorts(history)
@@ -147,18 +154,18 @@ class TestRealArtifacts:
             "text_language_id",
         ]
 
-    def test_check_window_matches_derivation(self, full_history):
+    def test_check_window_matches_derivation(self, history_r17):
         """The pinned r18 window IS flagship+newcomers+stalest+fill,
-        derived from the FULL history (rows through r17): the four r17
-        newcomers (zero driver rows), the whole 12-wide r14-latest
+        derived from the history as of r17 (rows through r17): the four
+        r17 newcomers (zero driver rows), the whole 12-wide r14-latest
         stalest cohort, and the r15-latest fill minus its 16-name
         leave-out."""
         from iceberg_explorer_spark.operators import _CHECK_WINDOW
 
-        by_latest = rotation_plan.cohorts(full_history)
+        by_latest = rotation_plan.cohorts(history_r17)
         assert len(by_latest[14]) == 12
         assert len(by_latest[15]) == 49
-        out = set(rotation_plan.leave_out(full_history, by_latest[15], 16))
+        out = set(rotation_plan.leave_out(history_r17, by_latest[15], 16))
         newcomers = {
             "similarity_mrl_prefix_topk",
             "similarity_mrl_r_sweep",
@@ -166,7 +173,7 @@ class TestRealArtifacts:
             "events_session_gap_sweep",
         }
         for q in newcomers:  # genuinely zero driver rows
-            assert q not in full_history
+            assert q not in history_r17
         expected = (
             {"pipeline_clean_corpus"}
             | newcomers
