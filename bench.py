@@ -181,7 +181,8 @@ HEADLINE = [
 #: summed into the headline ``value`` (v1 OR v2): adding new operators to
 #: a trend line mid-trend would read as a regression that is really a
 #: measurement-set change. New operators enter here first (per the r7
-#: deferral note, operators/__init__.py round-8 log); promoting a cohort
+#: deferral note, round-8 entry of the rotation ledger that
+#: operators/__init__.py points at in git); promoting a cohort
 #: into HEADLINE is a deliberate, logged trend reset. Emptied at the r10
 #: graduation and again at the r14 flip (the twelve post-r9 operators
 #: that accumulated through r12 rode the r13 overlap as GRADUATING_R12
@@ -252,7 +253,7 @@ GRADUATING_R15: list[str] = []
 #:     v2 sum dropped, and EXTENDED (refilled with post-r12 operators
 #:     only) carried on accumulating toward the next declared overlap.
 #:   * round 16 (THIS round — the third overlap, executed as DECLARED at
-#:     the r15 freeze, operators/__init__.py ledger): EXTENDED as frozen
+#:     the r15 freeze, rotation ledger in git): EXTENDED as frozen
 #:     at the end of r15 (NINE operators: three r13 + three r14 + three
 #:     r15) rides as GRADUATING_R15; ``value``/``n_queries`` stay the v3
 #:     trend line (headline_version still 3) and additive ``value_v4`` /

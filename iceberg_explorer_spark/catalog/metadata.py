@@ -28,6 +28,7 @@ from typing import Optional
 
 from pyspark.sql import SparkSession
 
+from iceberg_explorer_spark.observability import observe_call
 from iceberg_explorer_spark.session import iceberg_available
 
 NS_SEPARATOR = "\x1f"  # reference api/routes/utils.py:9
@@ -201,8 +202,6 @@ class CatalogService:
 
     # -- A10 (reference catalog/service.py:108-129)
     def list_namespaces(self, parent: Optional[list[str]] = None) -> list[list[str]]:
-        from iceberg_explorer_spark.observability import observe_call
-
         with observe_call("catalog.list_namespaces"):
             target = self._qualify(parent) if parent else (self.catalog or "")
             sql = f"SHOW NAMESPACES IN {target}" if target else "SHOW NAMESPACES"
@@ -218,8 +217,6 @@ class CatalogService:
 
     # -- A11 (reference catalog/service.py:131-146)
     def list_tables(self, namespace: list[str]) -> list[str]:
-        from iceberg_explorer_spark.observability import observe_call
-
         with observe_call("catalog.list_tables"):
             sql = f"SHOW TABLES IN {self._qualify(namespace)}" if namespace else "SHOW TABLES"
             rows = self.spark.sql(sql).collect()
@@ -260,8 +257,6 @@ class CatalogService:
 
     # -- A12 (reference catalog/service.py:148-202)
     def table_details(self, namespace: list[str], table: str) -> TableDetails:
-        from iceberg_explorer_spark.observability import observe_call
-
         with observe_call("catalog.table_details", table=table):
             return self._table_details(namespace, table)
 
@@ -399,24 +394,3 @@ class CatalogService:
                         )
         return [merged[n] for n in order]
 
-    # -- A20 health (reference query/engine.py:166-211)
-    def health(self) -> dict:
-        checks = {}
-        try:
-            self.spark.sql("SELECT 1").collect()
-            checks["engine"] = "healthy"
-        except Exception as exc:
-            checks["engine"] = f"unhealthy: {exc}"
-        try:
-            self.spark.catalog.listDatabases()
-            checks["catalog"] = "healthy"
-        except Exception as exc:
-            checks["catalog"] = f"unhealthy: {exc}"
-        status = (
-            "healthy"
-            if all(v == "healthy" for v in checks.values())
-            else "degraded"
-            if checks.get("engine") == "healthy"
-            else "unhealthy"
-        )
-        return {"status": status, "checks": checks}

@@ -293,13 +293,3 @@ class QueryExecutor:
                 if r.status in (QueryStatus.PENDING, QueryStatus.RUNNING)
             ]
 
-
-_EXECUTOR: Optional[QueryExecutor] = None
-
-
-def get_executor(spark: SparkSession) -> QueryExecutor:
-    """Process singleton (reference executor.py:350-368)."""
-    global _EXECUTOR
-    if _EXECUTOR is None or _EXECUTOR.spark is not spark:
-        _EXECUTOR = QueryExecutor(spark)
-    return _EXECUTOR

@@ -7,11 +7,11 @@ src/iceberg_explorer/observability.py:165-233 — histogram
 query/executor.py:181-226; trace-context structured logs at :104-150).
 
 Design differences, deliberate:
-- OpenTelemetry is OPTIONAL: when the ``opentelemetry`` API is importable the
-  same instruments/spans are emitted through it; otherwise everything still
-  records into an in-process :class:`Recorder` so the engine is observable
-  (and testable) with zero extra dependencies. The reference hard-imports the
-  OTel SDK + FastAPI instrumentor; an engine library can't.
+- One backend: everything records into an in-process :class:`Recorder`, so
+  the engine is observable (and testable) with zero extra dependencies. The
+  reference hard-imports the OTel SDK + FastAPI instrumentor; an engine
+  library can't. The recorder keeps the newest ``MAX_RECORDED`` spans and
+  duration samples, so a long-lived session holds bounded memory.
 - Logs go through stdlib ``logging`` with the span id attached — same
   queryable fields as the reference's structlog JSON without a structlog
   dependency.
@@ -28,12 +28,16 @@ import logging
 import threading
 import time
 import uuid
+from collections import deque
 from contextlib import contextmanager
 from contextvars import ContextVar
 from dataclasses import dataclass, field
-from typing import Iterator, Optional
+from typing import ContextManager, Iterator, Optional
 
 logger = logging.getLogger("iceberg_explorer_spark")
+
+#: Spans and duration samples a recorder keeps; the oldest drop first.
+MAX_RECORDED = 4096
 
 #: Request-scoped correlation id (reference observability.py:104-150 injects
 #: trace/span ids into every structured log line). ContextVar so one id
@@ -64,45 +68,6 @@ def current_request_id() -> Optional[str]:
     return _REQUEST_ID.get()
 
 
-@contextmanager
-def observe_call(name: str, **attributes) -> Iterator["SpanRecord"]:
-    """Correlated span around a non-query service call (catalog list/detail,
-    export, health probe). Records into the same Recorder as query spans and
-    logs one line tagged with the bound request id."""
-    span = SpanRecord(
-        name=name,
-        query_id="",
-        request_id=current_request_id(),
-        attributes=dict(attributes),
-    )
-    start = time.perf_counter()
-    try:
-        yield span
-        span.status = "ok"
-    except Exception as exc:
-        span.status = "error"
-        span.error = str(exc)
-        raise
-    finally:
-        span.duration_s = time.perf_counter() - start
-        get_observer().recorder.add_span(span)
-        logger.info(
-            "call %s %s request=%s duration=%.3fs",
-            name,
-            span.status,
-            span.request_id or "-",
-            span.duration_s,
-        )
-
-try:  # pragma: no cover - exercised only when OTel is installed
-    from opentelemetry import metrics as _otel_metrics
-    from opentelemetry import trace as _otel_trace
-
-    _OTEL = True
-except ImportError:
-    _OTEL = False
-
-
 @dataclass
 class SpanRecord:
     name: str
@@ -115,15 +80,55 @@ class SpanRecord:
     attributes: dict = field(default_factory=dict)
 
 
+@contextmanager
+def _recorded_span(
+    recorder: Recorder, name: str, query_id: str, attributes: dict
+) -> Iterator[SpanRecord]:
+    """Time the block as one span: status and error from its outcome, then
+    record it and log one line tagged with the bound request id."""
+    span = SpanRecord(
+        name=name,
+        query_id=query_id,
+        request_id=current_request_id(),
+        attributes=attributes,
+    )
+    start = time.perf_counter()
+    try:
+        yield span
+        span.status = "ok"
+    except Exception as exc:
+        span.status = "error"
+        span.error = str(exc)
+        raise
+    finally:
+        span.duration_s = time.perf_counter() - start
+        recorder.add_span(span)
+        logger.info(
+            "%s %s %s request=%s duration=%.3fs rows=%d",
+            name,
+            query_id or "-",
+            span.status,
+            span.request_id or "-",
+            span.duration_s,
+            span.rows_returned,
+        )
+
+
+def observe_call(name: str, **attributes) -> ContextManager[SpanRecord]:
+    """Correlated span around a non-query service call (catalog list/detail,
+    export, health probe), recorded beside the query spans."""
+    return _recorded_span(get_observer().recorder, name, "", attributes)
+
+
 class Recorder:
-    """In-process metric/span store — the OTel-free backend and test hook."""
+    """In-process metric/span store — the one backend and the test hook."""
 
     def __init__(self) -> None:
         self._lock = threading.Lock()
-        self.query_duration_seconds: list[float] = []
+        self.query_duration_seconds: deque[float] = deque(maxlen=MAX_RECORDED)
         self.query_rows_returned: int = 0
         self.active_queries: int = 0
-        self.spans: list[SpanRecord] = []
+        self.spans: deque[SpanRecord] = deque(maxlen=MAX_RECORDED)
         # retention-policy gauges/counter (lifecycle/executor.py
         # _enforce_retention): current terminal results held + their Arrow
         # bytes, and cumulative evictions since process start
@@ -169,34 +174,13 @@ class QueryObserver:
 
     def __init__(self, recorder: Optional[Recorder] = None) -> None:
         self.recorder = recorder or Recorder()
-        if _OTEL:  # pragma: no cover
-            meter = _otel_metrics.get_meter("iceberg_explorer_spark")
-            self._tracer = _otel_trace.get_tracer("iceberg_explorer_spark")
-            self._hist = meter.create_histogram(
-                "query_duration_seconds",
-                description="Duration of SQL query execution in seconds",
-                unit="s",
-            )
-            self._rows = meter.create_counter(
-                "query_rows_returned",
-                description="Total number of rows returned from queries",
-                unit="rows",
-            )
-            self._active = meter.create_up_down_counter(
-                "active_queries",
-                description="Number of currently executing queries",
-                unit="queries",
-            )
-        else:
-            self._tracer = self._hist = self._rows = self._active = None
 
     def record_retention(
         self, count: int, nbytes: int, evicted: int = 0
     ) -> None:
         """Retention-policy gauges (terminal results held + Arrow bytes)
-        and the cumulative eviction counter — recorder-backed like the
-        reference's three instruments (the OTel mirror of a gauge would
-        be an observable callback; the recorder is the contract here)."""
+        and the cumulative eviction counter, recorder-backed like the
+        reference's three instruments."""
         self.recorder.set_retention(count, nbytes, evicted)
 
     @contextmanager
@@ -206,55 +190,16 @@ class QueryObserver:
         """Span + metrics around one query execution (reference span
         ``duckdb.query`` → here ``spark.query``). The caller sets
         ``span.rows_returned`` before the block exits."""
-        span = SpanRecord(
-            name="spark.query",
-            query_id=str(query_id),
-            request_id=current_request_id(),
-            attributes={"sql.length": len(sql)},
-        )
-        start = time.perf_counter()
         self.recorder.adjust_active(1)
-        if self._active is not None:  # pragma: no cover
-            self._active.add(1)
-        otel_cm = (
-            self._tracer.start_as_current_span("spark.query")
-            if self._tracer is not None
-            else None
-        )
-        otel_span = otel_cm.__enter__() if otel_cm is not None else None
         try:
-            yield span
-            span.status = "ok"
-        except Exception as exc:
-            span.status = "error"
-            span.error = str(exc)
-            raise
+            with _recorded_span(
+                self.recorder, "spark.query", str(query_id), {"sql.length": len(sql)}
+            ) as span:
+                yield span
         finally:
-            span.duration_s = time.perf_counter() - start
             self.recorder.adjust_active(-1)
             self.recorder.record_duration(span.duration_s)
-            if span.rows_returned:
-                self.recorder.add_rows(span.rows_returned)
-            self.recorder.add_span(span)
-            if otel_span is not None:  # pragma: no cover
-                otel_span.set_attribute("query.id", span.query_id)
-                otel_span.set_attribute("query.status", span.status)
-                otel_span.set_attribute("query.rows", span.rows_returned)
-                if self._hist is not None:
-                    self._hist.record(span.duration_s)
-                if self._rows is not None and span.rows_returned:
-                    self._rows.add(span.rows_returned)
-                if self._active is not None:
-                    self._active.add(-1)
-                otel_cm.__exit__(None, None, None)
-            logger.info(
-                "query %s %s request=%s duration=%.3fs rows=%d",
-                span.query_id,
-                span.status,
-                span.request_id or "-",
-                span.duration_s,
-                span.rows_returned,
-            )
+            self.recorder.add_rows(span.rows_returned)
 
 
 _OBSERVER: Optional[QueryObserver] = None

@@ -1,1002 +1,17 @@
 """Operator library. Importing this package populates the query registry.
 
-Registry order is significant: the round driver's correctness gate checks the
-FIRST 50 registry entries (observed in CORRECTNESS_r01 — 69 registered, first
-50 checked). ``_CHECK_WINDOW`` below pins which queries occupy that window,
-and the window ROTATES each round so that every oracle-bearing query
-accumulates at least one driver-green correctness row:
-
-- round 1 (pre-window): the first 50 registration-order queries — 37 green.
-- round 2: flagship + one representative per SURVEY §2B category + the
-  extension operators — all 50 green (CORRECTNESS_r02).
-- round 3 (current): the 8 queries that had never had a driver row
-  (text_quality_score, text_fingerprint, events_sliding_window,
-  events_json_extract, events_rate_per_user_type,
-  events_distinct_users_salted, multimodal_frame_sample,
-  pipeline_stratified_sample) are rotated IN, displacing 8 queries that are
-  green in BOTH r1 and r2 (dedup_simhash, dedup_keep_best,
-  similarity_lsh_ann, window_ship_gaps, percentile_order_price,
-  explode_word_frequencies, scalar_date_functions, topk_orders).
-
-After round 3 every oracle-bearing query in the registry has driver-green
-evidence from at least one round; out-of-window queries remain covered every
-round by tests/test_differential.py, and the 3 sketch ops
-(percentile_approx, HLL ×2) are no-oracle by design (local tests bound them
-against exact answers).
-
-- round 4: CORRECTNESS_r03 DID run (contrary to this note's earlier claim):
-  44/50 green, 6 ERR — asof_join_purchase_click, events_tumbling_window,
-  events_session_window, events_funnel, events_sliding_window and
-  events_rate_per_user_type all hit the TIMESTAMP_NTZ loader regression
-  (fixed in sources/registry.py for r4). Those 6 KEEP their slots so the
-  repair lands driver-green — events_sliding_window and
-  events_rate_per_user_type in particular still have no green row from any
-  round. The operators first checked in r3 (sequence_pack, train_val_split,
-  global_shuffle, image_resize, unigram_logfreq, temperature_mix,
-  value_outliers_mad, and the 8 r3 rotations) all came back green and stay
-  in-window; displaced twice-green queries remain covered by
-  tests/test_differential.py every round.
-- round 5 (current): CORRECTNESS_r04 came back 50/50 green, which freed 48
-  of the 50 slots (everything in the r4 window except events_sliding_window
-  and events_rate_per_user_type is now green in 2+ driver rounds) — so ALL
-  27 round-4 operators rotate in at once, not across two rounds as
-  originally planned. The window is: flagship + the 27 round-4 operators
-  (first driver check) + the 2 once-green r4 events queries kept in-slot +
-  the 12 queries whose only green row is r1 (rotated back for a second row)
-  + 8 multi-green family representatives (agg/join/window/dedup/similarity/
-  text/multimodal/events). If r5 comes back green, every one of the 104
-  oracle-bearing queries has at least one driver-green correctness row;
-  displaced multi-green queries remain covered every round by
-  tests/test_differential.py. The 3 sketch ops (percentile_approx, HLL x2)
-  stay out of the window by design — the driver's rows-only check is weaker
-  than their local exact-answer bounds.
-- round 6 (current): CORRECTNESS_r05 came back 50/50 green, so the
-  planned rotation executes exactly as written: the EIGHTEEN round-5
-  operators (dedup_pagerank_step, dedup_source_overlap_matrix,
-  text_bm25_topk, similarity_int8_quantize, dedup_jaccard_threshold_sweep,
-  pipeline_pack_efficiency, dedup_source_minhash_similarity,
-  text_vocab_growth, similarity_centroid_drift, events_funnel_latency,
-  parts_abc_pareto, text_ngram_entropy, events_path_topk,
-  multimodal_ahash_dedup, dedup_cluster_stats, events_categorical_drift,
-  events_incremental_rollup, orders_seasonality_index) get their FIRST
-  driver check. The remaining 31 slots: the flagship (never displaced),
-  the 27 queries whose ONLY green row is r5 (rotated back for a second
-  row), and 4 multi-green family representatives (pricing_summary,
-  join_revenue_by_nation, dedup_minhash_lsh, events_tumbling_window) —
-  1 + 18 + 27 + 4 = 50 exactly. If r6 comes back green, every one of the
-  122 oracle-bearing queries has a driver-green correctness row and every
-  round-5 first-timer has two. Displaced multi-green queries remain
-  covered every round by tests/test_differential.py; the 3 sketch ops
-  stay out by design.
-- round 7 (current): CORRECTNESS_r06 came back 50/50 green (third
-  consecutive perfect round), so the planned rotation executes exactly
-  as written, with the priority flipped from never-checked to
-  RECENTLY-CHANGED: the 14 operators round 6's hardening materially
-  changed whose driver rows predate the change rotate IN
-  (events_json_extract, events_variant_shred, multimodal_frame_sample,
-  multimodal_decode_features, pipeline_token_shards,
-  pipeline_stratified_sample, text_token_count,
-  similarity_bruteforce_topk, similarity_lsh_ann, similarity_ivf_topk,
-  similarity_knn_join, dedup_embedding_cosine, dedup_ngram_jaccard,
-  dedup_clusters) — round 7's own fixes (TRY_CAST overflow contract in
-  the JSON-k oracles, the stratified-sample integral-suffix gate, the
-  DIM-derived similarity length gate) also land inside this group, so
-  their rows are post-change twice over. The remaining slots: flagship
-  (never displaced) + the 18 round-6 first-timers (second row) + the
-  4 multi-green family representatives + the 13 queries with the
-  STALEST driver evidence (last green r2: dedup_simhash,
-  left_join_order_lines, window_ship_gaps, topk_orders,
-  scalar_date_functions, cte_above_avg_orders, percentile_order_price,
-  explode_word_frequencies, conditional_agg_order_status,
-  null_semantics, range_join_ship_window, dedup_exact,
-  dedup_keep_best) — 1 + 14 + 18 + 4 + 13 = 50 exactly.
-  percentile_approx_order_price (r1, stalest of all) stays out by
-  design: it is a no-oracle sketch op, and the window pin requires
-  every slot to be oracle-bearing (its exact-answer bound runs in the
-  local suite every round).
-- round 8 (current): CORRECTNESS_r07 came back 50/50 green (fourth
-  consecutive perfect round), so the planned rotation executes as
-  written. Counting from the actual artifacts, the r4-stale cohort is
-  29 queries (not the estimated ~37): the window is flagship (never
-  displaced) + the THREE round-7 operators getting their FIRST driver
-  rows (dedup_containment, dedup_containment_probe,
-  events_rate_spike_zscore — the last also modified in r8 by the
-  DIV-bucketing fix, so its first row is post-change) + ALL 29
-  r4-stale queries (asof_join_purchase_click, cube_order_status,
-  events_distinct_users_salted, events_funnel, events_session_window,
-  events_value_outliers_mad, filter_projection,
-  multimodal_image_resize, multimodal_metadata, pipeline_domain_mix,
-  pipeline_global_shuffle, pipeline_sequence_pack,
-  pipeline_temperature_mix, pipeline_train_val_split,
-  pivot_status_by_flag, recursive_calendar_spine, rollup_quantity,
-  scalar_subquery_nation_stats, semi_join_active_customers,
-  text_decontaminate, text_fingerprint, text_language_id,
-  text_pii_redact, text_quality_score, text_repetition_filter,
-  text_unigram_logfreq, window_ntile_navigation,
-  window_range_moving_revenue, window_running_revenue) + the 4
-  multi-green family representatives + 13 of the 16 r5-stale queries
-  (second rows; the three left for r9 are the ones with the MOST /
-  freshest prior evidence: similarity_bucket_gemm green r1-r5,
-  window_top_orders_per_customer green r2-r5, events_sliding_window
-  green r4+r5) — 1 + 3 + 29 + 4 + 13 = 50 exactly. If r8 comes back
-  green, every oracle-bearing query in the registry has driver
-  evidence no older than r5. Bench: the three r7 operators plus r8's
-  dedup_overlap_spectrum run as the bench EXTENDED set — timed
-  identically, reported in the per-query detail map and the additive
-  extended_sec/n_extended final-line keys — while the comparable
-  65-query HEADLINE sum stays the trend line per the r7 deferral
-  note; the one-time probe-index build joins candidate_build as its
-  own probe_build line item.
-- round 9 (current): CORRECTNESS_r08 came back 50/50 green (fifth
-  consecutive perfect round), so the planned rotation executes exactly
-  as written: the SIX round-8 operators (dedup_overlap_spectrum,
-  similarity_ivf_balance, dedup_semantic_clusters,
-  pipeline_filter_funnel, similarity_semantic_decontaminate,
-  multimodal_clean_manifest) get their FIRST driver rows; the three
-  r5-stale queries deferred from r8 rotate back
-  (similarity_bucket_gemm, window_top_orders_per_customer,
-  events_sliding_window); the FULL r6 cohort — verified against the
-  artifacts to be exactly 27 queries whose latest driver row is r6 —
-  rotates in (dedup_candidate_triangles, dedup_incremental_ingest,
-  dedup_semantic_keep_best, dedup_span_boilerplate,
-  events_dau_wau_stickiness, events_markov_transitions,
-  events_resample_gapfill, events_user_retention,
-  group_by_all_status_priority, lateral_top_orders,
-  market_basket_part_pairs, multimodal_audio_energy,
-  multimodal_patch_tokens, orders_yoy_growth, pipeline_chunk_documents,
-  pipeline_chunk_pack, pipeline_dataset_card, pipeline_epoch_plan,
-  rfm_customer_segments, similarity_ann_recall_report,
-  similarity_kmeans_step, similarity_pq_adc_topk, text_bpe_pair_freq,
-  text_length_histogram, text_tfidf_source_terms,
-  unpivot_customer_metrics, window_distribution_functions). The
-  remaining 13 slots, RECENTLY-CHANGED first per the r7 precedent:
-  round 9 modifies the shared-candidate fingerprint fast path, audits
-  the probe build, and moves every shingle consumer onto the shared
-  tokenize-once checkpoint, so EVERY operator whose build path changed
-  gets a post-change row: dedup_containment_probe (r8-green but its
-  build is being touched), dedup_minhash_lsh (cache consumer +
-  standing family rep), dedup_ngram_jaccard and dedup_clusters
-  (r7-cohort cache/CC consumers; dedup_clusters also carries the
-  deep-diameter CC stress), dedup_containment,
-  dedup_jaccard_threshold_sweep, and text_decontaminate (their builds
-  switched from per-call hashed_shingles persists to
-  shared_hashed_shingles this round — same one-line change that
-  justified dedup_containment_probe). Then the other three standing
-  family reps (pricing_summary, join_revenue_by_nation,
-  events_tumbling_window) and three r7-cohort second rows spanning
-  remaining families (multimodal_frame_sample, events_json_extract,
-  pipeline_token_shards) — dedup_exact, similarity_bruteforce_topk,
-  and text_token_count were displaced by the post-change trio (their
-  families stay covered in-window; all three keep multi-green history
-  + differential coverage). 1 + 6 + 3 + 27 + 7 + 3 + 3 = 50 exactly. If r9
-  comes back green, no oracle-bearing query's latest driver evidence
-  predates r7 except the 18 r7-first-timer/representative queries
-  whose latest row is r7 (36 of the 45 r7-cohort queries remain; they
-  are the r10 rotation's priority). Displaced multi-green queries stay
-  covered every round by tests/test_differential.py; the 3 sketch ops
-  stay out by design.
-- round 10 (current): CORRECTNESS_r09 came back 50/50 green (sixth
-  consecutive perfect round), so the planned rotation executes as
-  written. Counting from the artifacts, the r7 cohort — queries whose
-  LATEST driver row is r7 — is exactly 39 (the r9 plan estimated 36):
-  the window is flagship (never displaced) + the THREE operators
-  registered out-of-window in r9 getting their FIRST driver rows
-  (multimodal_paired_dedup — also modified by r10's
-  FINGERPRINT_MAX_CHARS caption-gram cap, so its first row is
-  post-change; dedup_lsh_band_tuning — r10 adds the deterministic
-  doc-sample parameter with sampling OFF by default, so its first row
-  pins the unsampled oracle contract; similarity_semantic_tau_sweep)
-  + ALL 39 r7-cohort queries (conditional_agg_order_status,
-  cte_above_avg_orders, dedup_cluster_stats, dedup_embedding_cosine,
-  dedup_exact, dedup_keep_best, dedup_pagerank_step, dedup_simhash,
-  dedup_source_minhash_similarity, dedup_source_overlap_matrix,
-  events_categorical_drift, events_funnel_latency,
-  events_incremental_rollup, events_path_topk, events_variant_shred,
-  explode_word_frequencies, left_join_order_lines,
-  multimodal_ahash_dedup, multimodal_decode_features, null_semantics,
-  orders_seasonality_index, parts_abc_pareto, percentile_order_price,
-  pipeline_pack_efficiency, pipeline_stratified_sample,
-  range_join_ship_window, scalar_date_functions,
-  similarity_bruteforce_topk, similarity_centroid_drift,
-  similarity_int8_quantize, similarity_ivf_topk, similarity_knn_join,
-  similarity_lsh_ann, text_bm25_topk, text_ngram_entropy,
-  text_token_count, text_vocab_growth, topk_orders, window_ship_gaps)
-  + 7 r8-cohort fillers chosen least-evidenced-first, recently-changed
-  prioritized: events_rate_spike_zscore (the ONLY oracle-bearing query
-  with a single driver row ever, r8), text_fingerprint (modified by
-  r10 — the same FINGERPRINT_MAX_CHARS gram cap, oracle-mirrored, so
-  its row is post-change; previously 3 rows r3/r4/r8), then five
-  three-row queries spanning the remaining families
-  (anti_join_idle_customers, asof_join_purchase_click, events_funnel,
-  multimodal_image_resize, pipeline_global_shuffle).
-  1 + 3 + 39 + 7 = 50 exactly. If r10 comes back green, every
-  oracle-bearing query has driver evidence no older than r8 and the
-  registry's newest operators all have post-change first rows. The
-  round-10 capstone pipeline_clean_corpus_v2 (composes all four dedup
-  families into one attributed keep-list), dedup_incremental_near
-  (daily-batch near-dup classification against the corpus's persisted
-  LSH artifacts — the near sibling of dedup_incremental_ingest) and
-  dedup_incremental_semantic (the third sibling: embedding-cosine
-  batch classification against the persisted SRP/GEMM edge artifact;
-  shares the component-classification tail with the near sibling) and
-  pipeline_incremental_ingest (the incremental capstone: the
-  exact→near→semantic daily-batch waterfall with first-claim
-  attribution, survivor-aware by construction) and
-  pipeline_incremental_artifact_delta (the write side: per-source
-  artifact rows the nightly job appends for kept docs) all
-  register OUT-of-window with oracle + plan pin + 3x point per the
-  standing checklist and are the r11 rotation's first priority,
-  together with the 42-query r8 cohort (second rows, 35 remaining
-  after the fillers above).
-- round 11 (current): CORRECTNESS_r10 came back 50/50 green (seventh
-  consecutive perfect round), so the planned rotation executes as
-  written: the FIVE round-10 operators registered out-of-window get
-  their FIRST driver rows (pipeline_clean_corpus_v2,
-  dedup_incremental_near, dedup_incremental_semantic,
-  pipeline_incremental_ingest, pipeline_incremental_artifact_delta —
-  the only oracle-bearing queries with zero driver evidence, per
-  VERDICT r10 #1); the FULL r8 cohort — verified against the
-  artifacts to be exactly 35 queries whose latest driver row is r8 —
-  rotates in for second-or-later rows (cohort_retention,
-  cross_join_region_status, cube_order_status,
-  distinct_customers_per_priority, events_distinct_users_salted,
-  events_rate_per_user_type, events_session_window,
-  events_value_outliers_mad, filter_projection,
-  full_outer_nation_balance, grouping_sets_mix, multimodal_metadata,
-  pipeline_domain_mix, pipeline_sequence_pack,
-  pipeline_temperature_mix, pipeline_train_val_split,
-  pivot_status_by_flag, recursive_calendar_spine, rollup_quantity,
-  scalar_regex_conditional, scalar_string_math,
-  scalar_subquery_nation_stats, semi_join_active_customers,
-  set_ops_nation_presence, similarity_all_pairs_topk,
-  string_agg_nations_per_region, subquery_in_having,
-  text_language_id, text_pii_redact, text_quality_score,
-  text_repetition_filter, text_unigram_logfreq,
-  window_ntile_navigation, window_range_moving_revenue,
-  window_running_revenue); and the remaining 9 slots go to the 9
-  queries with exactly ONE driver-green row ever — the three r10
-  first-timers (dedup_lsh_band_tuning — ALSO modified by r11's
-  verify-bill reduction, so its second row is post-change;
-  multimodal_paired_dedup, similarity_semantic_tau_sweep) and the six
-  r9 first-timers (dedup_overlap_spectrum, dedup_semantic_clusters,
-  multimodal_clean_manifest, pipeline_filter_funnel,
-  similarity_ivf_balance, similarity_semantic_decontaminate).
-  1 + 5 + 35 + 9 = 50 exactly. If r11 comes back green, every
-  oracle-bearing query has at least TWO driver-green rows, none older
-  than r9 except the r9-latest cohort itself. Bench r11 executes the
-  declared graduation flip: GRADUATING_R9 folds into HEADLINE,
-  headline_version becomes 2, the v2 overlap keys drop, EXTENDED
-  carries the five r10 operators (they are next to graduate). The
-  flagship keeps slot 1, never displaced. Displaced multi-green
-  queries remain covered every round by tests/test_differential.py;
-  the 3 sketch ops stay out by design.
-  Round 11 also adds dedup_incremental_paired (the FOURTH incremental
-  sibling: LAION-shape (ahash, caption_fp) pair keys classified
-  against the corpus's persisted pair-key history — completes the
-  family across the same four dedup modalities the v2 flagship
-  composes; exact-match rule shared with the digest sibling via
-  incremental_seen_canon_flags). It registers OUT-of-window with
-  oracle + plan pin (single decode kernel via checkpoint) + 3x point
-  + crafted classification test per the standing checklist, joins
-  bench EXTENDED, and is the r12 rotation's first priority.
-  Round 11 further adds pipeline_incremental_ingest_v2 — the v2
-  incremental capstone: the four-stage exact→near→semantic→PAIRED
-  daily-batch waterfall, symmetric with pipeline_clean_corpus_v2's
-  four backfill families. Zero private stage logic (stages 1-3 are
-  the session-cached shared_incremental_status; the paired stage is
-  incremental_seen_canon_flags over the third stage's survivors with
-  the session-cached shared_pair_keys as history — survivor-aware by
-  construction). Registered OUT-of-window with oracle + plan pin
-  (zero kernels in the visible plan) + 3x point + crafted
-  survivor-aware test; bench EXTENDED; r12 rotation priority together
-  with dedup_incremental_paired.
-  And pipeline_incremental_artifact_delta_v2 — the four-stage
-  capstone's append bill (same five counts as the v1 delta via the
-  shared _artifact_delta_tail_sql, plus n_pair_rows; a paired-dropped
-  doc appends NOTHING, the exact divergence from the v1 delta pinned
-  by its crafted test). Registered OUT-of-window with the full
-  checklist; bench EXTENDED; r12 rotation priority. The r12 window
-  plan: flagship + the THREE r11 out-of-window operators
-  (dedup_incremental_paired, pipeline_incremental_ingest_v2,
-  pipeline_incremental_artifact_delta_v2 — first driver rows) + the
-  r9-latest cohort (second-or-later rows; count from the artifacts)
-  + fillers least-evidenced-first per the standing policy.
-Round 12 rotation (executes the r11 plan above verbatim): flagship +
-  the THREE r11 out-of-window operators (dedup_incremental_paired,
-  pipeline_incremental_ingest_v2, pipeline_incremental_artifact_delta_v2
-  — their FIRST driver rows; after r11 they were the only oracle-bearing
-  queries with zero driver evidence) + the full r9-latest cohort of 43
-  (every query whose most recent driver-green row is r9, counted from
-  CORRECTNESS_r01..r11) + 3 fillers. The filler pool is the five
-  count-1 queries (the r10 first-timers, each with exactly one green
-  row, from r11); the three chosen (dedup_incremental_near,
-  dedup_incremental_semantic, pipeline_incremental_ingest) are the ones
-  this round's pluggable batch-membership change touches most directly —
-  RECENTLY-CHANGED over stale per the standing policy — so their second
-  rows are POST-change. pipeline_clean_corpus_v2 and
-  pipeline_incremental_artifact_delta stay at one row (last r11,
-  untouched semantics this round) and lead the r13 filler pool.
-  1 + 3 + 43 + 3 = 50 exactly. Displaced multi-green queries remain
-  covered every round by tests/test_differential.py.
-Round 12 also adds dedup_simhash_hamming (the SimHash modality's
-  candidate+verify path: 4×15-bit banded buckets through the SAME
-  pairs_from_band_rows as MinHash-LSH, popcount-XOR verify at
-  HAM_MAX=3 — EXACT recall at that bar by pigeonhole, pinned by a
-  model-based hypothesis test; signature definition single-sourced
-  with dedup_simhash) and dedup_incremental_two_day_exact (the
-  oracle-bearing witness of this round's multi-day semantics: day 2 =
-  doc_id % 10 == 5 classified against history GROWN by day 1's keeps;
-  both days are incremental_seen_canon_flags instantiated purely by
-  batch predicate — the new parameter in driver-visible form). Both
-  registered OUT-of-window with the full checklist (oracle +
-  differential + plan pin + crafted test + 3x point + SCALE.md row),
-  join bench EXTENDED (freezing into the cohort the declared r13
-  overlap graduates), and are the r13 rotation's first priority
-  together with second rows for pipeline_clean_corpus_v2 and
-  pipeline_incremental_artifact_delta (the two count-1 queries this
-  round's fillers skipped).
-Round 12 further adds dedup_incremental_two_day_near — multi-day
-  semantics for the HARD stage (transitive components): day 2
-  classified against history grown by day-1's near keeps, with a
-  day-1 DROP tainting nothing (its edges excluded from day 2's
-  universe). One signature pass + one verify cover both generations;
-  day 1 = shared cls under parity, day 2 = the SAME cls under
-  membership (batch_members=True sentinel); oracle instantiates the
-  shared edges/cls fragments per generation via the new rem parameter
-  (edges default byte-identical; cls differs by a line break only,
-  all consumers gate_sim-reverified) and two tagged closures; the
-  verify chain is the single-source _incr_verify_be_sql fragment.
-  Same full checklist, bench EXTENDED, r13 rotation priority with the
-  other two. And dedup_simhash_hamming_sweep — the Hamming calibration
-  histogram (un-thresholded candidate distances + cumulative verify
-  bill per cutoff, the HAM_MAX analogue of jaccard_threshold_sweep /
-  band_tuning / tau_sweep), sharing ONE candidate+distance chain with
-  the pair operator (simhash_candidate_hamming / _simhash_cand_ham_sql)
-  so the sweep can never disagree with what it calibrates; full
-  checklist, bench EXTENDED — the frozen r13-graduating cohort is
-  TWELVE — and the r13 rotation takes all FOUR r12 newcomers.
-  The r13 window plan: flagship + the FOUR r12 out-of-window
-  operators (dedup_simhash_hamming, dedup_simhash_hamming_sweep,
-  dedup_incremental_two_day_exact, dedup_incremental_two_day_near —
-  first driver rows; after r12 they are the only oracle-bearing
-  queries with zero driver evidence) + pipeline_clean_corpus_v2 and
-  pipeline_incremental_artifact_delta (the two count-1 queries, second
-  rows) + the r10-latest cohort (second-or-later rows; count it from
-  CORRECTNESS_r01..r12 — if r12 comes back green it is the 46 queries
-  whose latest row is r10, of which 43 fit: leave out the three with
-  the MOST prior green rows and roll them into r14).
-  1 + 4 + 2 + 43 = 50 exactly. Bench r13
-  executes the declared v3 OVERLAP round: graduating=EXTENDED (the
-  twelve frozen ops) emits additive value_v3/n_queries_v3 next to the
-  unchanged v2 trend line; the r14 flip then folds them into HEADLINE.
-  Byte note for r13 (measured r12: true final line 474/500 at THREE
-  slowest entries): the ~45-byte v3 keys push the degradation ladder
-  to its 0-entry step — fine by design (detail line keeps the full
-  map), or move status_build/pairs_build to the detail line only;
-  dry-run numbers in SCALE.md's round-12 bench note.
-Round 13 rotation (executes the r12 plan above verbatim): flagship +
-  the FOUR r12 out-of-window operators (dedup_simhash_hamming,
-  dedup_simhash_hamming_sweep, dedup_incremental_two_day_exact,
-  dedup_incremental_two_day_near — their FIRST driver rows; after r12
-  they were the only oracle-bearing queries with zero driver evidence)
-  + pipeline_clean_corpus_v2 and pipeline_incremental_artifact_delta
-  (the two count-1 queries, last green r11 — second rows) + 43 of the
-  46 r10-latest queries (counted from CORRECTNESS_r01..r12 after r12
-  came back 50/50 green: exactly 46 queries have latest row r10). The
-  three left out, per the written plan ("the three with the MOST prior
-  green rows"), come from the five-way tie at 6 green rows; tie-break
-  alphabetical-first-out, so dedup_embedding_cosine,
-  multimodal_decode_features and similarity_ivf_topk roll into the r14
-  window with their tie survivors noted here. 1 + 4 + 2 + 43 = 50
-  exactly. Bench r13 executes the declared v3 OVERLAP round:
-  GRADUATING_R12 (the twelve EXTENDED ops frozen at the end of r12)
-  rides format_output's graduating= parameter, emitting additive
-  value_v3/n_queries_v3 beside the unchanged v2 trend line
-  (headline_version stays 2 this round; r14 flips). EXTENDED holds
-  only post-r12 operators registered this round, mirroring the r10
-  overlap precedent (BENCH_r10: n_extended=5 newcomers while the
-  frozen cohort graduated). Displaced multi-green queries remain
-  covered every round by tests/test_differential.py.
-Round 13 adds dedup_incremental_simhash (the FIFTH incremental
-  sibling — VERDICT r12 #4 option (a), both halves: the SimHash
-  modality enters the incremental family as its own stage with the
-  SIXTH persisted artifact (the (doc_id, simhash) signature table,
-  doc_id-bucketed in the store layout), and the registry-visible
-  MinHash-stays-composed scope note lives in the operator doc,
-  justified against the two calibration sweeps' measured detection
-  bands). Zero new kernels: edges = the session-cached simhash chain
-  filtered to batch-touching pairs at HAM_MAX; classification = the
-  shared component tail; oracle composes the shared fragments.
-  Registered OUT-of-window with the full rigging checklist (oracle +
-  differential + plan pin + crafted two-day claims test + 3x point +
-  SCALE.md row), joins bench EXTENDED per the r10 overlap precedent,
-  and is the r14 rotation's first priority (its first driver row).
-  Registry: 150 queries / 147 oracle-bearing.
-Round 13 also adds similarity_ivf_probe_sweep (the IVF family's
-  calibration leg, completing the per-index-family sweep symmetry:
-  LSH band layouts r9, semantic tau r9, SimHash Hamming r12, IVF
-  nprobe r13): recall@10 against the exact top-10 AND the probe bill
-  (candidates scanned) for nprobe in (1,2,4,8), all priced from ONE
-  centroid-assignment pass — probed lists are cut to their LOCAL
-  top-k inside the same window that counts the bill, so the
-  per-config merge ranks <= K*k rows and the corpus is never
-  rescanned per setting; the nprobe=IVF_K row probes every list and
-  anchors the curve at recall 1.0. Oracle composes the registered
-  brute-force spec (single source for the denominator). Registered
-  OUT-of-window with the full rigging checklist (oracle +
-  differential + plan pin + crafted strict-recall-growth fixture +
-  3x point + SCALE.md row), joins bench EXTENDED alongside
-  dedup_incremental_simhash, r14-rotation priority with it.
-  Registry: 151 queries / 148 oracle-bearing.
-Round 13 also generalizes BucketedArtifactStore over an artifact spec
-  (dedup's six stay the default) and instantiates it for the
-  similarity family: the persisted IVF index — a cid-bucketed list
-  table (vec_id, cid, nvec) plus a K-row centroid artifact — with
-  backfill/append/serve functions (similarity.ivf_backfill_lists /
-  ivf_append_lists / ivf_topk_from_store). Serve is row-identical to
-  similarity_ivf_topk with the production plan: exactly ONE list-table
-  scan, zero shuffles, zero Window nodes, zero broadcasts (the query
-  vector inlines as literals; production passes it with the request),
-  probe scan bucket-PRUNED to the query's nprobe lists
-  (SelectedBucketsCount pinned); appends assign increments against
-  the PERSISTED centroid artifact (reserved centroid id range refused
-  loudly) and land hash-aligned (<=1 file per bucket per night);
-  compaction preserves the spec through the full cycle.
-  Function-level machinery with a pinned round-trip test, not a
-  registry query (the serve result is definitionally the registered
-  query's — a second oracle would re-prove the same rows).
-Round 13 also adds similarity_pq_geometry_sweep (the PQ family's
-  calibration leg, finishing the per-index-family sweep symmetry for
-  BOTH ANN index families: IVF tunes nprobe, PQ tunes its code
-  geometry): recall@10 against the exact top-10 for M in (2,4,8)
-  subspaces — 128x/64x/32x compression of the f32 vector — priced
-  from ONE corpus scan (all configs' sub-chunks explode from one
-  pass; encode, LUT and score all key on the config column, the
-  band-tuning rule applied to PQ), with an EXACT two-stage per-config
-  top-k so no window ranks the whole corpus in one partition. The
-  crafted test pins config-column reality (the M=4 row must equal the
-  registered similarity_pq_adc_topk's hit count) and the
-  geometry-invariant anchor (exact duplicates of the query recall at
-  1.0 under every geometry, on a dense fixture built to avoid the
-  zero-chunk phantom-score trap its own docstring records). Full
-  rigging checklist; bench EXTENDED; r14-rotation priority with the
-  other two r13 newcomers. Registry: 152 queries / 149 oracle-bearing.
-The r14 window plan (written at r13 freeze; execute verbatim if r13
-  comes back green): flagship + the THREE r13 out-of-window newcomers
-  (dedup_incremental_simhash, similarity_ivf_probe_sweep,
-  similarity_pq_geometry_sweep — their FIRST driver rows; after r13
-  they are the only oracle-bearing queries with zero driver evidence)
-  + the three r10-latest carried over from the r13 tie-break
-  (dedup_embedding_cosine, multimodal_decode_features,
-  similarity_ivf_topk) + 43 of the 44 r11-latest (count it fresh from
-  CORRECTNESS_r01..r13 after the r13 rows land; leave out the one
-  with the MOST prior green rows, tie-break alphabetical-first-out,
-  and roll it into r15). 1 + 3 + 3 + 43 = 50 exactly. Bench r14
-  executes the declared v3 FLIP: headline_version -> 3, the
-  GRADUATING_R12 twelve fold into HEADLINE in their frozen order, the
-  v3 overlap keys and the v2 sum drop, and EXTENDED (already holding
-  only the three post-r12 operators) rides on unchanged — per the
-  policy text at bench.py's graduation schedule.
-Round 14 executes that plan verbatim (r13 came back 50/50 green, the
-  tenth consecutive perfect window): _CHECK_WINDOW below is flagship +
-  the three r13 newcomers' first driver rows + the three carried
-  r10-latest + 43 of the 44 r11-latest (counted fresh from
-  CORRECTNESS_r01..r13: exactly 44 queries have latest row r11; two tie
-  at 6 greens — semi_join_active_customers, text_language_id — and
-  alphabetical-first-out rolls semi_join_active_customers to r15).
-  Bench r14 is the declared v3 flip, executed in bench.py:
-  HEADLINE_VERSION = 3, the GRADUATING_R12 twelve in HEADLINE's tail in
-  frozen order, GRADUATING_R12 = [] (the hook stays for the next
-  declared overlap), EXTENDED = the three r13 operators rides on.
-Round 14 also folds the PQ rule to one geometry-parameterized chain
-  (_pq_scores; similarity_pq_adc_topk is its (PQ_M,) instance, the
-  geometry sweep its PQ_SWEEP_MS instance — VERDICT r13 #3 option (a),
-  executed at the flip as the deferral rationale prescribed), gives
-  BucketedArtifactStore idempotent batch-id appends (a retried nightly
-  ingest replays as a no-op; VERDICT r13 #4), and puts the SimHash
-  modality on the streaming runtime (foreachBatch over the signature
-  artifact as state with epoch-id idempotent appends — VERDICT r13 #5;
-  the shared rule factored to
-  incremental_artifacts.simhash_cls_from_history).
-Round 14 adds similarity_ivf_pq_topk — the composed IVF-PQ ANN (the
-  FAISS IndexIVFPQ architecture): coarse probe prunes to nprobe lists,
-  PQ ADC ranks the candidates over 4-byte codes — built entirely from
-  the two shared single-source chains (_ivf_ranked for
-  assignment/probing, _pq_scores for scoring, encode RESTRICTED to
-  candidates+seeds+query, which is bit-identical to the full-corpus
-  encode because a code depends only on the vector's own chunks and
-  the seed codebook). Registered OUT-of-window with the full rigging
-  checklist (composed oracle from the shared _ivf_assign_sql_duckdb +
-  _PQ_ADC_CTES fragments, auto differential, plan pin, crafted
-  IVF-pruning/dup/restricted-encode-parity claims on an anchored
-  one-hot fixture, 3x point, SCALE.md section), joins bench EXTENDED,
-  and is an r15-rotation priority (its first driver row).
-  Registry: 153 queries / 150 oracle-bearing.
-Round 14 also adds text_bigram_lm_score — the CONDITIONAL sibling of
-  text_unigram_logfreq (add-one-smoothed bigram model, mean
-  ln P(w2|w1) per doc): one rung closer to the KenLM-style LM filter
-  CCNet runs, and the first text operator where word ORDER is the
-  signal (the crafted test pins two same-multiset/opposite-order docs
-  scoring differently while the unigram op scores them identically).
-  Token order via posexplode / DuckDB parallel-UNNEST alignment;
-  per-bigram ln P quantized to micro-unit BIGINT in a checkpointed
-  O(distinct bigrams) model table, per-doc exact integer sums (the
-  unigram determinism precedent). Full rigging checklist (oracle +
-  auto differential + plan pin [one per-doc window, model built once,
-  1-row V broadcast] + crafted claims + 3x point + SCALE.md section),
-  joins bench EXTENDED, r15-rotation priority alongside
-  similarity_ivf_pq_topk. Registry: 154 queries / 151 oracle-bearing.
-Round 14 also persists the IVF-PQ index (the composed query's serving
-  story — the THIRD BucketedArtifactStore spec): a cid-bucketed CODE
-  table (4-byte payload rows) plus centroid and codebook model
-  artifacts; serve = K-row centroid job + driver-side literal-array
-  LUT + ONE bucket-pruned pure-projection scan (zero
-  joins/shuffles/windows/broadcasts; SelectedBucketsCount pinned),
-  row-parity with similarity_ivf_pq_topk pinned EXACTLY (fold-order +
-  HALF_UP-replicating driver LUT); appends encode against the
-  persisted models with idempotent batch-id replay. Function-level
-  machinery with a pinned round-trip (not a registry query — the
-  serve result is definitionally the registered query's).
-Round 14 also adds pipeline_clean_corpus_v3 — the FIVE-family
-  curation capstone: v2 plus the SimHash component stage inserted
-  between near and semantic (syntactic-before-semantic waterfall
-  rule), survivor-aware like the stages v2 added, components from the
-  session-shared banded-Hamming chain at HAM_MAX (zero new kernels;
-  the oracle composes the shared _simhash_cand_ham_sql, which grew a
-  tag parameter because its outer hashed/bands CTEs collide with
-  _LSH_CANDIDATES_SQL's nested names — DuckDB's planner INTERNAL-errors
-  on that shadowing under WITH RECURSIVE instead of resolving it, a
-  recorded engine quirk). Crafted claims: the word-permutation fixture
-  (identical SimHash, distinct digests, disjoint shingles, no
-  embeddings) that ONLY the fifth family fully catches; exact-stage
-  precedence; upstream-count equality + the downstream partition
-  identity vs v2 on the standard corpus; and the survivor-aware
-  RE-KEEPING case (the round's second review pass DISPROVED the naive
-  keep-subset claim by counterexample — dropping a simhash dup can
-  promote a different semantic keeper v2 dropped; pinned as designed
-  behavior, the claim corrected everywhere). The fold: since the
-  review pass, v2 and v3 are the with_simhash=False/True instances of
-  ONE parameterized chain (_clean_corpus_report/_clean_corpus_oracle)
-  — v2's physical plan verified byte-identical (normalized) across
-  the fold. Full rigging checklist; bench EXTENDED;
-  r15-rotation priority with the other two r14 newcomers.
-  Registry: 155 queries / 152 oracle-bearing.
-The r15 window plan (written at r14 freeze; execute verbatim if r14
-  comes back green): flagship + the THREE r14 out-of-window newcomers
-  (pipeline_clean_corpus_v3, similarity_ivf_pq_topk,
-  text_bigram_lm_score — their FIRST driver rows; after r14 they are
-  the only oracle-bearing queries with zero driver evidence) +
-  semi_join_active_customers (the one r11-latest, rolled from the r14
-  tie-break) + 45 of the 49 r12-latest (count it fresh from
-  CORRECTNESS_r01..r14 after the r14 rows land; the expected
-  composition is exactly 49 queries with latest row r12 — leave out
-  the FOUR with the MOST prior green rows, tie-break
-  alphabetical-first-out, and roll them into r16).
-  1 + 3 + 1 + 45 = 50 exactly. Bench r15: no graduation event —
-  headline_version stays 3, EXTENDED (the six post-r12 operators:
-  three r13 + three r14) keeps accumulating toward the next declared
-  overlap round, which should be declared one round ahead per the
-  standing policy once EXTENDED's size or the final-line budget calls
-  for it.
-Round 15 executes the r15 window plan verbatim (_CHECK_WINDOW below;
-  the four most-green r12-latest — dedup_minhash_lsh,
-  join_revenue_by_nation, pricing_summary, events_tumbling_window —
-  roll to r16), adds the post-timed-loop cpu-probe pair to bench.py
-  (VERDICT r14 #2, telemetry only), generative schedules for the two
-  persisted ANN index stores (#4), the executable epoch-keyed sink
-  helper with the crash-window pins (#5 — and the r15 review
-  DISPROVED the module's documented post-append divergence claim by
-  executed counterexample: the SimHash retry is classification-stable
-  because membership is doc_id-stable; the ordering note is
-  corrected and the stability pinned), the _serve_table qualification
-  of ivfpq_codebook (#7), and all three ADVICE items (empty-batch
-  vacuous-landing contract, store-layer backfill-first gate for
-  batch-id appends, required streaming namespace).
-Round 15 adds similarity_ivf_pq_refine_topk — the exact-refinement
-  stage over the composed IVF-PQ query (FAISS IndexRefineFlat): the
-  ADC top-REFINE_R shortlist re-ranked with exact cosines via one
-  R-row broadcast join + a 1-row broadcast query vector; rows carry
-  both scores so the absorbed quantization error is auditable.
-  Crafted claims: the operator equals an in-test
-  shortlist+exact-re-rank model row-for-row on the standard corpus;
-  the reorder vs the parent is real (pulled-up rows pinned); the
-  recall residual is REAL (vec 423 — best exact cosine outside the
-  shortlist, higher than a returned row, absent); and a crafted
-  same-code ADC tie (1.0/1.0, exact 0.6 vs 0.8) swaps under refine
-  while the parent orders by vec_id. Full rigging checklist; bench
-  EXTENDED. Registry: 156 queries / 153 oracle-bearing.
-Round 15 adds events_scd2_intervals — SCD2/CDC validity-interval
-  compaction from the append-only event log (the warehouse-modeling
-  face of the events family): per-user runs of one event_type
-  collapse to half-open [valid_from, valid_to) intervals, NULL-ended
-  current rows, run event counts. Plan: ONE user_id shuffle serves
-  all three Window passes; the compaction is a boundary-row filter
-  (the lead window sorts |changes| rows, not |events|) — pinned,
-  along with the column-pruned scan. Crafted claims: run-not-distinct
-  semantics (A,A,B,A → 3 intervals), event_id tie-break rendering a
-  zero-width interval, NULL-type run collapse (IS DISTINCT FROM
-  parity), exhaustive half-open chains. Full rigging checklist;
-  bench EXTENDED. Registry: 157 queries / 154 oracle-bearing.
-Round 15 adds pipeline_domain_caps — closed-form water-filling domain
-  token caps (the budgeted complement of domain_mix/temperature_mix):
-  the unique level tau with sum_d min(tokens_d, tau) = budget (total
-  DIV 2) found by sorted prefix-sum algebra — rank i's candidate
-  (budget - below)/k, first candidate at or under its own total wins
-  — over the O(|sources|) frame coalesced to one partition (ONE
-  exchange in the whole plan, pinned). Crafted claims on a skewed
-  fixture (standard corpus is near-uniform → everything-capped
-  branch, stated honestly): tau = 825 vs an independent bisection
-  model, exact conservation to the budget, uncapped-keep-natural /
-  capped-equalize split. Full rigging checklist; bench EXTENDED.
-  Registry: 158 queries / 155 oracle-bearing.
-The r16 window plan (written at r15 freeze; execute verbatim if r15
-  comes back green): flagship + the THREE r15 newcomers
-  (similarity_ivf_pq_refine_topk, events_scd2_intervals,
-  pipeline_domain_caps — their FIRST driver rows; after r15 they are
-  the only oracle-bearing queries with zero driver evidence) + the
-  FOUR r12-latest rolled from the r15 tie-break (dedup_minhash_lsh,
-  events_tumbling_window, join_revenue_by_nation, pricing_summary —
-  after r15 they are the stalest rows in the registry and must all
-  come in) + 42 of the 49 r13-latest (count fresh from
-  CORRECTNESS_r01..r15 after the r15 rows land; expected composition
-  is exactly 49 queries with latest row r13 — leave out the SEVEN
-  with the MOST prior green rows, tie-break alphabetical-first-out:
-  expected similarity_knn_join (7), text_token_count (7),
-  events_variant_shred (6), and the first four of the 5-green
-  alphabetical tie — anti_join_idle_customers,
-  asof_join_purchase_click, conditional_agg_order_status,
-  cte_above_avg_orders — all seven roll to r17).
-  1 + 3 + 4 + 42 = 50 exactly.
-Round 15 also ships ivfpq_refine_from_store — the refine query's
-  persisted serve over BOTH indexes (codes for the ADC shortlist,
-  vectors for the exact re-rank): stage 1 is the code serve collected
-  at its ADC top-R (O(R) driver rows, the bounded legitimacy class),
-  stage 2 is ONE bucket-pruned scan of ivf_lists with pushed vec_id
-  filters, literal-map shortlist attachment, and the inlined exact
-  dot — zero joins/shuffles/windows/broadcasts in the returned frame
-  (pinned). Round-trip parity with the registered query through
-  append/replay/compaction of each store; measured sf0.1 min-of-5:
-  5.8x over the in-session query, honestly 1.7x the bare code serve
-  (two sequential driver round-trips — a per-query-class precision
-  knob, not a free default).
-BENCH v4 DECLARATION (the one-round-ahead call the policy requires,
-  made at r15 freeze): round 16 is the OVERLAP round — EXTENDED as
-  frozen at the end of r15 (NINE operators: three r13 + three r14 +
-  three r15) rides r16 as GRADUATING_R15, emitting the additive
-  value_v4/n_queries_v4 keys under headline_version 3; round 17
-  flips to headline_version 4 (the nine fold into HEADLINE's tail in
-  frozen order, EXTENDED empties and restarts with post-r15
-  newcomers). Trigger arithmetic: EXTENDED is at nine operators /
-  ~19 s — past the size the r12 cohort graduated at — and the
-  final-line byte ladder already sits at its 3-entry step after the
-  r15 probe-pair keys; during the r16 overlap the v4 keys will push
-  the slowest map to its 0-entry ladder step for that ONE round
-  (planned and accepted: the probe pair STAYS on the final line — it
-  is the self-diagnosing context VERDICT r14 #2 exists for — and the
-  full per-query map rides the detail line / committed BENCH_LOCAL as
-  always; the map returns at the r17 flip when the overlap keys
-  drop).
-Round 16 executes the r16 window plan verbatim (_CHECK_WINDOW below;
-  the seven most-green r13-latest — similarity_knn_join (7),
-  text_token_count (7), events_variant_shred (6),
-  anti_join_idle_customers, asof_join_purchase_click,
-  conditional_agg_order_status, cte_above_avg_orders (the first four
-  of the 5-green alphabetical tie) — roll to r17) and the DECLARED
-  bench v4 overlap exactly as written: the nine-operator EXTENDED
-  cohort frozen at r15 end rides as bench.GRADUATING_R15 emitting
-  additive value_v4/n_queries_v4 under headline_version 3; EXTENDED
-  restarted empty (refills with post-r15 newcomers only). ROUND 17
-  FLIP (declared here one round ahead, per policy): r17 folds
-  GRADUATING_R15 into HEADLINE's tail in its frozen order, sets
-  HEADLINE_VERSION = 4, drops the v4 overlap keys and empties the
-  hook; r17's `value` compares to BENCH_r16's value_v4 (98 queries),
-  never to its v3 value.
-Round 16 also promotes the seeded generative claim-hammer from
-  post-freeze sweep to the PRE-FREEZE rigging checklist (VERDICT r15
-  #3 — the r15 scd2 NULL-first-run bug lived in BOTH engines, so the
-  differential gate was structurally blind to it): every NEW operator
-  needs a seeded generative parity test against an INDEPENDENT
-  in-test model (not just the DuckDB oracle) green BEFORE the freeze;
-  the rigging checklist is otherwise unchanged. Backfills shipped for
-  the two highest-value r13-r14 operators that rested on crafted
-  fixtures only: similarity_ivf_pq_topk (composed-chain parity vs an
-  independent numpy IVF-PQ model over seeded random corpora) and
-  text_bigram_lm_score (add-one bigram LM parity vs an independent
-  Python counter model over seeded random token streams).
-Round 16 adds similarity_bq_hamming_topk — the 1-bit binary-quantization
-  cascade (BQ + rescore, the RaBitQ/Milvus-BQ serving shape): sign-bit
-  sketches packed into two 32-bit BIGINT halves (bit 63 deliberately
-  unused — DuckDB's HUGEINT list_sum would diverge from a wrapped
-  1<<63), Hamming-distance shortlist of BQ_R=30 via XOR+popcount, exact
-  cosine re-rank; ONE corpus scan, zero shuffles/windows, two
-  TakeOrderedAndProject heaps, the shortlist carries its vectors so the
-  re-rank needs no second scan. Crafted claims: identical-sketch ties
-  (a vector vs its doubled self) order by vec_id, the re-rank genuinely
-  reorders the Hamming order, a REAL recall residual (better exact
-  cosine outside the shortlist, absent), and a negated vector sits at
-  Hamming = bits-set-in-query + its complement. Seeded generative
-  parity vs an independent pure-Python pack/popcount/re-rank model
-  (pre-freeze rigging, per this round's checklist promotion). Full
-  rigging checklist; bench EXTENDED. Registry: 159 queries / 156
-  oracle-bearing.
-Round 16 adds text_heldout_perplexity — cross-split LM quality scoring
-  (the CCNet shape done honestly: in-corpus scoring can never flag a
-  doc whose transitions ARE the corpus): doc_id % 5 == 0 docs scored
-  under the bigram model the other 80% train, stupid backoff
-  (raw-ratio seen path, alpha=0.4 times add-one unigram for unseen,
-  OOV-safe) with per-doc backoff_ratio as the filter's confidence
-  column; micro-unit BIGINT q-table, exact integer reductions, NULLIF
-  guard makes the empty-train degenerate NULL on both engines. The
-  standard corpus shares its vocabulary across splits (backoff_ratio 0
-  — stated honestly); the crafted fixture pins the backoff path, OOV
-  w2, the split boundary, and empty-train; seeded generative parity vs
-  an independent Counter model with a THIN train split forcing real
-  backoff mass. Full rigging checklist; bench EXTENDED. Registry: 160
-  queries / 157 oracle-bearing.
-Round 16 adds events_watermark_lateness_audit — the measurement face of
-  the streaming module's watermark contracts: per event_type, how far
-  the event-time high-watermark (max event time over strictly earlier
-  event_id arrivals — exactly what withWatermark tracks) had passed
-  each event, clamped at 0; reports out-of-order counts, max/mean
-  lateness, and what 1-minute / 1-hour watermarks would drop
-  (lateness > delay is Spark's drop rule verbatim). Exactly ONE
-  exchange: the groupBy reuses the window's event_type hash
-  distribution. The standard corpus arrives in event_id order (all
-  zeros — stated honestly); the crafted fixture pins clamping,
-  first-arrival zero, threshold edges (> not >=), NULL-typed streams;
-  seeded generative parity vs an independent running-max model over
-  shuffled arrival orders. Full rigging checklist; bench EXTENDED.
-  Registry: 161 queries / 158 oracle-bearing.
-Round 16 also ships the persisted BQ index (bq_backfill / bq_append /
-  bq_topk_from_store): ONE vec_id-bucketed artifact (vec_id, lo, hi,
-  nvec) carrying both physical forms of the corpus — stage 1
-  column-prunes to the 16-byte sketch read, stage 2 bucket-prunes the
-  shortlist point-reads by the vec_id bucket key — so unlike the
-  refine cascade there is no cross-store same-snapshot contract; the
-  residual between-reads window is guarded by the same loud coverage
-  check (check_snapshot, default ON). Appends are a pure map (no
-  centroid/codebook artifact — BQ is training-free), idempotent via
-  store batch-ids, backfill-first-gated. Measured sf0.1 min-of-5:
-  serve 0.53 s vs in-session 0.89 s (1.67x; the honest argument is
-  16 B/row at scale, not this SF). Round-trip pinned through
-  append/replay/compaction.
-Round 16 adds similarity_bq_r_sweep — the BQ family's calibration leg
-  (the tuning symmetry the other ANN families carry: probe sweep
-  prices nprobe, geometry sweep prices code bytes, this prices BQ_R):
-  recall@10 of the cascade at shortlist sizes (10, 30, 100) from ONE
-  scored pass — cascade recall at R equals |true top-10 ∩ Hamming
-  top-R| / |top-10| exactly (shortlisted true neighbors always survive
-  the exact re-rank), so the sweep never runs the cascade per rung;
-  hamming_cut reports the radius each R implies. NO structural
-  saturation rung exists (unlike nprobe=K) — the measured curve is the
-  finding: 0.3/0.6/0.9 at sf0.01, the 64-bit sign sketch is honestly
-  coarse. Plan: two heap cuts over the scored pass (zero corpus-wide
-  windows; the row_number runs on the heap-cut 100-row frame), tiny
-  broadcast sides, O(sum Rs) rows after the heaps. Full rigging
-  checklist; bench EXTENDED. Registry: 162 queries / 159
-  oracle-bearing.
-Round 16 also ships the persisted bigram LM (lm_backfill / lm_append /
-  lm_score_from_store): the heldout op's model as its SUFFICIENT
-  STATISTICS — count-delta rows bucketed by their group key (scores are
-  not mergeable; counts are) — with nightly delta appends, per-serve
-  zero-exchange bucketed SUM merges (pinned; the serve stays on the
-  caller session because the groupBy consumes the bucket distribution),
-  scoring through the same shared _lm_score_docs rule as the registered
-  query (refactored first, behavior-pinned). Round-trip executes
-  mergeability (backfill+deltas == union rebuild, bit-identical),
-  crash-between-appends retry healing, heldout-contamination refusal,
-  compaction stability. Measured sf0.1 min-of-5: serve 1.01 s vs
-  registered 1.60 s; backfill 12.2 s one-time.
-Round 16 adds similarity_mrl_truncation_sweep — the FOURTH point on
-  the embedding-compression curve (int8 -> PQ -> BQ -> Matryoshka
-  prefix truncation): recall@10 of renormalized prefix-cosine
-  retrieval at (8, 16, 32, 64) dims from ONE pass, exact two-stage
-  per-config top-k (the geometry sweep's fan-in), all-zero prefixes
-  NULL-filtered identically on both engines, the d=64 rung the
-  STRUCTURAL saturation anchor (recall 1.0 — restoring the
-  saturate-the-last-rung rule BQ's sweep honestly lacks). Degenerate
-  honesty: the synthetic corpus is not MRL-trained, so low-d recall is
-  near-random and even non-monotone (sf0.001: 0.2/0.1/0.0/1.0) — the
-  crafted prefix-informative fixture supplies the regime the op
-  prices, pinning the trade both ways (a false prefix-neighbor
-  retrieved at d=8; a true orthogonal-prefix neighbor missed at d=8,
-  recovered at d=64). 3x point: 2.35 -> 2.23 s (flat). Full rigging
-  checklist incl. the pre-freeze generative hammer; bench EXTENDED.
-  Registry: 163 queries / 160 oracle-bearing.
-Round 17 executed every r16 verdict/advice item (corrected window
-  derivation below + scripts/rotation_plan.py mechanizing it; the
-  bench v4 flip; the watermark global-lower-bound EXECUTED in the
-  claims test; lm_append's unigram empty-delta guard; the BQ doc
-  f-string; the narrows-not-closes check_snapshot docstrings) and
-  added the MRL serving leg (VERDICT #6) as a full citizen pair:
-  similarity_mrl_prefix_topk — the d=16 prefix-shortlist cascade
-  (stage 1 = the sweep's renormalized prefix cosine at its d=16 rung
-  via the SAME expression, 30-row heap shortlist; stage 2 exact
-  full-dim rerank; the BQ cascade's one-scan/zero-shuffle/two-heap
-  plan, pinned) with oracle + crafted claims (stage-1 winner dropped
-  by rerank, orthogonal-prefix residual real, zero-prefix rows
-  unreachable) + generative parity — and the persisted mrl_index
-  (vec_id, pvec, nvec bucketed by vec_id: the prefix as its OWN
-  column, closing the sweep's stated Parquet-cannot-prune-an-array-
-  prefix gap; stage 1 column-pruned to 16 dims/row, stage 2
-  bucket-pruned point reads, pvec stored un-renormalized for
-  bit-identical serve scores; pure-map appends; round-trip incl. the
-  d=16 RUNG round-trip vs the sweep's n_hits; FOURTH member of the
-  generative store schedules). Measured sf0.1 min-of-5: serve 0.576 s
-  vs registered 0.897 s; backfill 6.95 s one-time; 3x point 1.56 ->
-  1.27 s (flat).
-Round 17 also adds similarity_mrl_r_sweep — the MRL_R calibration leg
-  completing the family symmetry (every cascade ships with the sweep
-  that prices its budget knob): recall@10 at R in (10, 30, 100) from
-  ONE scored pass via the BQ sweep's membership identity (EXECUTED vs
-  the literal cascade in the generative test), prefix_cos_cut the
-  radius each R implies. Honest findings: zero-prefix vectors are
-  structurally unreachable at EVERY R (caps recall below 1.0 —
-  crafted-pinned, the asymmetry vs BQ where every vector has a
-  sketch), and the untrained-corpus curve 0.1/0.3/0.7 at sf0.01 sits
-  strictly BELOW the BQ sketch's 0.3/0.6/0.9 at identical budgets —
-  the never-truncate-untrained lesson priced at the cascade level.
-  3x point 2.82 -> 2.26 s (flat). Full rigging checklist; bench
-  EXTENDED. Registry: 165 queries / 162 oracle-bearing.
-Round 17 adds the persisted INVERTED INDEX — text_bm25_topk's serving
-  story and the repo's first TERM-bucket-pruned serve: word-bucketed
-  postings (word, doc_id, tf, dl) + mergeable (n_docs, corpus_len)
-  count-delta stats (the LM store's sufficient-statistics pattern —
-  idf and length normalization depend on corpus totals, so serve-time
-  scoring from SUM-merged counts keeps nightly appends exact). df is
-  DERIVED from the pruned postings (cannot desync; executed equality
-  per term). Serve: bucket-pruned to the query terms' buckets
-  (SelectedBucketsCount <= |terms|), df branch column-pruned with
-  zero exchange, ONE data exchange over postings(q)-sized rows,
-  arbitrary lowercase term sets (malformed terms refused loudly),
-  bit-level parity via the registered query's own BIGINT expressions.
-  Appends carry the empty-delta guard on BOTH halves from day one;
-  an all-empty-text night genuinely moves every idf (executed).
-  Round-trip + seeded generative schedules (serve vs the registered
-  query over the evolving corpus after every append/replay/compact).
-  Measured sf0.1 min-of-5: serve 0.932 s vs registered 1.159 s;
-  backfill 9.15 s one-time.
-Round 17 adds events_watermark_delay_sweep — the delay calibration
-  leg for the r16 lateness audit (family symmetry again: the audit
-  reports what two fixed thresholds would drop; this prices the whole
-  knob): n_dropped / n_late_kept / drop_rate at withWatermark delays
-  (0, 10, 60, 600, 3600) s under the audit's exact per-stream
-  lateness rule, computed as CONDITIONAL aggregations in one
-  partial+final pass (the grid multiplies nothing — the one Generate
-  unfolds the 1-row aggregate, pinned). Rung 0 is the structural
-  anchor (== the audit's summed n_out_of_order) and the 60/3600
-  rungs equal the audit's dropped_wm_1m/1h sums — both identities
-  EXECUTED cross-operator in the claims AND generative tests, plus
-  conservation (dropped + late_kept == out-of-order at every rung)
-  and strict-threshold carry-over. 3x point 3.51 -> 2.52 s (flat).
-  Full rigging checklist; bench EXTENDED.
-Round 17 adds events_session_gap_sweep — the sessionizer's
-  calibration leg (events_session_window hard-codes a 10-minute gap;
-  this prices the knob): n_sessions / n_boundaries /
-  avg_session_events at gaps (60, 600, 1800, 3600, 86400) s from ONE
-  inter-event-delta pass via the identity n_sessions(G) = n_users +
-  |deltas > G| — the sweep never sessionizes per rung. Same
-  one-keyed-exchange + conditional-aggregation plan as the delay
-  sweep (pinned). The 600 s rung equals events_session_window's row
-  count EXACTLY (strict > boundary, same per-user total order) —
-  executed cross-operator in claims AND generative tests, plus the
-  strict-edge pin (a delta of exactly 60 s does not split at the
-  60 s rung), conservation (n_boundaries == n_sessions - n_users),
-  monotonicity, and a crafted widest-rung saturation. 3x point
-  1.32 -> 0.76 s (flat). Full rigging checklist; bench EXTENDED.
-  Registry: 167 queries / 164 oracle-bearing.
-The r17 window plan (written at r16 freeze; execute verbatim if r16
-  comes back green): flagship + the FIVE r16 newcomers
-  (similarity_bq_hamming_topk, similarity_bq_r_sweep,
-  similarity_mrl_truncation_sweep, text_heldout_perplexity,
-  events_watermark_lateness_audit — their FIRST driver rows; after
-  r16 they are the only oracle-bearing queries with zero driver
-  evidence) + the SEVEN r13-latest rolled from the r16 tie-break
-  (similarity_knn_join, text_token_count, events_variant_shred,
-  anti_join_idle_customers, asof_join_purchase_click,
-  conditional_agg_order_status, cte_above_avg_orders — after r16 they
-  are the stalest rows in the registry and must all come in) + 37 of
-  the 49 r14-latest (count fresh from CORRECTNESS_r01..r16 after the
-  r16 rows land; expected composition is exactly 49 queries with
-  latest row r14 — leave out the TWELVE with the MOST prior GREEN
-  rows, tie-break alphabetical-first-out. CORRECTED AT r17 START per
-  the r16 verdict: the original text here counted driver ROWS — red
-  r1 rows included — as greens, contradicting the rule's own wording
-  and the r16 precedent. The derivation is now mechanized in
-  scripts/rotation_plan.py (the listing below quotes its output; the
-  judge can re-run it): the true 7-green set is only four wide
-  (dedup_embedding_cosine, multimodal_decode_features,
-  similarity_ivf_topk, text_language_id) and the 13-wide tie sits at
-  SIX greens, so the leave-out is those four plus the first eight
-  alphabetically of the 6-green tie — cube_order_status,
-  dedup_embedding_cosine, filter_projection,
-  multimodal_decode_features, multimodal_metadata,
-  pipeline_domain_mix, pivot_status_by_flag,
-  recursive_calendar_spine, rollup_quantity,
-  scalar_subquery_nation_stats, similarity_ivf_topk,
-  text_language_id — all twelve roll to r18; the remaining five of
-  the 6-green tie (text_pii_redact, text_repetition_filter,
-  window_ntile_navigation, window_range_moving_revenue,
-  window_running_revenue) stay IN).
-  1 + 5 + 7 + 37 = 50 exactly. Bench r17: execute the DECLARED v4
-  flip (see the BENCH v4 DECLARATION above and bench.py's policy
-  text): fold GRADUATING_R15 into HEADLINE's tail in its frozen
-  order, set HEADLINE_VERSION = 4, drop the v4 overlap keys, empty
-  the hook; EXTENDED (the five r16 operators) keeps accumulating
-  toward the next declared overlap. r17's value compares to
-  BENCH_r16's value_v4 (98), never its v3 value.
-The r18 window plan (written at r17 freeze; execute verbatim if r17
-  comes back green; derived by scripts/rotation_plan.py — re-run it
-  against CORRECTNESS_r01..r17 once the r17 rows land and confirm the
-  cohort arithmetic below before editing _CHECK_WINDOW): flagship +
-  the FOUR r17 newcomers (similarity_mrl_prefix_topk,
-  similarity_mrl_r_sweep, events_watermark_delay_sweep,
-  events_session_gap_sweep — their FIRST driver rows; after r17 they
-  are the only oracle-bearing queries with zero driver evidence) +
-  the TWELVE r14-latest rolled from the corrected r17 leave-out
-  (cube_order_status, dedup_embedding_cosine, filter_projection,
-  multimodal_decode_features, multimodal_metadata,
-  pipeline_domain_mix, pivot_status_by_flag,
-  recursive_calendar_spine, rollup_quantity,
-  scalar_subquery_nation_stats, similarity_ivf_topk,
-  text_language_id — after r17 they are the stalest rows in the
-  registry and must all come in) + 33 of the 49 r15-latest (the r17
-  window touches no r15-latest query, so their green counts are
-  already final: leave out the SIXTEEN with the MOST prior GREEN
-  rows, tie-break alphabetical-first-out — the 8-green three
-  (dedup_clusters, dedup_ngram_jaccard, similarity_bucket_gemm), the
-  7-green four (pipeline_token_shards, semi_join_active_customers,
-  text_decontaminate, window_top_orders_per_customer), the 6-green
-  two (events_json_extract, multimodal_frame_sample), and the first
-  seven alphabetically of the 5-green tie (dedup_candidate_triangles,
-  dedup_incremental_ingest, dedup_jaccard_threshold_sweep,
-  dedup_semantic_keep_best, dedup_span_boilerplate,
-  events_dau_wau_stickiness, events_markov_transitions) — all
-  sixteen roll to r19; this paragraph originally said TWO newcomers /
-  35-of-49 and was re-derived by the script as each later r17
-  newcomer registered). 1 + 4 + 12 + 33 = 50 exactly. Bench r18: plain v4
-  round — no overlap keys; EXTENDED (the five r16 + two r17
-  operators) keeps accumulating. NEXT OVERLAP DECLARED one round
-  ahead per policy: round 19 rides the EXTENDED set as frozen at the
-  END of r18 as GRADUATING_R18 (additive value_v5/n_queries_v5 under
-  headline_version 4), and round 20 executes the v5 flip.
-  EXECUTED at r18: r17 came back green (50/50, CORRECTNESS_r17), the
-  script was re-run against CORRECTNESS_r01..r17 with the four
-  newcomers declared (`python scripts/rotation_plan.py --emit-window
-  similarity_mrl_prefix_topk similarity_mrl_r_sweep
-  events_watermark_delay_sweep events_session_gap_sweep`), its
-  leave-out reproduced the sixteen above name-for-name, and
-  _CHECK_WINDOW below is its emitted 50-entry window verbatim.
-The r19 window plan (written at r18 freeze; execute verbatim if r18
-  comes back green; derived by scripts/rotation_plan.py — re-run it
-  against CORRECTNESS_r01..r18 once the r18 rows land and confirm
-  before editing _CHECK_WINDOW): flagship + NO newcomers (r18 is an
-  optimization round; no queries were added) + the SIXTEEN r15-latest
-  rolled from the r18 leave-out (dedup_candidate_triangles,
-  dedup_clusters, dedup_incremental_ingest,
-  dedup_jaccard_threshold_sweep, dedup_ngram_jaccard,
-  dedup_semantic_keep_best, dedup_span_boilerplate,
-  events_dau_wau_stickiness, events_json_extract,
-  events_markov_transitions, multimodal_frame_sample,
-  pipeline_token_shards, semi_join_active_customers,
-  similarity_bucket_gemm, text_decontaminate,
-  window_top_orders_per_customer — after r18 they are the stalest
-  rows in the registry and must all come in) + 33 of the 49
-  r16-latest (the r17/r18 windows touch no r16-latest query, so their
-  green counts are already final: leave out the SIXTEEN with the MOST
-  prior GREEN rows, tie-break alphabetical-first-out —
-  dedup_minhash_lsh and join_revenue_by_nation at 11 greens,
-  pricing_summary at 10, events_tumbling_window at 9, and the first
-  twelve alphabetically of the 6-green tie: dedup_exact,
-  dedup_keep_best, dedup_simhash, events_funnel,
-  explode_word_frequencies, left_join_order_lines,
-  multimodal_image_resize, null_semantics, percentile_order_price,
-  pipeline_global_shuffle, pipeline_stratified_sample,
-  range_join_ship_window — all sixteen roll to r20).
-  1 + 0 + 16 + 33 = 50 exactly. Bench r19: per the declaration above,
-  ride EXTENDED-as-frozen-at-end-of-r18 as GRADUATING_R18 (additive
-  value_v5/n_queries_v5 under headline_version 4); round 20 executes
-  the v5 flip.
+Registry order is significant: the correctness gate behind
+``__spark_entry__.py`` checks the FIRST 50 registry entries, and
+``_CHECK_WINDOW`` below pins which queries occupy that window. The window
+rotates each round so that every oracle-bearing query collects green
+correctness rows; ``scripts/rotation_plan.py`` derives the next window
+from the ``CORRECTNESS_r*.json`` history under the written rule in its
+docstring (``--emit-window <newcomers>`` prints it), and the pending plan
+is in ROADMAP.md under "Smaller carry-overs". Queries
+outside the window are checked every round by tests/test_differential.py.
+The round-by-round ledger of rotations and bench headline declarations
+(rounds 1-18) lives in git: ``git show
+988463a:iceberg_explorer_spark/operators/__init__.py``.
 """
 
 from iceberg_explorer_spark.operators.registry import QUERIES, QuerySpec, query  # noqa: F401
@@ -1038,8 +53,7 @@ _CHECK_WINDOW = [
     # --- 33 of the 49 r15-latest (derived by scripts/rotation_plan.py
     # over CORRECTNESS_r01..r17 with the four newcomers declared; the
     # sixteen left out by MOST prior GREEN rows, tie-break
-    # alphabetical-first-out, are quoted in the r18 ledger entry above
-    # and roll to r19) ---
+    # alphabetical-first-out, roll to r19: see ROADMAP.md) ---
     "dedup_containment",
     "dedup_containment_probe",
     "dedup_incremental_near",

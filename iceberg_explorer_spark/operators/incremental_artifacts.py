@@ -163,7 +163,7 @@ class BucketedArtifactStore:
 
     The Iceberg-native equivalent is a ``bucket(N, key)`` partition
     transform plus rewrite_data_files; this is the catalog-agnostic
-    Spark form (same contract as sources/bucketing.py).
+    Spark form (same contract as sources/layout.py::bucketed_write).
 
     The store is generic over an ``artifacts`` spec (name -> bucket key
     columns); the incremental-dedup six above are the default. The

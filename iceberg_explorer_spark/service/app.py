@@ -33,7 +33,6 @@ from iceberg_explorer_spark.catalog.metadata import (
     parse_namespace,
 )
 from iceberg_explorer_spark.errors import (
-    ExportTooLargeError,
     InvalidSQLError,
     QueryNotFoundError,
     QueryTimeoutError,
@@ -52,10 +51,6 @@ from iceberg_explorer_spark.service.streaming_results import (
     VALID_PAGE_SIZES,
     stream_results,
 )
-
-#: reference models/query.py:22-27 — pydantic Field(ge=10, le=3600)
-TIMEOUT_MIN_S = 10
-TIMEOUT_MAX_S = 3600
 
 
 @dataclass
@@ -181,11 +176,12 @@ class ExplorerApp:
         if timeout is not None:
             if not isinstance(timeout, (int, float)) or isinstance(timeout, bool):
                 return _error(400, "timeout must be a number")
-            if not (TIMEOUT_MIN_S <= timeout <= TIMEOUT_MAX_S):
+            # the executor's bounds (reference models/query.py:22-27,
+            # Field(ge=10, le=3600)), so the 400 and its clamp agree
+            lo, hi = self.executor.min_timeout, self.executor.max_timeout
+            if not (lo <= timeout <= hi):
                 return _error(
-                    400,
-                    f"timeout must be between {TIMEOUT_MIN_S} and "
-                    f"{TIMEOUT_MAX_S} seconds",
+                    400, f"timeout must be between {lo:g} and {hi:g} seconds"
                 )
         try:
             result = self.executor.execute(sql, timeout)
@@ -372,18 +368,11 @@ class ExplorerApp:
         if result.status != QueryStatus.COMPLETED:
             return _error(400, f"Query in state {result.status.value}")
         filename = sanitize_filename(body.get("filename") or "export")
-
-        def stream() -> Iterator[bytes]:
-            try:
-                yield from stream_csv(result, MAX_EXPORT_BYTES)
-            except ExportTooLargeError:
-                # mid-stream abort: the transport closes the connection;
-                # matching the reference's CSVExportError behavior
-                raise
-
         return Response(
             status=200,
-            stream=stream(),
+            # past the cap the stream raises ExportTooLargeError mid-way and
+            # the transport closes the connection (reference CSVExportError)
+            stream=stream_csv(result, MAX_EXPORT_BYTES),
             media_type="text/csv",
             headers={
                 "Content-Disposition": f'attachment; filename="{filename}"'

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 
 from iceberg_explorer_spark.errors import ExportTooLargeError
 from iceberg_explorer_spark.lifecycle.models import QueryResult
+from iceberg_explorer_spark.observability import observe_call
 from iceberg_explorer_spark.service.convert import arrow_rows, csv_cell
 
 MAX_EXPORT_BYTES = 1_073_741_824  # 1 GB (reference config.py:110-114)
@@ -58,8 +59,6 @@ def stream_csv(
             if data:
                 yield data
 
-    from iceberg_explorer_spark.observability import observe_call
-
     # the span covers the full drain of the stream, not just generator
     # construction — correlated with the query that produced the result
     with observe_call("export.stream_csv"):
@@ -73,7 +72,5 @@ def stream_csv(
 def write_csv_distributed(df: DataFrame, path: str, header: bool = True) -> None:
     """Cluster-scale export: executors write partitioned CSV directly to
     storage — no driver bottleneck, no size cap needed."""
-    from iceberg_explorer_spark.observability import observe_call
-
     with observe_call("export.write_csv_distributed"):
         df.write.option("header", str(header).lower()).mode("overwrite").csv(path)

@@ -24,6 +24,8 @@ from typing import Callable, Optional
 
 from pyspark.sql import SparkSession
 
+from iceberg_explorer_spark.observability import observe_call
+
 HEALTHY = "healthy"
 DEGRADED = "degraded"
 UNHEALTHY = "unhealthy"
@@ -79,8 +81,6 @@ class HealthService:
         self.spark.catalog.listDatabases()
 
     def health(self) -> HealthReport:
-        from iceberg_explorer_spark.observability import observe_call
-
         with observe_call("health.check"):
             return self._health()
 

@@ -1,7 +1,8 @@
 """Mechanized window-rotation derivation (VERDICT r16 #2).
 
-The per-round check-window rotation in
-``iceberg_explorer_spark/operators/__init__.py`` follows a written rule:
+The per-round check-window rotation of ``_CHECK_WINDOW`` in
+``iceberg_explorer_spark/operators/__init__.py`` (pending plan: ROADMAP.md,
+"Smaller carry-overs") follows a written rule:
 
   window = flagship + the newest operators (first driver rows) + the
   stalest cohort (every query whose LATEST driver row is the oldest
@@ -10,8 +11,8 @@ The per-round check-window rotation in
 
 Round 16's hand-derived plan counted driver ROWS (red rows included) as
 "green rows" — the judge's one real r16 finding.  This script derives
-the cohorts from ``CORRECTNESS_r*.json`` directly so the ledger plan can
-quote its output and the judge can re-run it.
+the cohorts from ``CORRECTNESS_r*.json`` directly so a written plan can
+quote its output and anyone can re-run it.
 
 A driver row is GREEN iff it ran without error AND every applicable
 match flag is true:
@@ -204,7 +205,7 @@ def main() -> None:
         f" + {len(stalest)} stalest + {len(keep)} fill = "
         f"{flagship + args.newcomers + len(stalest) + len(keep)}"
     )
-    print("\n# leave-out list (paste into the ledger):")
+    print("\n# leave-out list (paste into the plan):")
     for q in out:
         print(f"#   {q}")
 

@@ -73,6 +73,25 @@ def test_execute_validation_400s(app):
     assert resp.status == 400
 
 
+def test_timeout_bounds_come_from_the_executor(app, spark):
+    """The 400 check reads the executor's bounds: a timeout the executor
+    would clamp is rejected, not silently shortened."""
+    from iceberg_explorer_spark.lifecycle.executor import QueryExecutor
+
+    narrow = ExplorerApp(spark, executor=QueryExecutor(spark, max_timeout=60))
+    body = {"sql": "SELECT 1", "timeout": 120}
+    resp = narrow.handle("POST", "/api/v1/query/execute", body=body)
+    assert resp.status == 400
+    assert resp.body == {"detail": "timeout must be between 10 and 60 seconds"}
+    # under the default executor the text keeps the reference's integers
+    resp = app.handle(
+        "POST", "/api/v1/query/execute", body={"sql": "SELECT 1", "timeout": 5}
+    )
+    assert resp.body == {"detail": "timeout must be between 10 and 3600 seconds"}
+    ok = app.handle("POST", "/api/v1/query/execute", body=body)
+    assert ok.status == 200
+
+
 def test_results_validation_and_404(app):
     ok = app.handle("POST", "/api/v1/query/execute", body={"sql": "SELECT 1 AS one"})
     qid = ok.body["query_id"]

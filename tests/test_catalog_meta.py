@@ -121,12 +121,6 @@ def test_table_schema_types(service):
     assert schema["l_shipdate"].type == "timestamp_ntz"
 
 
-def test_health(service):
-    report = service.health()
-    assert report["status"] == "healthy"
-    assert report["checks"]["engine"] == "healthy"
-
-
 def test_column_stats_from_parquet_footers(service, oracle):
     stats = {
         s.column: s

@@ -631,6 +631,31 @@ def test_cancel_one_while_others_complete(spark):
     ex.cleanup(qid)
 
 
+def test_eager_checkpoints_stay_in_callers_job_group(spark):
+    """A builder's concurrent eager checkpoints run on pool threads; their
+    jobs must stay in the caller's job group, or cancelJobGroup and the
+    executor timeout cannot reach them."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    from iceberg_explorer_spark.operators import QUERIES
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    group = "test-eager-checkpoints"
+
+    def build() -> None:
+        # a thread of its own, like an executor query: the group ends with it
+        sc.setJobGroup(group, "eager checkpoints under one group", True)
+        df = QUERIES["text_heldout_perplexity"].builder(spark, SF_DIR_SMALL)
+        df.write.format("noop").mode("overwrite").save()
+
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        pool.submit(build).result()
+    assert tracker.getJobIdsForGroup(group)
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
+
+
 def test_parallel_execute_and_stream(spark):
     """Execute-and-stream on competing threads: the NDJSON protocol for
     each query sees only that query's rows (registry lookups race-free)."""

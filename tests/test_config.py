@@ -1,61 +1,5 @@
-"""Config system: JSON + env matrix (mirrors reference tests/test_config.py)."""
-
-import json
-
-from iceberg_explorer_spark.config import load_settings
-
-
-def test_defaults():
-    s = load_settings(env={})
-    assert s.query.max_rows == 10_000
-    assert s.query.default_timeout == 300.0
-    assert s.export.max_size_bytes == 1_073_741_824
-    assert s.catalog.type == "hadoop"
-
-
-def test_json_file(tmp_path):
-    cfg = tmp_path / "cfg.json"
-    cfg.write_text(
-        json.dumps(
-            {
-                "query": {"max_rows": 500},
-                "catalog": {"type": "rest", "uri": "http://cat:8181"},
-            }
-        )
-    )
-    s = load_settings(path=str(cfg), env={})
-    assert s.query.max_rows == 500
-    assert s.catalog.type == "rest"
-    assert s.catalog.uri == "http://cat:8181"
-    assert s.query.default_timeout == 300.0  # untouched sections keep defaults
-
-
-def test_env_overrides(tmp_path):
-    cfg = tmp_path / "cfg.json"
-    cfg.write_text(json.dumps({"query": {"max_rows": 500}}))
-    env = {
-        "IES_QUERY__MAX_ROWS": "77",
-        "IES_QUERY__DEFAULT_TIMEOUT": "42.5",
-        "IES_CATALOG__NAME": "prod",
-        "IES_UNKNOWN__KEY": "ignored",
-    }
-    s = load_settings(path=str(cfg), env=env)
-    assert s.query.max_rows == 77  # env beats file
-    assert s.query.default_timeout == 42.5
-    assert s.catalog.name == "prod"
-
-
-def test_env_config_path(tmp_path):
-    cfg = tmp_path / "via_env.json"
-    cfg.write_text(json.dumps({"export": {"max_size_bytes": 123}}))
-    s = load_settings(env={"ICEBERG_EXPLORER_SPARK_CONFIG": str(cfg)})
-    assert s.export.max_size_bytes == 123
-
-
-# ---------------------------------------------------------------------------
-# Session-conf pin: documented side effect of load_table on caller sessions
-# (README / session.build_session docstring) — idempotent and restorable.
-# ---------------------------------------------------------------------------
+"""Session-conf pin: documented side effect of load_table on caller sessions
+(README / session.build_session docstring) — idempotent and restorable."""
 
 _PIN_KEYS = ("spark.sql.session.timeZone", "spark.sql.ansi.enabled")
 

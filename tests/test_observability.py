@@ -52,7 +52,7 @@ def test_rejected_sql_emits_no_span(executor):
     increments active_queries only after validation too."""
     with pytest.raises(InvalidSQLError):
         executor.execute("DROP TABLE x")
-    assert executor.observer.recorder.spans == []
+    assert not executor.observer.recorder.spans
 
 
 def test_metrics_accumulate_across_queries(executor):
@@ -62,6 +62,22 @@ def test_metrics_accumulate_across_queries(executor):
     assert rec.query_rows_returned == 8
     assert len(rec.query_duration_seconds) == 2
     assert [s.status for s in rec.spans] == ["ok", "ok"]
+
+
+def test_recorder_keeps_only_the_newest_spans():
+    """A long-lived session holds at most MAX_RECORDED spans and duration
+    samples; the oldest drop first."""
+    from iceberg_explorer_spark.observability import MAX_RECORDED, SpanRecord
+
+    rec = Recorder()
+    for i in range(2 * MAX_RECORDED):
+        rec.add_span(SpanRecord(name="s", query_id=str(i)))
+        rec.record_duration(float(i))
+    assert len(rec.spans) == MAX_RECORDED
+    assert len(rec.query_duration_seconds) == MAX_RECORDED
+    assert rec.spans[-1].query_id == str(2 * MAX_RECORDED - 1)
+    assert rec.spans[0].query_id == str(MAX_RECORDED)
+    assert rec.query_duration_seconds[-1] == 2 * MAX_RECORDED - 1
 
 
 def test_active_gauge_increments_during_execution(spark):

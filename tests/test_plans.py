@@ -183,11 +183,17 @@ def test_bucketed_join_no_shuffle(spark):
     """Co-located bucketed tables join WITHOUT any exchange: the standing-
     workload shape for fact⋈fact joins (SCALE.md). Both sides bucketed+
     sorted by the join key → SortMergeJoin, zero shuffles."""
-    from iceberg_explorer_spark.sources.bucketing import write_bucketed
+    from iceberg_explorer_spark.sources.layout import bucketed_write
+    from iceberg_explorer_spark.sources.registry import load_table
 
-    lo = write_bucketed(spark, SF_DIR_SMALL, "orders", "o_orderkey", 8)
+    lo, li = "bucketed_orders", "bucketed_lineitem"
+    bucketed_write(
+        spark, load_table(spark, SF_DIR_SMALL, "orders"), lo, "o_orderkey", 8
+    )
     try:
-        li = write_bucketed(spark, SF_DIR_SMALL, "lineitem", "l_orderkey", 8)
+        bucketed_write(
+            spark, load_table(spark, SF_DIR_SMALL, "lineitem"), li, "l_orderkey", 8
+        )
         lt = spark.table(lo).hint("merge")
         rt = spark.table(li)
         df = lt.join(rt, lt.o_orderkey == rt.l_orderkey)
@@ -197,7 +203,7 @@ def test_bucketed_join_no_shuffle(spark):
         assert df.count() > 0
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {lo}")
-        spark.sql("DROP TABLE IF EXISTS bucketed_lineitem")
+        spark.sql(f"DROP TABLE IF EXISTS {li}")
 
 
 def test_explode_word_frequencies_combines_before_shuffle(spark):
@@ -386,7 +392,7 @@ def test_bucketed_digest_probe_no_history_shuffle(spark, tmp_path):
     from iceberg_explorer_spark.sources.registry import load_table
 
     # bucket count sized to the session shuffle width — the production
-    # rule (sources/bucketing.py: "choose n_buckets ≈ cluster cores").
+    # rule (sources/layout.py: "choose n_buckets ≈ cluster cores").
     # With FEWER buckets than the shuffle width the probe still never
     # moves history into ITS join (the batch side aligns to the bucket
     # count), but the downstream bmin join re-widens the joined output,
