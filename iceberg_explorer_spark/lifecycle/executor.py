@@ -224,10 +224,6 @@ class QueryExecutor:
                     if result.metrics.end_time is None:
                         result.metrics.complete(0)
             finally:
-                try:
-                    self.spark.sparkContext.clearJobGroup()
-                except Exception:
-                    pass
                 done.set()
 
         worker = threading.Thread(target=run, daemon=True, name=f"query-{group}")

@@ -15,7 +15,7 @@ this module is the executable witness for the parquet half of the claim
   plus the cross-modal pair-key table for the fourth sibling and the
   SimHash signature table for the fifth);
 - :func:`incremental_status_from_artifacts` reruns the full
-  exact→near→semantic waterfall reading history ONLY from those files
+  exact→near→semantic waterfall reading history ONLY from those tables
   (history document text and embedding vectors are never touched — the
   batch slice is the only table data read beyond the artifacts);
 - :func:`incremental_paired_from_artifacts` is the pair-modality twin:
@@ -31,7 +31,7 @@ this module is the executable witness for the parquet half of the claim
 
 Equality with the in-session path is pinned by
 ``tests/test_properties.py::test_incremental_artifact_round_trip``. The
-candidate-restriction arguments that make the file path EXACT (not
+candidate-restriction arguments that make the artifact path EXACT (not
 approximate):
 
 - exact stage: ``seen`` is a membership probe against the digest
@@ -69,16 +69,19 @@ forever, its edges read batch-batch, the spine restriction dropped
 them, and the day-2 doc would have scored novel. Pinned by
 ``tests/test_properties.py::test_incremental_artifacts_two_day_operation``.
 
-Layout (round 13 — closes VERDICT r12 #2/#3): every entry point accepts
-either a plain parquet directory (``art_dir: str``) or a
-:class:`BucketedArtifactStore` — the six artifacts as managed tables
-bucketed+sorted by their PROBE keys (``ARTIFACT_BUCKET_KEYS``). The
-bucketed layout is what the operator docstrings' "bucketed digest
-artifact" claim refers to: probes read the corpus-sized artifact side
-with no exchange (plan-pinned), appends land at most one file per
-bucket, and :meth:`BucketedArtifactStore.compact` bounds the
-post-append small-file pile-up back to one file per bucket in the same
-spec (round-trip-pinned through a full cycle).
+Layout: one. Every entry point takes a :class:`BucketedArtifactStore`
+— the six artifacts as managed tables bucketed+sorted by their PROBE
+keys (``ARTIFACT_BUCKET_KEYS``). That is what the operator docstrings'
+"bucketed digest artifact" claim refers to: probes read the
+corpus-sized artifact side with no exchange (plan-pinned), appends land
+at most one file per bucket, and :meth:`BucketedArtifactStore.compact`
+bounds the post-append small-file pile-up back to one file per bucket
+in the same spec (round-trip-pinned through a full cycle). The persisted
+index families (IVF, IVF-PQ, BQ, MRL in ``similarity.py``; LM, BM25 in
+``text.py``) are the same store built with their own
+``<FAMILY>_STORE_ARTIFACTS`` spec, so every persisted artifact has one
+backfill-first check (:meth:`BucketedArtifactStore.require`) and one
+serve read (:meth:`BucketedArtifactStore.serve_tables`).
 
 reference: no analogue — training-pipeline extension surface; the
 discipline demand is this repo's own (SCALE.md round-11).
@@ -86,8 +89,8 @@ discipline demand is this repo's own (SCALE.md round-11).
 
 from __future__ import annotations
 
-import os
 import threading
+import weakref
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -103,10 +106,10 @@ from iceberg_explorer_spark.sources.registry import load_table
 #: granularity would buy nothing but a chance to get the keying wrong.
 _STORE_LOCK = threading.RLock()
 
-#: artifact name -> parquet subdirectory. "pairs" is the cross-modal
-#: (ahash, caption_fp) key table — the fourth incremental sibling's
-#: history side (dedup_incremental_paired); "simhash" is the (doc_id,
-#: simhash) signature table — the fifth sibling's
+#: the incremental-dedup artifacts, in write order. "pairs" is the
+#: cross-modal (ahash, caption_fp) key table — the fourth incremental
+#: sibling's history side (dedup_incremental_paired); "simhash" is the
+#: (doc_id, simhash) signature table — the fifth sibling's
 #: (dedup_incremental_simhash, round 13; band rows derive from it in
 #: one map, so the signature table is the whole history side).
 ARTIFACT_NAMES = ("digests", "shingles", "bands", "srp", "pairs", "simhash")
@@ -139,13 +142,47 @@ ARTIFACT_BUCKET_KEYS = {
 _BATCH_COL = "__append_batch_id"
 
 
-class BucketedArtifactStore:
-    """The six incremental artifacts as bucketed+sorted managed tables
-    (``{prefix}_{name}``, bucketed by ``ARTIFACT_BUCKET_KEYS``) instead
-    of plain parquet paths. Every entry point in this module accepts a
-    store wherever it accepts an ``art_dir`` — same rows, same
-    waterfall, different layout contract:
+#: One configured serve clone per underlying SparkSession: a
+#: ``spark.newSession()`` per serve would leak a cloned session's
+#: JVM-side state in a long-lived serving process. WeakKeyDictionary so
+#: the cache never keeps a stopped caller session alive; creation is
+#: serialized (the service layer serves on concurrent threads). The
+#: clone carries ONLY the scan-strategy conf — serves resolve tables by
+#: DATABASE-QUALIFIED name instead of mutating the shared clone's current
+#: database per call, which would race concurrent serves against stores
+#: in different databases.
+_SERVE_SESSIONS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+_SERVE_LOCK = threading.Lock()
 
+
+def _serve_session(spark: SparkSession) -> SparkSession:
+    with _SERVE_LOCK:
+        s = _SERVE_SESSIONS.get(spark)
+        if s is None:
+            s = spark.newSession()
+            s.conf.set(
+                "spark.sql.sources.bucketing.autoBucketedScan.enabled",
+                "false",
+            )
+            _SERVE_SESSIONS[spark] = s
+        return s
+
+
+class BucketedArtifactStore:
+    """The one persisted-artifact mechanism: named artifacts as
+    bucketed+sorted managed tables (``{prefix}_{name}``, each bucketed
+    by its probe key from the ``artifacts`` spec; default the
+    incremental-dedup six of ``ARTIFACT_BUCKET_KEYS``). The index
+    families build it with their own spec, e.g.
+    ``BucketedArtifactStore(spark, prefix, n, artifacts=IVF_STORE_ARTIFACTS)``.
+
+    - BACKFILL FIRST: :meth:`write` is the one-time backfill;
+      :meth:`require` is the one existence check, and :meth:`append`
+      runs it on its target, so no append can create a table that
+      would hold only the increment;
+    - SERVE: :meth:`serve_tables` is the one serve read — heal, refresh
+      and read the tables on a cached clone session with forced
+      bucketed scans, so probe filters bucket-prune;
     - WRITE/APPEND land pre-hash-partitioned (the writer repartitions
       by the bucket key first, so each append adds at most one file per
       bucket instead of one per write task);
@@ -163,14 +200,7 @@ class BucketedArtifactStore:
 
     The Iceberg-native equivalent is a ``bucket(N, key)`` partition
     transform plus rewrite_data_files; this is the catalog-agnostic
-    Spark form (same contract as sources/layout.py::bucketed_write).
-
-    The store is generic over an ``artifacts`` spec (name -> bucket key
-    columns); the incremental-dedup six above are the default. The
-    similarity family instantiates it with its IVF list artifact
-    (``similarity.IVF_STORE_ARTIFACTS`` — bucketed by ``cid``, the
-    serve-time probe key, so a query's probe scan bucket-prunes to its
-    nprobe lists)."""
+    Spark form (same contract as sources/layout.py::bucketed_write)."""
 
     def __init__(
         self,
@@ -253,6 +283,44 @@ class BucketedArtifactStore:
         self._recover_interrupted_compaction(name)
         return self.spark.catalog.tableExists(self.table_name(name))
 
+    def require(self, *names: str) -> None:
+        """The backfill-first check: raise FileNotFoundError naming every
+        table of ``names`` that does not exist. Appends and the index
+        families' appends call it on their commit marker — an append
+        onto a missing table would create one holding ONLY the
+        increment, which every later read takes for the whole corpus.
+        Heals an interrupted compaction first (via :meth:`exists`), so
+        that crash state never reads as "backfill never ran"."""
+        missing = [self.table_name(n) for n in names if not self.exists(n)]
+        if missing:
+            raise FileNotFoundError(
+                f"artifact table(s) {missing} not found — run the "
+                "one-time backfill before appending an increment"
+            )
+
+    def serve_tables(self, *names: str) -> "list[DataFrame]":
+        """The serve read: the named tables on the cached serve clone of
+        the store's session, whose auto bucketed-scan heuristic is off.
+        Left on, the planner sees nothing downstream that needs the
+        bucket distribution, plans a plain file scan and drops bucket
+        PRUNING with it (the same subtlety :meth:`compact` documents).
+        Each table is healed first (recovery lives on the store's entry
+        points; the clone bypasses them) and refreshed — the clone
+        caches file listings across serves while appends land on the
+        store's session. Names are database-QUALIFIED from the store
+        session's current database at call time, so concurrent serves
+        against stores in different databases cannot race. The provenance
+        column stays in the frames; serves select their columns."""
+        s = _serve_session(self.spark)
+        db = self.spark.catalog.currentDatabase()
+        out = []
+        for name in names:
+            self._recover_interrupted_compaction(name)
+            t = f"`{db}`.`{self.table_name(name)}`"
+            s.catalog.refreshTable(t)
+            out.append(s.table(t))
+        return out
+
     def read(self, name: str) -> DataFrame:
         # drop the per-append provenance column: artifact consumers see
         # exactly the artifact's fact columns (unions/distinct/plan pins
@@ -323,8 +391,12 @@ class BucketedArtifactStore:
         protocol to merge it — the Iceberg-native form of this store
         gets that from rewrite_data_files).
 
-        ``batch_id`` is the idempotence handle (r14 — the store's
-        retried-append gap, VERDICT r13 #4): pass the ingest batch's
+        BACKFILL-FIRST: the target table must exist (:meth:`require`,
+        with or without ``batch_id``) — an append-created table would
+        hold ONLY the increment, and every reader would treat it as the
+        whole corpus.
+
+        ``batch_id`` is the idempotence handle: pass the ingest batch's
         stable id (e.g. the night's partition date) and a REPLAYED
         append of the same batch is a no-op — the store probes the
         artifact's provenance column for the id first and skips the
@@ -339,20 +411,10 @@ class BucketedArtifactStore:
         atomicity unit here (file moves are per-task), so the window is
         the commit phase itself, not the whole job; Iceberg's atomic
         snapshot commit is the form that closes it completely. Without
-        ``batch_id`` the append is the pre-r14 non-transactional write
-        (retries must re-run from the pre-append snapshot).
+        ``batch_id`` the append is a non-transactional write (retries
+        must re-run from the pre-append snapshot).
 
-        BACKFILL-FIRST (r15, ADVICE r14): a ``batch_id`` append onto a
-        table that does not exist raises — it would skip the replay
-        probe and CREATE an increment-only table that readers would
-        treat as the whole corpus. The gate lives here at the store
-        layer so future artifact specs inherit it instead of each
-        caller re-implementing the existence check (the index stores'
-        r14 commit-marker gates remain as their richer, marker-aware
-        versions). Id-LESS appends keep CREATE-on-append (legacy
-        convenience; no replay probe to corrupt).
-
-        EMPTY batches (r15, ADVICE r14): an increment with no rows
+        EMPTY batches: an increment with no rows
         lands no provenance, so without special handling its replay
         would read as first-landed (True) forever — a silent contract
         degradation for zero-row nights. The store therefore
@@ -367,48 +429,19 @@ class BucketedArtifactStore:
         most the frame's first-row computation — which the write was
         about to pay anyway."""
         with _STORE_LOCK:
-            self._recover_interrupted_compaction(name)
-            t = self.table_name(name)
-            legacy = False
-            if self.spark.catalog.tableExists(t):
-                tbl = self.spark.table(t)
-                legacy = _BATCH_COL not in tbl.columns
-                if legacy and batch_id is not None:
-                    raise ValueError(
-                        f"artifact table {t} predates the provenance "
-                        f"column {_BATCH_COL!r}; re-run the backfill "
-                        "(write) to upgrade before idempotent appends"
-                    )
-                if batch_id is not None and (
-                    tbl.select(_BATCH_COL)
+            self.require(name)
+            if batch_id is not None:
+                if (
+                    self.spark.table(self.table_name(name))
+                    .select(_BATCH_COL)
                     .filter(F.col(_BATCH_COL) == batch_id)
                     .limit(1)
                     .count()
                 ):
                     return False  # replay of an already-landed batch
-            elif batch_id is not None:
-                # backfill-first at the STORE layer (r15, ADVICE r14):
-                # an idempotent append onto a table that does not exist
-                # would skip the replay probe and CREATE an
-                # increment-only table that every reader treats as the
-                # corpus — the hazard the r14 review closed at the
-                # index-store callers, now inherited by any future
-                # artifact spec instead of re-remembered per caller.
-                raise ValueError(
-                    f"artifact table {t} does not exist — run the "
-                    "backfill (write) before idempotent appends; an "
-                    "append-created table would hold ONLY the increment"
-                )
-            if batch_id is not None and df.isEmpty():
-                return True  # vacuously landed; unrecorded by design
-            self._write(
-                name,
-                # a pre-column table keeps its schema (a stamped frame
-                # would fail the append's schema check); every table
-                # this repo backfills carries the column
-                df if legacy else self._stamped(name, df, batch_id),
-                "append",
-            )
+                if df.isEmpty():
+                    return True  # vacuously landed; unrecorded by design
+            self._write(name, self._stamped(name, df, batch_id), "append")
             return True
 
     def _location(self, name: str) -> str:
@@ -609,17 +642,15 @@ def _artifact_frames(
 def write_incremental_artifacts(
     spark: SparkSession,
     sf_dir: str,
-    out_dir: "str | BucketedArtifactStore",
+    store: BucketedArtifactStore,
     batch_pred=None,
 ) -> dict[str, int]:
     """Derive the six history artifacts (``ARTIFACT_NAMES``) from the
-    corpus at ``sf_dir`` and write them under ``out_dir``; returns row
+    corpus at ``sf_dir`` and write them to ``store``; returns row
     counts per artifact. This is the one-time backfill a production
-    pipeline runs ONCE — every nightly ingest after it reads these files
-    and appends to them. History is everything ``batch_pred`` does NOT
-    select (default: the id-parity fixture). ``out_dir`` may be a
-    :class:`BucketedArtifactStore` — same rows, probe-key-bucketed
-    layout (the 100 TB default)."""
+    pipeline runs ONCE — every nightly ingest after it reads these
+    tables and appends to them. History is everything ``batch_pred``
+    does NOT select (default: the id-parity fixture)."""
     from iceberg_explorer_spark.operators.similarity import _load_emb
 
     pred = _resolve_pred(batch_pred)
@@ -631,26 +662,21 @@ def write_incremental_artifacts(
     )
     counts: dict[str, int] = {}
     for name, df in frames.items():
-        if isinstance(out_dir, BucketedArtifactStore):
-            out_dir.write(name, df)
-            counts[name] = out_dir.read(name).count()
-        else:
-            path = os.path.join(out_dir, f"{name}.parquet")
-            df.write.mode("overwrite").parquet(path)
-            counts[name] = spark.read.parquet(path).count()
+        store.write(name, df)
+        counts[name] = store.read(name).count()
     return counts
 
 
 def incremental_status_from_artifacts(
     spark: SparkSession,
     sf_dir: str,
-    art_dir: "str | BucketedArtifactStore",
+    store: BucketedArtifactStore,
     batch_pred=None,
 ) -> DataFrame:
     """(doc_id, source, stage) for every batch doc — the SAME waterfall as
     ``pipeline.incremental_status`` (shared assembly tail, shared stage
-    definitions) with history read ONLY from the parquet artifacts under
-    ``art_dir``. The only non-artifact reads are the batch slices of
+    definitions) with history read ONLY from the artifacts in
+    ``store``. The only non-artifact reads are the batch slices of
     documents/embeddings; per-ingest cost is O(batch + artifact probes),
     never a corpus re-scan.
 
@@ -684,11 +710,6 @@ def incremental_status_from_artifacts(
         _coded_vectors,
         _load_emb,
     )
-
-    def _read(name: str) -> DataFrame:
-        if isinstance(art_dir, BucketedArtifactStore):
-            return art_dir.read(name)
-        return spark.read.parquet(os.path.join(art_dir, f"{name}.parquet"))
 
     pred = _resolve_pred(batch_pred)
     batch_docs = load_table(spark, sf_dir, "documents").filter(
@@ -730,7 +751,7 @@ def incremental_status_from_artifacts(
     # slice IS the batch, so the flag helper must not re-filter by any
     # id rule (_all_batch)
     flags = incremental_exact_flags(
-        batch_docs, history_digests=_read("digests"), batch_pred=_all_batch
+        batch_docs, history_digests=store.read("digests"), batch_pred=_all_batch
     ).localCheckpoint(eager=True)
 
     # near: tokenize ONLY the batch; history shingles/bands are files.
@@ -755,14 +776,14 @@ def incremental_status_from_artifacts(
     # shared definitions, so distinct restores exactly the
     # one-row-per-fact tables every downstream stage documents.
     touched_bands = (
-        _read("bands")
+        store.read("bands")
         .join(bkeys, ["band", "bkey"], "left_semi")
         .unionByName(bands_batch)
         .distinct()
     )
     cands = pairs_from_band_rows(touched_bands).select("doc_a", "doc_b")
     bc = _touching(cands, "doc_a", "doc_b")
-    sh_union = _read("shingles").unionByName(sh_batch).distinct()
+    sh_union = store.read("shingles").unionByName(sh_batch).distinct()
     be = (
         jaccard_verify(bc, sh_union, threshold=INCR_NEAR_TAU)
         .select(F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b"))
@@ -778,7 +799,7 @@ def incremental_status_from_artifacts(
     # one row per id is the whole fact); a duplicated id inside a GEMM
     # bucket would otherwise emit a cos=1.0 self-edge per re-ingest
     touched_srp = (
-        _read("srp")
+        store.read("srp")
         .join(coded_batch.select("bucket").distinct(), "bucket", "left_semi")
         .unionByName(coded_batch)
         .dropDuplicates(["vec_id"])
@@ -817,7 +838,10 @@ def incremental_status_from_artifacts(
 
 
 def incremental_paired_from_artifacts(
-    spark: SparkSession, sf_dir: str, art_dir: str, batch_pred=None
+    spark: SparkSession,
+    sf_dir: str,
+    store: BucketedArtifactStore,
+    batch_pred=None,
 ) -> DataFrame:
     """``dedup_incremental_paired``'s report with history read ONLY from
     the persisted pair-key artifact — the fourth sibling's file-probed
@@ -849,11 +873,7 @@ def incremental_paired_from_artifacts(
     batch_keys = paired_pair_keys(
         repartition_for_compute(batch_docs)
     ).localCheckpoint(eager=True)
-    hist_keys = (
-        art_dir.read("pairs")
-        if isinstance(art_dir, BucketedArtifactStore)
-        else spark.read.parquet(os.path.join(art_dir, "pairs.parquet"))
-    ).select("ahash", "caption_fp")
+    hist_keys = store.read("pairs").select("ahash", "caption_fp")
     # the key frame IS the batch (sliced above) — no id rule in the
     # shared flags helper
     flags = incremental_seen_canon_flags(
@@ -952,7 +972,7 @@ def simhash_cls_from_history(
 def incremental_simhash_from_artifacts(
     spark: SparkSession,
     sf_dir: str,
-    art_dir: "str | BucketedArtifactStore",
+    store: BucketedArtifactStore,
     batch_pred=None,
 ) -> DataFrame:
     """``dedup_incremental_simhash``'s report with history read ONLY
@@ -969,25 +989,20 @@ def incremental_simhash_from_artifacts(
     batch_docs = load_table(spark, sf_dir, "documents").filter(
         pred(F.col("doc_id"))
     )
-    hist = (
-        art_dir.read("simhash")
-        if isinstance(art_dir, BucketedArtifactStore)
-        else spark.read.parquet(os.path.join(art_dir, "simhash.parquet"))
-    )
     return component_cls_report(
-        simhash_cls_from_history(batch_docs, hist), "simdup"
+        simhash_cls_from_history(batch_docs, store.read("simhash")), "simdup"
     )
 
 
 def append_incremental_artifacts(
     spark: SparkSession,
     sf_dir: str,
-    art_dir: "str | BucketedArtifactStore",
+    store: BucketedArtifactStore,
     status: DataFrame,
     batch_pred=None,
     batch_id: "str | None" = None,
 ) -> dict[str, int]:
-    """Append the kept batch docs' artifact rows under ``art_dir``.
+    """Append the kept batch docs' artifact rows to ``store``.
     The first four artifacts are exactly the write side
     ``pipeline_incremental_artifact_delta`` bills: one digest row per
     kept doc, its distinct (doc_id, hb) shingle rows, N_BANDS band rows
@@ -1007,54 +1022,22 @@ def append_incremental_artifacts(
     Returns appended row counts per artifact, counted from the
     increment frames THEMSELVES (batch-sized, checkpointed so count
     and write share one execution) — never by re-scanning the grown
-    artifact files: per-ingest cost stays O(batch + artifact probes),
-    and a concurrent writer cannot corrupt the bill. The file-level
-    proof that the append physically landed lives where verification
-    belongs, in the round-trip test's before/after file counts.
-    History rows are never rewritten — parquet append mode.
+    artifact tables: per-ingest cost stays O(batch + artifact probes),
+    and a concurrent writer cannot corrupt the bill. The proof that the
+    append physically landed lives where verification belongs, in the
+    round-trip tests' before/after row counts. History rows are never
+    rewritten.
 
-    ``batch_id`` (store layout only): the night's stable ingest id,
-    handed to :meth:`BucketedArtifactStore.append` per artifact — a
-    RETRIED nightly run replays each already-landed artifact as a
-    no-op (its count reports 0) and lands only the ones the crashed
-    run missed, so a crash between the six appends heals on replay
-    instead of double-counting the landed prefix. The plain-directory
-    layout has no provenance column and keeps the pre-r14 rule
-    (retries re-run from the pre-append snapshot)."""
+    ``batch_id``: the night's stable ingest id, handed to
+    :meth:`BucketedArtifactStore.append` per artifact — a RETRIED
+    nightly run replays each already-landed artifact as a no-op (its
+    count reports 0) and lands only the ones the crashed run missed, so
+    a crash between the six appends heals on replay instead of
+    double-counting the landed prefix. All six tables must exist
+    (:func:`write_incremental_artifacts` first)."""
     from iceberg_explorer_spark.operators.similarity import _load_emb
 
-    # probe through Spark's reader, not the driver's local filesystem —
-    # art_dir may be s3a://... / hdfs://... in the nightly job this
-    # module models (a metadata-only schema read, no data scan). Only
-    # the analysis-time path-not-found is "missing"; auth failures,
-    # corrupt footers and FS outages must surface as themselves, or the
-    # error message would instruct the operator to re-run the backfill
-    # OVERWRITE against data that exists.
-    from pyspark.errors import AnalysisException
-
-    missing = []
-    for n in ARTIFACT_NAMES:
-        if isinstance(art_dir, BucketedArtifactStore):
-            if not art_dir.exists(n):
-                missing.append(n)
-            continue
-        try:
-            spark.read.parquet(os.path.join(art_dir, f"{n}.parquet")).schema
-        except AnalysisException as exc:
-            # PATH_NOT_FOUND alone means "backfill never ran". Anything
-            # else — e.g. UNABLE_TO_INFER_SCHEMA from a directory a
-            # crashed append left empty — must propagate: advising a
-            # re-backfill there would mode('overwrite') the four intact
-            # artifacts' appended history.
-            if exc.getCondition() != "PATH_NOT_FOUND":
-                raise
-            missing.append(n)
-    if missing:
-        raise FileNotFoundError(
-            f"artifacts {missing} not found under {art_dir} — run "
-            "write_incremental_artifacts (the one-time backfill) before "
-            "appending an increment"
-        )
+    store.require(*ARTIFACT_NAMES)
     pred = _resolve_pred(batch_pred)
     kept = status.filter(F.col("stage") == "kept").select("doc_id")
     frames = _artifact_frames(
@@ -1072,11 +1055,6 @@ def append_incremental_artifacts(
         # batch-sized increment once and serve both from the blocks
         df = df.localCheckpoint(eager=True)
         appended[name] = df.count()
-        if isinstance(art_dir, BucketedArtifactStore):
-            if not art_dir.append(name, df, batch_id=batch_id):
-                appended[name] = 0  # replayed batch: nothing landed
-        else:
-            df.write.mode("append").parquet(
-                os.path.join(art_dir, f"{name}.parquet")
-            )
+        if not store.append(name, df, batch_id=batch_id):
+            appended[name] = 0  # replayed batch: nothing landed
     return appended

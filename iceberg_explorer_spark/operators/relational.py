@@ -1460,9 +1460,11 @@ def market_basket_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitions (guide §2.5: the estimate cannot see the B²/2 blowup
     # downstream). Spread the narrow post-agg frame before the
     # expansion — repartition_for_compute's scan-width guard makes this
-    # a no-op at real scale, where the basket table is naturally wide
-    # and AQE's byte-based sizing is correct. Measured r18 (interleaved
-    # min): see OPTIMIZATION_r18.md.
+    # a no-op once the basket table is naturally wide. The blowup per
+    # basket is bounded by the size filter above: at most
+    # MAX_BASKET·(MAX_BASKET−1)/2 = 1,225 pairs. Whether AQE's
+    # byte-based sizing is right at real scale is not measured.
+    # Measured r18 at test SF (interleaved min): see OPTIMIZATION_r18.md.
     from iceberg_explorer_spark.sources.registry import (
         repartition_for_compute,
     )

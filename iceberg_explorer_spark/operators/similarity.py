@@ -858,10 +858,12 @@ def similarity_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 # query — correct for an oracle-bearing registry query, wrong as a serving
 # story: a production index is built ONCE (and appended to nightly, like
 # the dedup artifacts) and every query reads only its probed lists. These
-# functions are that story's executable witness, reusing the SAME
-# BucketedArtifactStore machinery the incremental-dedup family hardened
-# this round (pre-hash-partitioned appends, spec-preserving compaction,
-# crash recovery) with the similarity family's own artifact spec.
+# functions are that story's executable witness, on the SAME
+# BucketedArtifactStore the incremental-dedup family uses
+# (pre-hash-partitioned appends, spec-preserving compaction, crash
+# recovery, the backfill-first check, the serve read), built with the
+# similarity family's own artifact spec:
+# ``BucketedArtifactStore(spark, prefix, n, artifacts=IVF_STORE_ARTIFACTS)``.
 
 #: The similarity family's artifact spec: the persisted IVF index is
 #: TWO tables. ``ivf_lists`` — (vec_id, cid, nvec): every
@@ -878,15 +880,48 @@ def similarity_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 IVF_STORE_ARTIFACTS = {"ivf_lists": ("cid",), "ivf_centroids": ("cid",)}
 
 
-def ivf_store(spark: SparkSession, prefix: str, n_buckets: int = 16):
-    """A BucketedArtifactStore instantiated with the IVF artifact spec."""
-    from iceberg_explorer_spark.operators.incremental_artifacts import (
-        BucketedArtifactStore,
+def _write_centroids(store, emb: DataFrame) -> None:
+    """Persist the K coarse centroids (the seed rows vec_id < IVF_K of a
+    normalized frame) as ``ivf_centroids`` — the model artifact the IVF
+    and IVF-PQ backfills write FIRST, before their commit marker."""
+    store.write(
+        "ivf_centroids",
+        emb.filter(F.col("vec_id") < IVF_K).select(
+            F.col("vec_id").alias("cid"), F.col("ne").alias("cvec")
+        ),
     )
 
-    return BucketedArtifactStore(
-        spark, prefix, n_buckets, artifacts=IVF_STORE_ARTIFACTS
+
+def _checked_increment(
+    store, marker: str, new_emb: DataFrame
+) -> "tuple[DataFrame, DataFrame]":
+    """(increment, centroids) for an IVF or IVF-PQ append: the backfill
+    must have committed ``marker``; the contract-filtered, normalized
+    increment is materialized EAGERLY before the reserved-range check,
+    so the check and the append read ONE snapshot (otherwise they are
+    two jobs over the same lazy frame, and a non-deterministic or
+    changing source could pass the limit(1) probe yet materialize
+    reserved-range rows in the append — silently shadowing a persisted
+    centroid). Increment vec_ids inside the reserved centroid range
+    [0, IVF_K) are refused loudly: two vectors for one cid would
+    corrupt the centroid set every later serve and append ranks
+    against. Global id newness is the ingest pipeline's id-allocation
+    invariant, as for the dedup artifacts' doc_ids."""
+    store.require(marker)
+    inc = _with_normalized(_apply_emb_contract(new_emb)).localCheckpoint(
+        eager=True
     )
+    # limit(1) short-circuits: one increment-sized probe, no full count
+    if inc.filter(F.col("vec_id") < IVF_K).limit(1).count():
+        raise ValueError(
+            f"increment contains vec_ids in the reserved centroid range "
+            f"[0, {IVF_K}) — appending them would shadow the persisted "
+            "centroids"
+        )
+    cents = store.read("ivf_centroids").select(
+        "cid", F.col("cvec").alias("ce")
+    )
+    return inc, cents
 
 
 def ivf_backfill_lists(spark: SparkSession, sf_dir: str, store) -> None:
@@ -903,12 +938,7 @@ def ivf_backfill_lists(spark: SparkSession, sf_dir: str, store) -> None:
     (re-run overwrites both) instead of an index whose serves and
     appends all fail on a missing centroid table."""
     emb = _with_normalized(_load_emb(spark, sf_dir))
-    store.write(
-        "ivf_centroids",
-        emb.filter(F.col("vec_id") < IVF_K).select(
-            F.col("vec_id").alias("cid"), F.col("ne").alias("cvec")
-        ),
-    )
+    _write_centroids(store, emb)
     lists = (
         _ivf_ranked(emb)
         .filter(F.col("rn") == 1)
@@ -929,99 +959,24 @@ def ivf_append_lists(
     the dedup artifacts. History vectors are never re-read or
     re-assigned.
 
-    Contract: increment vec_ids must be globally NEW and outside the
-    reserved centroid range [0, IVF_K). The range half is enforced here
-    with a loud error — a collision inside it would silently corrupt
-    the centroid set every later serve and append ranks against (two
-    vectors for one cid). Global newness is the ingest pipeline's
-    id-allocation invariant, same as the dedup artifacts' doc_ids.
+    Contract (``_checked_increment``): the backfill's commit marker
+    ``ivf_lists`` exists, and increment vec_ids are globally NEW and
+    outside the reserved centroid range [0, IVF_K).
 
     ``batch_id``: the night's stable ingest id, handed to the store's
-    idempotent append (r14) — a RETRIED append of the same batch
-    replays as a no-op (returns False; the store probes its provenance
-    column for the id before landing rows) instead of double-counting
-    list members. Without it the append keeps the pre-r14
-    non-transactional rule (retries re-run from the pre-append
-    snapshot); the Iceberg-native form of the store gets
-    replace-by-filter for this. Returns True iff rows landed."""
-    if not store.exists("ivf_lists"):
-        # the list table is the backfill's COMMIT MARKER: appending
-        # here would saveAsTable-CREATE an increment-only table that
-        # every later serve silently treats as the whole index (review
-        # r14 finding — the dedup-six path has the same gate)
-        raise FileNotFoundError(
-            "ivf_lists artifact not found — run ivf_backfill_lists (the "
-            "one-time index build) before appending an increment"
-        )
-    # Eagerly materialize the contract-filtered increment BEFORE the
-    # range check (ADVICE r13): the check and the append are otherwise
-    # two separate Spark jobs over the same lazy frame, and a
-    # non-deterministic or concurrently-changing source could pass the
-    # limit(1) probe yet materialize reserved-range rows in the append
-    # job — silently shadowing a persisted centroid. The checkpoint
-    # pins ONE snapshot both jobs read; its ~0.3 s driver tax is noise
-    # on a nightly ingest path (and the frame is consumed twice anyway).
-    inc = _with_normalized(_apply_emb_contract(new_emb)).localCheckpoint(
-        eager=True
-    )
-    # limit(1) short-circuits: one increment-sized probe, no full count
-    if inc.filter(F.col("vec_id") < IVF_K).limit(1).count():
-        raise ValueError(
-            f"increment contains vec_ids in the reserved centroid range "
-            f"[0, {IVF_K}) — appending them would shadow the persisted "
-            "centroids"
-        )
-    cents = store.read("ivf_centroids").select(
-        "cid", F.col("cvec").alias("ce")
-    )
+    idempotent append — a RETRIED append of the same batch replays as
+    a no-op (returns False; the store probes its provenance column for
+    the id before landing rows) instead of double-counting list
+    members. Without it the append is non-transactional (retries re-run
+    from the pre-append snapshot); the Iceberg-native form of the store
+    gets replace-by-filter for this. Returns True iff rows landed."""
+    inc, cents = _checked_increment(store, "ivf_lists", new_emb)
     rows = (
         _ivf_ranked(inc, cents=cents)
         .filter(F.col("rn") == 1)
         .select("vec_id", "cid", F.col("ne").alias("nvec"))
     )
     return store.append("ivf_lists", rows, batch_id=batch_id)
-
-
-#: One configured serve clone per underlying SparkSession (ADVICE r13:
-#: ``spark.newSession()`` per serve leaks a cloned session's JVM-side
-#: state in a long-lived serving process). WeakKeyDictionary so the
-#: cache never keeps a stopped caller session alive; creation is
-#: serialized (the service layer serves on concurrent threads). The
-#: clone carries ONLY the scan-strategy conf — serves resolve tables
-#: by DATABASE-QUALIFIED name (``_serve_table``) instead of mutating
-#: the shared clone's current database per call, which would race
-#: concurrent serves against stores in different databases (review
-#: r14 finding; the pre-r14 per-serve session could not race because
-#: it was private).
-_SERVE_SESSIONS: "weakref.WeakKeyDictionary" = None  # initialized below
-_SERVE_LOCK = __import__("threading").Lock()
-
-
-def _serve_session(spark: SparkSession) -> SparkSession:
-    global _SERVE_SESSIONS
-    with _SERVE_LOCK:
-        if _SERVE_SESSIONS is None:
-            import weakref
-
-            _SERVE_SESSIONS = weakref.WeakKeyDictionary()
-        s = _SERVE_SESSIONS.get(spark)
-        if s is None:
-            s = spark.newSession()
-            s.conf.set(
-                "spark.sql.sources.bucketing.autoBucketedScan.enabled",
-                "false",
-            )
-            _SERVE_SESSIONS[spark] = s
-        return s
-
-
-def _serve_table(store, name: str) -> str:
-    """The store table's database-QUALIFIED identifier, resolved from
-    the CALLER session's current database at call time — thread-safe
-    on the shared serve clone (no current-database mutation) and
-    correct even when different stores live in different databases."""
-    db = store.spark.catalog.currentDatabase()
-    return f"`{db}`.`{store.table_name(name)}`"
 
 
 def _validate_query_vec(v) -> None:
@@ -1089,27 +1044,14 @@ def ivf_topk_from_store(
     fold order is the array order on both sides), and the literal
     doubles round-trip the stored doubles exactly.
 
-    The serve frame is built on a CLONED session with the auto
-    bucketed-scan heuristic off — the same Spark subtlety
-    ``BucketedArtifactStore.compact`` documents: nothing downstream
-    needs the bucket distribution, so the planner plans a plain file
-    scan and with it silently drops bucket PRUNING. Forcing the
-    bucketed scan restores SelectedBucketsCount at the cost of one
-    read task per probed bucket — acceptable when n_buckets is sized
-    to the workload width (the store's standing sizing rule); the
-    Iceberg-native form gets file-level pruning with free parallelism
-    from a bucket(N, cid) partition transform. The clone never touches
-    the caller's session conf, and it is built ONCE per caller session
-    and reused across serves (``_serve_session`` — ADVICE r13: a
-    per-serve ``newSession()`` leaks clone state in a long-lived
-    serving process)."""
-    spark = store.spark
-    # heal a crashed compaction of EITHER table before any raw
-    # s.table() read — recovery lives on the store's entry points, and
-    # the clone below bypasses them deliberately (it exists only to
-    # carry the scan-strategy conf)
-    store.read("ivf_lists")
-    store.read("ivf_centroids")
+    The serve frame reads the tables through
+    :meth:`BucketedArtifactStore.serve_tables` (the cached clone session
+    with forced bucketed scans, which restores SelectedBucketsCount at
+    the cost of one read task per probed bucket — acceptable when
+    n_buckets is sized to the workload width, the store's standing
+    sizing rule; the Iceberg-native form gets file-level pruning with
+    free parallelism from a bucket(N, cid) partition transform)."""
+    art, cent_tbl = store.serve_tables("ivf_lists", "ivf_centroids")
     if query_vec is None:
         qid = QUERY_VEC_ID if query_vec_id is None else query_vec_id
         r = (
@@ -1122,15 +1064,6 @@ def ivf_topk_from_store(
         query_vec_id = qid
     else:
         _validate_query_vec(query_vec)
-    s = _serve_session(spark)
-    # the reused clone caches table file listings across serves (the
-    # point of caching it), but nightly appends land on the CALLER
-    # session — refresh the two index tables so a serve planned after
-    # an append sees the appended files (metadata-only re-listing; a
-    # production server would instead refresh once per index publish)
-    for _n in ("ivf_lists", "ivf_centroids"):
-        s.catalog.refreshTable(_serve_table(store, _n))
-    art = s.table(_serve_table(store, "ivf_lists"))
     empty = art.filter(F.lit(False)).select(
         "vec_id",
         F.col("cid").alias("probe_list"),
@@ -1139,10 +1072,7 @@ def ivf_topk_from_store(
     if query_vec is None:
         return empty  # unknown query id: empty result, contract schema
     qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    cents = (
-        s.table(_serve_table(store, "ivf_centroids"))
-        .withColumn("qe", qlit)
-    )
+    cents = cent_tbl.withColumn("qe", qlit)
     csim = F.round(F.expr(_DOT_SPARK.format(a="cvec", b="qe")), 6)
     probe_cids = [
         r["cid"]
@@ -1193,17 +1123,6 @@ IVFPQ_STORE_ARTIFACTS = {
 }
 
 
-def ivfpq_store(spark: SparkSession, prefix: str, n_buckets: int = 16):
-    """A BucketedArtifactStore instantiated with the IVF-PQ spec."""
-    from iceberg_explorer_spark.operators.incremental_artifacts import (
-        BucketedArtifactStore,
-    )
-
-    return BucketedArtifactStore(
-        spark, prefix, n_buckets, artifacts=IVFPQ_STORE_ARTIFACTS
-    )
-
-
 def _pq_codes_wide(codes: DataFrame) -> DataFrame:
     """(vec_id, c0..c{M-1}) from the long (m_subspaces, vec_id, m, code)
     encode frame — the storage pivot (exactly one code per (vec, m), so
@@ -1229,12 +1148,7 @@ def ivfpq_backfill(spark: SparkSession, sf_dir: str, store) -> None:
     "backfill never ran", never as an index whose serves fail on a
     missing codebook."""
     emb = _with_normalized(_load_emb(spark, sf_dir))
-    store.write(
-        "ivf_centroids",
-        emb.filter(F.col("vec_id") < IVF_K).select(
-            F.col("vec_id").alias("cid"), F.col("ne").alias("cvec")
-        ),
-    )
+    _write_centroids(store, emb)
     sub = _pq_chunks(emb, (PQ_M,))
     cb = sub.filter(F.col("vec_id") < PQ_K).select(
         F.col("vec_id").alias("code"),
@@ -1255,31 +1169,11 @@ def ivfpq_append(store, new_emb: DataFrame, batch_id: "str | None" = None) -> bo
     against the PERSISTED centroid and codebook artifacts (two O(1)
     model reads; history code rows are never touched) and land its
     (vec_id, cid, c0..c{M-1}) rows hash-aligned through the store's
-    idempotent append — same contract as ``ivf_append_lists``: vec_ids
-    globally new, the reserved centroid range [0, IVF_K) refused
-    loudly on an eagerly-materialized increment, ``batch_id`` makes a
-    crashed-and-retried night a no-op. Returns True iff rows landed."""
-    if not store.exists("ivfpq_codes"):
-        # the code table is the backfill's COMMIT MARKER (same gate as
-        # ivf_append_lists): a crash between the model writes and the
-        # code write must read as "backfill never ran", and an append
-        # must never CREATE an increment-only index beside live models
-        raise FileNotFoundError(
-            "ivfpq_codes artifact not found — run ivfpq_backfill (the "
-            "one-time index build) before appending an increment"
-        )
-    inc = _with_normalized(_apply_emb_contract(new_emb)).localCheckpoint(
-        eager=True
-    )
-    if inc.filter(F.col("vec_id") < IVF_K).limit(1).count():
-        raise ValueError(
-            f"increment contains vec_ids in the reserved centroid range "
-            f"[0, {IVF_K}) — appending them would shadow the persisted "
-            "centroids"
-        )
-    cents = store.read("ivf_centroids").select(
-        "cid", F.col("cvec").alias("ce")
-    )
+    idempotent append — same contract as ``ivf_append_lists``
+    (``_checked_increment``, with the code table ``ivfpq_codes`` as the
+    commit marker), and ``batch_id`` makes a crashed-and-retried night
+    a no-op. Returns True iff rows landed."""
+    inc, cents = _checked_increment(store, "ivfpq_codes", new_emb)
     cb = (
         store.read("pq_codebook")
         .withColumn("m_subspaces", F.lit(PQ_M))
@@ -1322,12 +1216,9 @@ def ivfpq_codebook(store) -> "list[tuple[int, int, list[float]]]":
     between index publishes, so a serving process collects it ONCE per
     publish and hands it to every ``ivfpq_topk_from_store`` call;
     O(M x PQ_K) rows, the bounded legitimacy class."""
-    store.read("pq_codebook")  # heal a crashed compaction first
-    # database-QUALIFIED like every other serve-family read (VERDICT r14
-    # nit #2): correct regardless of the reading session's current db
     return [
         (r["m"], r["code"], list(r["ce"]))
-        for r in store.spark.table(_serve_table(store, "pq_codebook")).collect()
+        for r in store.read("pq_codebook").collect()
     ]
 
 
@@ -1362,29 +1253,21 @@ def ivfpq_topk_from_store(
     query is exact by construction: the dot is the same
     products-then-sequential-fold order as ``_DOT_SPARK`` over the
     identical stored doubles, and the micro quantization replicates
-    Spark's HALF_UP (``_micro_half_up``). Served on the cached cloned
-    session with the auto bucketed-scan heuristic off, tables
-    refreshed per serve (the ``ivf_topk_from_store`` notes apply
-    verbatim)."""
+    Spark's HALF_UP (``_micro_half_up``). Read through
+    :meth:`BucketedArtifactStore.serve_tables`, as
+    ``ivf_topk_from_store``."""
     _validate_query_vec(query_vec)
-    spark = store.spark
-    for _n in IVFPQ_STORE_ARTIFACTS:
-        store.read(_n)  # heal a crashed compaction before raw reads
-    s = _serve_session(spark)
-    for _n in IVFPQ_STORE_ARTIFACTS:
-        s.catalog.refreshTable(_serve_table(store, _n))
+    art, cent_tbl, cb_tbl = store.serve_tables(*IVFPQ_STORE_ARTIFACTS)
     qlit = F.array(*[F.lit(float(x)) for x in query_vec])
     csim = F.round(F.expr(_DOT_SPARK.format(a="cvec", b="qe")), 6)
     probe_cids = [
         r["cid"]
-        for r in s.table(_serve_table(store, "ivf_centroids"))
-        .withColumn("qe", qlit)
+        for r in cent_tbl.withColumn("qe", qlit)
         .select("cid", csim.alias("csim"))
         .orderBy(F.col("csim").desc(), "cid")
         .limit(nprobe)
         .collect()
     ]
-    art = s.table(_serve_table(store, "ivfpq_codes"))
     empty = art.filter(F.lit(False)).select(
         "vec_id",
         F.col("cid").alias("probe_list"),
@@ -1397,10 +1280,7 @@ def ivfpq_topk_from_store(
     sub_w = DIM // PQ_M
     contrib = [[0] * PQ_K for _ in range(PQ_M)]
     if codebook is None:
-        codebook = [
-            (r["m"], r["code"], r["ce"])
-            for r in s.table(_serve_table(store, "pq_codebook")).collect()
-        ]
+        codebook = [(r["m"], r["code"], r["ce"]) for r in cb_tbl.collect()]
     for m, code, ce in codebook:
         qchunk = query_vec[m * sub_w : (m + 1) * sub_w]
         # products first, then a sequential fold — _DOT_SPARK's order
@@ -1439,7 +1319,6 @@ def ivfpq_refine_from_store(
     k: int = 10,
     r: int = REFINE_R,
     codebook: "list[tuple[int, int, list[float]]] | None" = None,
-    check_snapshot: bool = True,
 ) -> DataFrame:
     """Serve similarity_ivf_pq_refine_topk's semantics from the two
     persisted indexes — row-identical to the registered query (pinned
@@ -1450,13 +1329,11 @@ def ivfpq_refine_from_store(
        probe_list, approx score), the bounded O(R) driver legitimacy
        class, exactly the ids-and-scores a serving tier hands its
        refine stage;
-    2. ONE bucket-pruned scan of the VECTOR index (``ivf_lists``),
-       filtered to the shortlist's probe lists (bucket pruning) and
-       vec_ids (pushed filter), with the exact cosine computed as an
-       inlined literal-array dot and the shortlist's own probe_list /
-       approx score attached as literal MAPS keyed by vec_id — zero
-       joins, zero shuffles, zero Window nodes, zero broadcasts in
-       the returned frame.
+    2. the shared exact stage (``_rerank_shortlist``): ONE scan of the
+       VECTOR index (``ivf_lists``), filtered to the shortlist's probe
+       lists (bucket pruning) and vec_ids (pushed filter), with the
+       shortlist's own probe_list / approx score carried as literal
+       maps.
 
     The two stores hold the two physical forms of the same corpus
     (codes for selectivity, vectors for precision); probe_list and
@@ -1467,23 +1344,9 @@ def ivfpq_refine_from_store(
     fails the pruned scan's filters and would DROP from the result,
     so keep the two appends in one ingest transaction (the round-trip
     test pins same-snapshot parity with the registered query,
-    including through paired appends and per-store compactions).
-    ``check_snapshot`` (default True, r16 hardening) makes a
-    violation LOUD instead of a silent short result: the serve
-    already holds the shortlist ids driver-side, so it runs the
-    pruned scan once as an id projection (bucket-pruned, pushed
-    vec_id filters, <= R rows — the same bounded class as stage 1)
-    and raises ValueError naming the missing vec_ids when the vector
-    index fails to cover the shortlist. Cost is one extra bounded
-    job per serve; pass ``check_snapshot=False`` on a hot path whose
-    ingest transactionality is enforced upstream. The RETURNED frame
-    is unchanged either way (the plan pin covers it). The check
-    NARROWS the desync window rather than closing it: it executes
-    eagerly at call time while the returned frame is lazy, so a
-    rewrite landing after the check but before the caller
-    materializes can still read the newer snapshot — materialize
-    promptly inside the ingest schedule's quiesce window when a fully
-    settled read matters (ADVICE r16).
+    including through paired appends and per-store compactions). The
+    exact stage's coverage check makes a violation LOUD (ValueError
+    naming the missing vec_ids) instead of a silent short result.
     Float parity: the literal dot
     is ``_DOT_SPARK``'s fold order over the stored normalized doubles,
     identical to the in-session exact stage; the shortlist cut
@@ -1500,11 +1363,7 @@ def ivfpq_refine_from_store(
         k=r,
         codebook=codebook,
     ).collect()
-    spark = vector_store.spark
-    vector_store.read("ivf_lists")  # heal a crashed compaction first
-    s = _serve_session(spark)
-    s.catalog.refreshTable(_serve_table(vector_store, "ivf_lists"))
-    art = s.table(_serve_table(vector_store, "ivf_lists"))
+    (art,) = vector_store.serve_tables("ivf_lists")
     if not shortlist:
         return art.filter(F.lit(False)).select(
             "vec_id",
@@ -1512,55 +1371,75 @@ def ivfpq_refine_from_store(
             F.lit(0.0).alias("approx_cos_sim"),
             F.lit(0.0).alias("cos_sim"),
         )
-    ids = [int(row["vec_id"]) for row in shortlist]
     cids = sorted({int(row["probe_list"]) for row in shortlist})
-    probe_map = F.create_map(
-        *[
-            lit
-            for row in shortlist
-            for lit in (
-                F.lit(int(row["vec_id"])),
-                F.lit(int(row["probe_list"])),
-            )
-        ]
+    return _rerank_shortlist(
+        art,
+        shortlist,
+        query_vec,
+        k,
+        {"probe_list": None, "approx_cos_sim": None},
+        "ivfpq_refine_from_store",
+        prune=F.col("cid").isin(cids),
     )
-    approx_map = F.create_map(
-        *[
-            lit
-            for row in shortlist
-            for lit in (
-                F.lit(int(row["vec_id"])),
-                F.lit(float(row["approx_cos_sim"])),
-            )
-        ]
-    )
-    pruned = art.filter(F.col("cid").isin(cids) & F.col("vec_id").isin(ids))
-    if check_snapshot:
-        # same-snapshot guard (r16): the pruned scan must cover every
-        # shortlist id — a miss means the two stores were published from
-        # different corpus snapshots, and the refine result would be
-        # silently short/wrong. <= R ids, one bounded column-pruned job.
-        found = {int(row["vec_id"]) for row in pruned.select("vec_id").collect()}
-        missing = sorted(set(ids) - found)
-        if missing:
-            raise ValueError(
-                "ivfpq_refine_from_store: same-snapshot contract violated — "
-                f"{len(missing)} shortlist vec_id(s) absent from the vector "
-                f"index's probed lists (first few: {missing[:5]}). Publish "
-                "both stores from one corpus snapshot (paired appends in "
-                "one ingest transaction)."
-            )
+
+
+def _rerank_shortlist(
+    art: DataFrame,
+    shortlist: list,
+    query_vec: "list[float]",
+    k: int,
+    carry: "dict[str, str | None]",
+    serve: str,
+    prune=None,
+) -> DataFrame:
+    """The exact stage shared by the refine, BQ and MRL serves: re-rank
+    a COLLECTED shortlist (rows carrying ``vec_id`` and the ``carry``
+    columns — R rows, the bounded O(R) driver legitimacy class) by
+    exact cosine over ONE read of ``art`` filtered to the shortlist ids
+    (and ``prune``, the refine serve's probe-list filter). Each carry
+    column rides as a literal MAP keyed by vec_id (cast to its
+    ``carry`` type when one is given) and the cosine is ``_DOT_SPARK``
+    over an inlined literal query array, so the returned frame has zero
+    joins, zero shuffles, zero Window nodes and zero broadcasts.
+
+    Coverage check: the serve already holds the shortlist ids, so it
+    runs the filtered read once as an id projection (<= R rows, one
+    bounded job) and raises ValueError naming the missing vec_ids when
+    it does not cover the shortlist. A gap means the two serve reads
+    saw different snapshots — two stores published from different
+    corpus snapshots, or a rewrite landing between the reads — and the
+    result would otherwise be silently short. The check NARROWS that
+    window rather than closing it: it runs eagerly at call time while
+    the returned frame is lazy, so a caller needing a fully settled
+    read materializes the result promptly, inside whatever quiesce
+    window the ingest schedule provides."""
+    ids = [int(row["vec_id"]) for row in shortlist]
+    in_ids = F.col("vec_id").isin(ids)
+    pruned = art.filter(in_ids if prune is None else prune & in_ids)
+    found = {int(row["vec_id"]) for row in pruned.select("vec_id").collect()}
+    missing = sorted(set(ids) - found)
+    if missing:
+        raise ValueError(
+            f"{serve}: {len(missing)} shortlist vec_id(s) absent from the "
+            f"exact-stage read (first few: {missing[:5]}) — the two serve "
+            "reads saw different snapshots. Publish paired stores from one "
+            "corpus snapshot, and retry against the settled snapshot."
+        )
+    carried = []
+    for name, cast in carry.items():
+        m = F.create_map(
+            *[
+                lit
+                for row in shortlist
+                for lit in (F.lit(int(row["vec_id"])), F.lit(row[name]))
+            ]
+        )[F.col("vec_id")]
+        carried.append((m if cast is None else m.cast(cast)).alias(name))
     qlit = F.array(*[F.lit(float(x)) for x in query_vec])
     cos = F.round(F.expr(_DOT_SPARK.format(a="nvec", b="qe")), 6)
     return (
-        pruned
-        .withColumn("qe", qlit)
-        .select(
-            "vec_id",
-            probe_map[F.col("vec_id")].alias("probe_list"),
-            approx_map[F.col("vec_id")].alias("approx_cos_sim"),
-            cos.alias("cos_sim"),
-        )
+        pruned.withColumn("qe", qlit)
+        .select("vec_id", *carried, cos.alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), "vec_id")
         .limit(k)
     )
@@ -2279,6 +2158,78 @@ def similarity_pq_geometry_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _ivf_pq_shortlist(
+    spark: SparkSession, sf_dir: str, n: int
+) -> "tuple[DataFrame, DataFrame, DataFrame]":
+    """(emb, seed_emb, top-n) for the registered IVF-PQ queries: the
+    normalized corpus, the un-fanned seed scan (``_seed_emb``) and the
+    query's top-``n`` probed-list candidates by ADC score —
+    (vec_id, probe_list, approx_cos_sim) in (score DESC, vec_id) order.
+    ``similarity_ivf_pq_topk`` returns the top 10; the refine query cuts
+    its REFINE_R shortlist here and re-ranks it exactly."""
+    # (r18 measured-and-rejected: materializing the contract-filtered
+    # (vec_id, ne) corpus as ONE eager localCheckpoint for the five emb
+    # branches — interleaved same-session min-of-6: 1.892 s without vs
+    # 2.172 s with in the plain query, 2.375 s vs 2.642 s in the refine
+    # query. The blocking checkpoint SERIALIZES a pass that AQE's
+    # concurrent broadcast-subtree jobs otherwise overlap on idle cores;
+    # redundant branch recompute is parallel slack here, not wall time.)
+    emb = _with_normalized(_load_emb(spark, sf_dir))
+    # seed subtrees (centroids, probe ranking, codebook/query rows) on
+    # the un-fanned scan — see _seed_emb
+    se = _seed_emb(spark, sf_dir)
+    cents = se.filter(F.col("vec_id") < IVF_K).select(
+        F.col("vec_id").alias("cid"), F.col("ne").alias("ce")
+    )
+    ranked = _ivf_ranked(emb, cents=cents)
+    qprobe = F.broadcast(
+        _ivf_ranked(se, cents=cents).filter(
+            (F.col("vec_id") == QUERY_VEC_ID) & (F.col("rn") <= IVF_NPROBE)
+        ).select("cid")
+    )
+    # candidates = members of the probed lists; checkpointed once for
+    # its TWO consumers (the encode-restriction semi-join and the final
+    # probe_list join). Re-justified AFTER the r17 de-windowing removed
+    # the original window-era reason (VERDICT r17 #1): dropping it
+    # re-runs the whole map-side ranking chain (scan + centroid
+    # broadcast + rank + probe join) once per branch and measured WORSE
+    # in the refine query — 1.797 s vs 1.197 s, r18 interleaved min-of-5
+    # at sf0.1/32, rows identical. The materialized frame is
+    # probe-limited (nprobe/K of the corpus), so the checkpoint stays
+    # cheap at any scale.
+    cand = (
+        ranked.filter(F.col("rn") == 1)
+        .join(qprobe, "cid")
+        .filter(F.col("vec_id") != QUERY_VEC_ID)
+        .select("vec_id", F.col("cid").alias("probe_list"))
+        .localCheckpoint(eager=True)
+    )
+    # restrict the encode to candidates + the seed codebook rows + the
+    # query row: codes depend only on a vector's own chunks and the
+    # seed codebook, so the restricted encode is bit-identical to the
+    # full-corpus one (doc) while scanning nprobe/K of the corpus
+    ids = (
+        cand.select("vec_id")
+        .unionByName(
+            se.filter(
+                (F.col("vec_id") < PQ_K)
+                | (F.col("vec_id") == QUERY_VEC_ID)
+            ).select("vec_id")
+        )
+        .distinct()
+    )
+    scores = _pq_scores(
+        emb.join(ids, "vec_id", "left_semi"), (PQ_M,), seed_emb=se
+    )
+    top = (
+        cand.join(scores, "vec_id")
+        .select("vec_id", "probe_list", "approx_cos_sim")
+        .orderBy(F.col("approx_cos_sim").desc(), "vec_id")
+        .limit(n)
+    )
+    return emb, se, top
+
+
 @query(
     "similarity_ivf_pq_topk",
     oracle=f"""
@@ -2334,65 +2285,7 @@ def similarity_pq_geometry_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     "extension.",
 )
 def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # (r18 measured-and-rejected: materializing the contract-filtered
-    # (vec_id, ne) corpus as ONE eager localCheckpoint for the five emb
-    # branches — interleaved same-session min-of-6: 1.892 s without vs
-    # 2.172 s with. The blocking checkpoint SERIALIZES a pass that AQE's
-    # concurrent broadcast-subtree jobs otherwise overlap on idle cores;
-    # redundant branch recompute is parallel slack here, not wall time.)
-    emb = _with_normalized(_load_emb(spark, sf_dir))
-    # seed subtrees (centroids, probe ranking, codebook/query rows) on
-    # the un-fanned scan — see _seed_emb
-    se = _seed_emb(spark, sf_dir)
-    cents = se.filter(F.col("vec_id") < IVF_K).select(
-        F.col("vec_id").alias("cid"), F.col("ne").alias("ce")
-    )
-    ranked = _ivf_ranked(emb, cents=cents)
-    qprobe = F.broadcast(
-        _ivf_ranked(se, cents=cents).filter(
-            (F.col("vec_id") == QUERY_VEC_ID) & (F.col("rn") <= IVF_NPROBE)
-        ).select("cid")
-    )
-    # candidates = members of the probed lists; checkpointed once for
-    # its TWO consumers (the encode-restriction semi-join and the final
-    # probe_list join). Re-justified AFTER the r17 de-windowing removed
-    # the original window-era reason (VERDICT r17 #1): dropping it
-    # re-runs the whole map-side ranking chain (scan + centroid
-    # broadcast + rank + probe join) once per branch and measured WORSE
-    # in the refine sibling that shares this exact prefix — 1.797 s vs
-    # 1.197 s, r18 interleaved min-of-5 at sf0.1/32, rows identical.
-    # The materialized frame is probe-limited (nprobe/K of the corpus),
-    # so the checkpoint stays cheap at any scale.
-    cand = (
-        ranked.filter(F.col("rn") == 1)
-        .join(qprobe, "cid")
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", F.col("cid").alias("probe_list"))
-        .localCheckpoint(eager=True)
-    )
-    # restrict the encode to candidates + the seed codebook rows + the
-    # query row: codes depend only on a vector's own chunks and the
-    # seed codebook, so the restricted encode is bit-identical to the
-    # full-corpus one (doc) while scanning nprobe/K of the corpus
-    ids = (
-        cand.select("vec_id")
-        .unionByName(
-            se.filter(
-                (F.col("vec_id") < PQ_K)
-                | (F.col("vec_id") == QUERY_VEC_ID)
-            ).select("vec_id")
-        )
-        .distinct()
-    )
-    scores = _pq_scores(
-        emb.join(ids, "vec_id", "left_semi"), (PQ_M,), seed_emb=se
-    )
-    return (
-        cand.join(scores, "vec_id")
-        .select("vec_id", "probe_list", "approx_cos_sim")
-        .orderBy(F.col("approx_cos_sim").desc(), "vec_id")
-        .limit(10)
-    )
+    return _ivf_pq_shortlist(spark, sf_dir, 10)[2]
 
 
 @query(
@@ -2464,50 +2357,7 @@ def similarity_ivf_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def similarity_ivf_pq_refine_topk(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    # (r18 measured-and-rejected: the one-materialization emb checkpoint —
-    # see similarity_ivf_pq_topk's note; interleaved A/B regressed it
-    # here too, 2.375 s without vs 2.642 s with.)
-    emb = _with_normalized(_load_emb(spark, sf_dir))
-    # seed subtrees on the un-fanned scan — see _seed_emb
-    se = _seed_emb(spark, sf_dir)
-    cents = se.filter(F.col("vec_id") < IVF_K).select(
-        F.col("vec_id").alias("cid"), F.col("ne").alias("ce")
-    )
-    ranked = _ivf_ranked(emb, cents=cents)
-    qprobe = F.broadcast(
-        _ivf_ranked(se, cents=cents).filter(
-            (F.col("vec_id") == QUERY_VEC_ID) & (F.col("rn") <= IVF_NPROBE)
-        ).select("cid")
-    )
-    cand = (
-        ranked.filter(F.col("rn") == 1)
-        .join(qprobe, "cid")
-        .filter(F.col("vec_id") != QUERY_VEC_ID)
-        .select("vec_id", F.col("cid").alias("probe_list"))
-        # kept on r18 measurement: without it 1.797 s, with it 1.197 s
-        # (interleaved min-of-5 at sf0.1/32, rows identical) — see the
-        # rationale at similarity_ivf_pq_topk's cand checkpoint
-        .localCheckpoint(eager=True)
-    )
-    ids = (
-        cand.select("vec_id")
-        .unionByName(
-            se.filter(
-                (F.col("vec_id") < PQ_K)
-                | (F.col("vec_id") == QUERY_VEC_ID)
-            ).select("vec_id")
-        )
-        .distinct()
-    )
-    scores = _pq_scores(
-        emb.join(ids, "vec_id", "left_semi"), (PQ_M,), seed_emb=se
-    )
-    shortlist = (
-        cand.join(scores, "vec_id")
-        .select("vec_id", "probe_list", "approx_cos_sim")
-        .orderBy(F.col("approx_cos_sim").desc(), "vec_id")
-        .limit(REFINE_R)
-    )
+    emb, se, shortlist = _ivf_pq_shortlist(spark, sf_dir, REFINE_R)
     qv = F.broadcast(
         se.filter(F.col("vec_id") == QUERY_VEC_ID).select(
             F.col("ne").alias("qe")
@@ -3348,17 +3198,6 @@ def similarity_mrl_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 BQ_STORE_ARTIFACTS = {"bq_index": ("vec_id",)}
 
 
-def bq_store(spark: SparkSession, prefix: str, n_buckets: int = 16):
-    """A BucketedArtifactStore instantiated with the BQ artifact spec."""
-    from iceberg_explorer_spark.operators.incremental_artifacts import (
-        BucketedArtifactStore,
-    )
-
-    return BucketedArtifactStore(
-        spark, prefix, n_buckets, artifacts=BQ_STORE_ARTIFACTS
-    )
-
-
 def _bq_sketched(emb: DataFrame) -> DataFrame:
     """(vec_id, lo, hi, nvec) rows from a normalized frame — THE one
     sketch rule (the registered query's _BQ_PACK_SPARK expressions), so
@@ -3383,10 +3222,10 @@ def bq_append(store, new_emb: DataFrame, batch_id: "str | None" = None) -> bool:
     and land them through the store's hash-aligned writer (at most one
     new file per bucket per night). Sign bits depend only on the row
     itself — no centroid or codebook artifact to read, so the append is
-    a pure map over the increment. Backfill-first and ``batch_id``
-    replay-idempotence come from the store layer (r15's gate: an
-    idempotent append onto a missing table raises rather than creating
-    an increment-only 'corpus'). Increment vec_ids must be globally NEW
+    a pure map over the increment. Backfill-first (the store's
+    :meth:`~BucketedArtifactStore.require` on ``bq_index``, with or
+    without ``batch_id``) and ``batch_id`` replay-idempotence come from
+    the store layer. Increment vec_ids must be globally NEW
     — the ingest id-allocation invariant, as for every other artifact.
     Returns True iff rows landed."""
     return store.append(
@@ -3428,7 +3267,6 @@ def bq_topk_from_store(
     query_vec_id: "int | None" = None,
     r: int = BQ_R,
     k: int = 10,
-    check_snapshot: bool = True,
 ) -> DataFrame:
     """Serve similarity_bq_hamming_topk's semantics from the persisted
     index — row-identical to the registered query (pinned by the
@@ -3439,37 +3277,23 @@ def bq_topk_from_store(
        against the query sketch packed driver-side (two literal BIGINTs,
        no job), heap-cut to the top-``r`` by (hamming, vec_id) and
        COLLECTED: r rows, the bounded O(R) driver legitimacy class;
-    2. the exact stage: ONE bucket-pruned scan of the SAME artifact
-       (vec_id is the bucket key, so the shortlist point-reads prune to
-       the ids' buckets — SelectedBucketsCount in the plan), reading
-       (vec_id, nvec) with the Hamming distances attached as a literal
-       map and the exact cosine as an inlined literal-array dot — zero
-       joins, zero shuffles, zero Window nodes, zero broadcasts in the
-       returned frame.
+    2. the shared exact stage (``_rerank_shortlist``): ONE bucket-pruned
+       scan of the SAME artifact (vec_id is the bucket key, so the
+       shortlist point-reads prune to the ids' buckets —
+       SelectedBucketsCount in the plan), with the Hamming distances
+       carried as a literal map.
 
     Both stages read the ONE artifact, so there is no cross-store
-    same-snapshot contract (the refine cascade's failure class);
-    ``check_snapshot`` (default True) NARROWS the residual window — a
-    compaction or append landing BETWEEN the two reads — by verifying
-    the pruned scan covers every shortlist id (one extra bounded job;
-    raises ValueError naming the missing ids). Narrows, not closes: the
-    check executes eagerly at call time while the returned frame is
-    lazy, so a rewrite landing after the check but before the CALLER
-    materializes the result can still read the newer snapshot — callers
-    needing a fully settled read should materialize (collect/checkpoint)
-    immediately after the call, inside whatever quiesce window their
-    ingest schedule provides (ADVICE r16). ``query_vec`` is
+    same-snapshot contract (the refine cascade's failure class); the
+    exact stage's coverage check still catches a compaction or append
+    landing BETWEEN the two reads. ``query_vec`` is
     REQUIRED and must be L2-normalized (``_validate_query_vec`` — sign
     bits are normalization-invariant, the cosine is not);
     ``query_vec_id`` is the stored id to EXCLUDE (the registered
     query's exclude-the-query-doc rule) — omit it for request vectors
     that are not stored rows."""
     _validate_query_vec(query_vec)
-    spark = store.spark
-    store.read("bq_index")  # heal a crashed compaction first
-    s = _serve_session(spark)
-    s.catalog.refreshTable(_serve_table(store, "bq_index"))
-    art = s.table(_serve_table(store, "bq_index"))
+    (art,) = store.serve_tables("bq_index")
     qlo, qhi = _bq_pack_py([float(x) for x in query_vec])
     shortlist = (
         _bq_hamming_frame(art, qlo, qhi, query_vec_id)
@@ -3483,43 +3307,9 @@ def bq_topk_from_store(
             F.lit(0).cast("bigint").alias("hamming_dist"),
             F.lit(0.0).alias("cos_sim"),
         )
-    ids = [int(row["vec_id"]) for row in shortlist]
-    ham_map = F.create_map(
-        *[
-            lit
-            for row in shortlist
-            for lit in (
-                F.lit(int(row["vec_id"])),
-                F.lit(int(row["hamming_dist"])),
-            )
-        ]
-    )
-    pruned = art.filter(F.col("vec_id").isin(ids))
-    if check_snapshot:
-        found = {
-            int(row["vec_id"])
-            for row in pruned.select("vec_id").collect()
-        }
-        missing = sorted(set(ids) - found)
-        if missing:
-            raise ValueError(
-                "bq_topk_from_store: a concurrent rewrite landed between "
-                f"the two serve reads — {len(missing)} shortlist "
-                f"vec_id(s) absent from the point-read scan (first few: "
-                f"{missing[:5]}). Retry the serve against the settled "
-                "snapshot."
-            )
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = F.round(F.expr(_DOT_SPARK.format(a="nvec", b="qe")), 6)
-    return (
-        pruned.withColumn("qe", qlit)
-        .select(
-            "vec_id",
-            ham_map[F.col("vec_id")].cast("bigint").alias("hamming_dist"),
-            cos.alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), "vec_id")
-        .limit(k)
+    return _rerank_shortlist(
+        art, shortlist, query_vec, k, {"hamming_dist": "bigint"},
+        "bq_topk_from_store",
     )
 
 
@@ -3544,17 +3334,6 @@ def bq_topk_from_store(
 #: bucketed by ``vec_id`` so the exact stage's shortlist point-reads
 #: prune to the ids' buckets, as in the BQ store.
 MRL_STORE_ARTIFACTS = {"mrl_index": ("vec_id",)}
-
-
-def mrl_store(spark: SparkSession, prefix: str, n_buckets: int = 16):
-    """A BucketedArtifactStore instantiated with the MRL artifact spec."""
-    from iceberg_explorer_spark.operators.incremental_artifacts import (
-        BucketedArtifactStore,
-    )
-
-    return BucketedArtifactStore(
-        spark, prefix, n_buckets, artifacts=MRL_STORE_ARTIFACTS
-    )
 
 
 def _mrl_prefixed(emb: DataFrame) -> DataFrame:
@@ -3584,7 +3363,8 @@ def mrl_append(store, new_emb: DataFrame, batch_id: "str | None" = None) -> bool
     new file per bucket per night). Truncation is a projection — no
     centroid or codebook artifact to read, so the append is a pure map
     over the increment, as for the BQ store. Backfill-first and
-    ``batch_id`` replay-idempotence come from the store layer.
+    ``batch_id`` replay-idempotence come from the store layer, as for
+    ``bq_append``.
     Increment vec_ids must be globally NEW — the ingest id-allocation
     invariant. Returns True iff rows landed."""
     return store.append(
@@ -3628,7 +3408,6 @@ def mrl_topk_from_store(
     query_vec_id: "int | None" = None,
     r: int = MRL_R,
     k: int = 10,
-    check_snapshot: bool = True,
 ) -> DataFrame:
     """Serve similarity_mrl_prefix_topk's semantics from the persisted
     index — row-identical to the registered query (pinned by the
@@ -3641,21 +3420,15 @@ def mrl_topk_from_store(
        cosine against the query prefix as a literal array, heap-cut to
        the top-``r`` by (prefix_cos DESC, vec_id) and COLLECTED: r
        rows, the bounded O(R) driver legitimacy class;
-    2. the exact stage: ONE bucket-pruned scan of the SAME artifact
-       (vec_id is the bucket key — SelectedBucketsCount in the plan)
-       reading (vec_id, nvec), with the prefix scores attached as a
-       literal map and the exact cosine as an inlined literal-array
-       dot — zero joins, zero shuffles, zero Window nodes, zero
-       broadcasts in the returned frame.
+    2. the shared exact stage (``_rerank_shortlist``): ONE
+       bucket-pruned scan of the SAME artifact (vec_id is the bucket
+       key — SelectedBucketsCount in the plan), with the prefix scores
+       carried as a literal map.
 
     Both stages read the ONE artifact, so there is no cross-store
-    same-snapshot contract; ``check_snapshot`` (default True) NARROWS
-    the residual window — a compaction or append landing BETWEEN the
-    two reads — by verifying the pruned scan covers every shortlist id
-    (one extra bounded job; raises ValueError naming the missing ids).
-    Narrows, not closes: the check executes eagerly while the returned
-    frame is lazy — materialize promptly when a fully settled read
-    matters, as for the BQ serve. ``query_vec`` is REQUIRED and must be
+    same-snapshot contract; the coverage check catches a rewrite
+    landing between the two reads, as for the BQ serve.
+    ``query_vec`` is REQUIRED and must be
     L2-normalized (``_validate_query_vec``); a query whose
     d=16 prefix is all-zero is REFUSED loudly (its prefix
     cosine is undefined, so stage 1 would return an arbitrary empty
@@ -3669,11 +3442,7 @@ def mrl_topk_from_store(
             "renormalized prefix cosine is undefined for this query at "
             "this rung; serve it with a full-width method instead"
         )
-    spark = store.spark
-    store.read("mrl_index")  # heal a crashed compaction first
-    s = _serve_session(spark)
-    s.catalog.refreshTable(_serve_table(store, "mrl_index"))
-    art = s.table(_serve_table(store, "mrl_index"))
+    (art,) = store.serve_tables("mrl_index")
     shortlist = (
         _mrl_prefix_frame(art, [float(x) for x in query_vec], query_vec_id)
         .orderBy(F.col("prefix_cos").desc(), "vec_id")
@@ -3686,43 +3455,9 @@ def mrl_topk_from_store(
             F.lit(0.0).alias("prefix_cos"),
             F.lit(0.0).alias("cos_sim"),
         )
-    ids = [int(row["vec_id"]) for row in shortlist]
-    pcos_map = F.create_map(
-        *[
-            lit
-            for row in shortlist
-            for lit in (
-                F.lit(int(row["vec_id"])),
-                F.lit(float(row["prefix_cos"])),
-            )
-        ]
-    )
-    pruned = art.filter(F.col("vec_id").isin(ids))
-    if check_snapshot:
-        found = {
-            int(row["vec_id"])
-            for row in pruned.select("vec_id").collect()
-        }
-        missing = sorted(set(ids) - found)
-        if missing:
-            raise ValueError(
-                "mrl_topk_from_store: a concurrent rewrite landed between "
-                f"the two serve reads — {len(missing)} shortlist "
-                f"vec_id(s) absent from the point-read scan (first few: "
-                f"{missing[:5]}). Retry the serve against the settled "
-                "snapshot."
-            )
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    cos = F.round(F.expr(_DOT_SPARK.format(a="nvec", b="qe")), 6)
-    return (
-        pruned.withColumn("qe", qlit)
-        .select(
-            "vec_id",
-            pcos_map[F.col("vec_id")].cast("double").alias("prefix_cos"),
-            cos.alias("cos_sim"),
-        )
-        .orderBy(F.col("cos_sim").desc(), "vec_id")
-        .limit(k)
+    return _rerank_shortlist(
+        art, shortlist, query_vec, k, {"prefix_cos": "double"},
+        "mrl_topk_from_store",
     )
 
 

@@ -933,18 +933,9 @@ def _lm_score_docs(
 #: marginal and the score join both key on it — and a groupBy whose keys
 #: include the bucket key runs WITHOUT an exchange on the forced
 #: bucketed scan), unigram count deltas bucketed by word.
+#: The store is ``BucketedArtifactStore(spark, prefix, n,
+#: artifacts=LM_STORE_ARTIFACTS)``.
 LM_STORE_ARTIFACTS = {"lm_bigrams": ("w1",), "lm_unigrams": ("word",)}
-
-
-def lm_store(spark: SparkSession, prefix: str, n_buckets: int = 16):
-    """A BucketedArtifactStore instantiated with the LM artifact spec."""
-    from iceberg_explorer_spark.operators.incremental_artifacts import (
-        BucketedArtifactStore,
-    )
-
-    return BucketedArtifactStore(
-        spark, prefix, n_buckets, artifacts=LM_STORE_ARTIFACTS
-    )
 
 
 def lm_backfill(spark: SparkSession, sf_dir: str, store) -> None:
@@ -982,18 +973,14 @@ def lm_append(store, docs: DataFrame, batch_id: "str | None" = None) -> bool:
     epoch-sink lesson, resurfacing one layer up; the unigram half was
     the ADVICE r16 hole). Each half therefore only counts when its
     delta has rows — both probes are model-sized and bounded.
-    Backfill-first is
-    enforced by the commit-marker probe here plus the store-layer
-    gate. Increment doc_ids must be train-split ids globally new to
-    the corpus — the ingest id-allocation invariant; rows with
+    Backfill-first: the commit marker ``lm_bigrams`` must exist (the
+    store's :meth:`~BucketedArtifactStore.require`). Increment doc_ids
+    must be train-split ids globally new to the corpus — the ingest
+    id-allocation invariant; rows with
     doc_id % HELDOUT_MOD == 0 are REFUSED loudly (appending heldout
     docs into the model would contaminate the very split the score
     exists to keep honest)."""
-    if not store.exists("lm_bigrams"):
-        raise FileNotFoundError(
-            "lm_bigrams artifact not found — run lm_backfill (the "
-            "one-time model build) before appending an increment"
-        )
+    store.require("lm_bigrams")
     docs = docs.localCheckpoint(eager=True)  # one snapshot for gate + counts
     if docs.filter(F.col("doc_id") % HELDOUT_MOD == 0).limit(1).count():
         raise ValueError(
@@ -1399,20 +1386,9 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: The inverted-index artifact spec. ``part`` on the stats table is a
 #: constant bucket key — the table is O(appends) rows of deltas whose
-#: only consumer is a 1-row SUM.
+#: only consumer is a 1-row SUM. The store is
+#: ``BucketedArtifactStore(spark, prefix, n, artifacts=BM25_STORE_ARTIFACTS)``.
 BM25_STORE_ARTIFACTS = {"bm25_postings": ("word",), "bm25_stats": ("part",)}
-
-
-def bm25_store(spark: SparkSession, prefix: str, n_buckets: int = 16):
-    """A BucketedArtifactStore instantiated with the inverted-index
-    artifact spec."""
-    from iceberg_explorer_spark.operators.incremental_artifacts import (
-        BucketedArtifactStore,
-    )
-
-    return BucketedArtifactStore(
-        spark, prefix, n_buckets, artifacts=BM25_STORE_ARTIFACTS
-    )
 
 
 def _bm25_postings(docs: DataFrame) -> "tuple[DataFrame, DataFrame]":
@@ -1463,11 +1439,7 @@ def bm25_append(store, docs: DataFrame, batch_id: "str | None" = None) -> bool:
     nothing and replays False forever. Increment doc_ids must be
     globally NEW — the ingest id-allocation invariant (a re-ingested
     doc would double-count its tf and df)."""
-    if not store.exists("bm25_stats"):
-        raise FileNotFoundError(
-            "bm25_stats artifact not found — run bm25_backfill (the "
-            "one-time index build) before appending an increment"
-        )
+    store.require("bm25_stats")
     docs = docs.localCheckpoint(eager=True)  # one snapshot for both counts
     postings, stats = _bm25_postings(docs)
     nonempty = bool(docs.head(1))
@@ -1518,22 +1490,10 @@ def bm25_topk_from_store(
         # filter dedups) while classic BM25 weights it per occurrence —
         # refuse the ambiguity instead of picking a side quietly
         raise ValueError(f"terms must be distinct; got {terms!r}")
-    from iceberg_explorer_spark.operators.similarity import (
-        _serve_session,
-        _serve_table,
-    )
-
-    spark = store.spark
-    store.read("bm25_postings")  # heal a crashed compaction first
-    store.read("bm25_stats")
-    s = _serve_session(spark)
-    s.catalog.refreshTable(_serve_table(store, "bm25_postings"))
-    s.catalog.refreshTable(_serve_table(store, "bm25_stats"))
-    post = s.table(_serve_table(store, "bm25_postings")).filter(
-        F.col("word").isin(*terms)
-    )
+    post, stats = store.serve_tables("bm25_postings", "bm25_stats")
+    post = post.filter(F.col("word").isin(*terms))
     corpus = F.broadcast(
-        s.table(_serve_table(store, "bm25_stats")).agg(
+        stats.agg(
             F.sum("n_docs").cast("bigint").alias("n_docs"),
             F.sum("corpus_len").cast("bigint").alias("corpus_len"),
         )

@@ -34,13 +34,6 @@ def physical_plan(df: DataFrame) -> str:
     return qe.executedPlan().toString()
 
 
-def formatted_plan(df: DataFrame) -> str:
-    """``EXPLAIN FORMATTED``-style text (node tree + per-node details)."""
-    return df._sc._jvm.PythonSQLUtils.explainString(  # type: ignore[attr-defined]
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def pushed_filters(df: DataFrame) -> list[str]:
     """All PushedFilters entries across the plan's file scans, flattened."""
     out: list[str] = []

@@ -26,10 +26,6 @@ TABLES = (
     "embeddings",
 )
 
-#: dimension tables that are small at every scale factor (region/nation are
-#: fixed-cardinality in TPC-H-style schemas) — always broadcast-joinable.
-SMALL_DIMS = frozenset({"region", "nation"})
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one test table. Plain parquet scan → vectorized reader,

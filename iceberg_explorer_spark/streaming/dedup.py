@@ -245,8 +245,8 @@ def epoch_keyed_sink(store, artifact: str, namespace: str, inner=None):
     reconstruct per-day results (the provenance column itself is
     store-internal and hidden from ``read``). First delivery of an
     epoch backfills the artifact with an empty frame if it does not
-    exist yet (the store's backfill-first gate applies to batch-id
-    appends); a crash between that backfill and the append retries
+    exist yet (the store's backfill-first check applies to every
+    append); a crash between that backfill and the append retries
     cleanly — the table exists, the append replays or lands as usual.
 
     ``inner``: optional downstream callable ``(cls_df, epoch_id)``

@@ -20,12 +20,6 @@ from pyspark.sql import types as T
 
 from iceberg_explorer_spark.functions.deterministic import sum_money
 
-#: column layout of the events table (TESTDATA.md). The physical type of
-#: ``ts`` varies by testdata generation (epoch-nanos long vs MICROS-NTZ), so
-#: ``read_events_stream`` derives the actual read schema from a batch footer
-#: probe instead of pinning it here.
-EVENTS_COLUMNS = ("event_id", "ts", "user_id", "event_type", "value", "props")
-
 
 def _stage_stream_dir(sf_dir: str) -> str:
     """The streaming file source wants a *directory* to watch. The test data

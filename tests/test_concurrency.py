@@ -1178,9 +1178,8 @@ def test_store_append_contract_edges_r15(spark):
     of the True-landed/False-replay contract; (2) a batch-id append
     onto a NONEXISTENT table raises instead of CREATE-on-appending an
     increment-only table (the backfill-first contract, inherited at
-    the store layer); (3) id-LESS appends keep the legacy
-    CREATE-on-append convenience, so the gate is scoped to exactly
-    the replay-probe hazard."""
+    the store layer); (3) so does an id-LESS append — the gate covers
+    every append, not only the replay-probe hazard."""
     import pytest
     from pyspark.sql import functions as F
 
@@ -1197,7 +1196,7 @@ def test_store_append_contract_edges_r15(spark):
     store = BucketedArtifactStore(spark, "t_art_edges_r15", n_buckets=2)
     try:
         # (2) backfill-first: idempotent append before write() raises
-        with pytest.raises(ValueError, match="does not exist"):
+        with pytest.raises(FileNotFoundError, match="t_art_edges_r15_digests"):
             store.append("digests", digests(0, 3), batch_id="night-0")
         assert not store.exists("digests")
         store.write("digests", digests(0, 10))
@@ -1219,11 +1218,12 @@ def test_store_append_contract_edges_r15(spark):
         assert store.append("digests", digests(100, 105),
                             batch_id="night-1") is False
         assert store.read("digests").count() == 15
-        # (3) id-less CREATE-on-append convenience is unchanged
+        # (3) an id-less append onto a missing table raises too
         sh = spark.range(0, 4).select(
             F.col("id").alias("doc_id"), F.col("id").alias("hb")
         )
-        store.append("shingles", sh)
-        assert store.read("shingles").count() == 4
+        with pytest.raises(FileNotFoundError, match="t_art_edges_r15_shingles"):
+            store.append("shingles", sh)
+        assert not store.exists("shingles")
     finally:
         store.drop()

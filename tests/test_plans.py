@@ -371,14 +371,14 @@ def test_bucketed_digest_probe_no_history_shuffle(spark, tmp_path):
         aggregation's distribution; and
     (2) the full exact-stage probe (incremental_exact_flags over a
         day-2 batch, broadcast disabled so the plan can't cheat) plans
-        with exactly ONE FEWER shuffle than the same probe over the
-        path-layout artifact — the eliminated exchange is the
-        corpus-sized history side, the one that must never move at
-        100 TB; the remaining shuffles are increment-sized (batch key
-        grouping and join alignment).
+        with exactly ONE FEWER shuffle than the same probe over an
+        unbucketed parquet copy of the same digests — the eliminated
+        exchange is the corpus-sized history side, the one that must
+        never move at 100 TB; the remaining shuffles are
+        increment-sized (batch key grouping and join alignment).
 
-    Row-equality of the two layouts is pinned by the store round-trip
-    test; this pins the layout's plan claim."""
+    Row-equality with the in-session path is pinned by the store
+    round-trip test; this pins the layout's plan claim."""
     from iceberg_explorer_spark.operators.dedup import (
         INCR_DAY2_REM,
         INCR_MOD,
@@ -399,10 +399,12 @@ def test_bucketed_digest_probe_no_history_shuffle(spark, tmp_path):
     # re-shuffling increment-sized rows — matched widths avoid that too.
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     store = BucketedArtifactStore(spark, "t_art_plan", n_buckets=n)
-    art = str(tmp_path / "path_artifacts")
     try:
         write_incremental_artifacts(spark, SF_DIR_SMALL, store)
-        write_incremental_artifacts(spark, SF_DIR_SMALL, art)
+        # the contrast: the same digest rows as a plain (unbucketed)
+        # parquet directory
+        unbucketed = str(tmp_path / "digests.parquet")
+        store.read("digests").write.mode("overwrite").parquet(unbucketed)
         import pyspark.sql.functions as F
 
         d2 = F.col("doc_id") % INCR_MOD == INCR_DAY2_REM
@@ -423,9 +425,7 @@ def test_bucketed_digest_probe_no_history_shuffle(spark, tmp_path):
             )
             probe_path = incremental_exact_flags(
                 batch,
-                history_digests=spark.read.parquet(
-                    f"{art}/digests.parquet"
-                ),
+                history_digests=spark.read.parquet(unbucketed),
                 batch_pred=_all_batch,
             )
             n_bucketed = pi.shuffle_count(probe_bucketed)

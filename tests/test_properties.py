@@ -19,6 +19,9 @@ from pyspark.sql import functions as F
 from iceberg_explorer_spark.gate import validate_sql_lexical
 from iceberg_explorer_spark.errors import InvalidSQLError
 from iceberg_explorer_spark.operators.dedup import N_BANDS, lsh_candidates
+from iceberg_explorer_spark.operators.incremental_artifacts import (
+    BucketedArtifactStore,
+)
 from iceberg_explorer_spark.operators.joins import asof_join
 from tests.conftest import SF_DIR_SMALL
 
@@ -3243,14 +3246,14 @@ def test_multitable_ops_adversarial_corpus(spark, tmp_path):
     )
 
 
-def test_incremental_artifact_round_trip(spark, tmp_path):
+def test_incremental_artifact_round_trip(spark, tmp_path, request):
     """The persisted-artifact witness for the incremental family's 100 TB
     claim (history contributes ONLY its persisted artifacts; the nightly
     job appends, never rewrites): (1) the four history artifacts —
     digests, (doc_id, hb) shingles, band rows, SRP assignment — are
-    written to parquet; (2) with the session caches for the corpus
+    written to a store; (2) with the session caches for the corpus
     CLEARED, the full exact→near→semantic waterfall rerun reading history
-    only from those files produces row-for-row the SAME (doc_id, source,
+    only from those tables produces row-for-row the SAME (doc_id, source,
     stage) table as the in-session path, on a crafted corpus where every
     stage fires (exact vs corpus + in-batch, near vs corpus + in-batch,
     semantic, NULL-text digest group, survivor-aware keep); (3) the rows
@@ -3267,6 +3270,7 @@ def test_incremental_artifact_round_trip(spark, tmp_path):
         invalidate_shared_candidates,
     )
     from iceberg_explorer_spark.operators.incremental_artifacts import (
+        ARTIFACT_NAMES,
         append_incremental_artifacts,
         incremental_status_from_artifacts,
         write_incremental_artifacts,
@@ -3327,7 +3331,8 @@ def test_incremental_artifact_round_trip(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
 
     # (1) backfill the history artifacts
-    art = str(tmp_path / "artifacts")
+    art = BucketedArtifactStore(spark, "t_art_incr_rt", n_buckets=2)
+    request.addfinalizer(art.drop)
     counts = write_incremental_artifacts(spark, d, art)
     assert counts["digests"] == 2          # t_a, t_c
     assert counts["bands"] == 2 * N_BANDS  # one signature per history doc
@@ -3348,7 +3353,7 @@ def test_incremental_artifact_round_trip(spark, tmp_path):
     }
 
     # (2) fresh start: drop every session-shared materialization for the
-    # corpus, then rerun the waterfall with history read ONLY from files
+    # corpus, then rerun the waterfall with history read ONLY from tables
     invalidate_shared_candidates(d)
     from_files = sorted(
         tuple(r)
@@ -3358,21 +3363,13 @@ def test_incremental_artifact_round_trip(spark, tmp_path):
 
     # (3) the append bill equals the delta report, count for count.
     # The bill is counted from the increment frames (the production
-    # shape — O(batch), no artifact re-scan); the before/after FILE
+    # shape — O(batch), no artifact re-scan); the before/after ROW
     # counts here are the witness that the append physically landed.
-    from iceberg_explorer_spark.operators.incremental_artifacts import (
-        ARTIFACT_NAMES,
-    )
-
-    before_files = {
-        n: spark.read.parquet(f"{art}/{n}.parquet").count()
-        for n in ARTIFACT_NAMES
-    }
+    before_rows = {n: art.read(n).count() for n in ARTIFACT_NAMES}
     status = incremental_status_from_artifacts(spark, d, art)
     appended = append_incremental_artifacts(spark, d, art, status)
     for n in ARTIFACT_NAMES:
-        grown = spark.read.parquet(f"{art}/{n}.parquet").count()
-        assert grown == before_files[n] + appended[n], n
+        assert art.read(n).count() == before_rows[n] + appended[n], n
     assert appended["digests"] == sum(
         r["n_docs_appended"] for r in delta.values()
     )
@@ -3401,9 +3398,10 @@ def test_incremental_artifact_round_trip(spark, tmp_path):
 def test_bucketed_artifact_store_round_trip_with_compaction(spark, tmp_path):
     """The bucketed artifact store (VERDICT r12 #3 — makes the operator
     docstrings' 'bucketed digest artifact' claim executable): (1) the
-    backfill through BucketedArtifactStore writes the same rows as the
-    path store and the full waterfall read from the bucketed tables is
-    row-for-row identical to the path-artifact run; (2) a nightly append
+    backfill through BucketedArtifactStore writes the history rows, and
+    the full waterfall and the paired report read from the bucketed
+    tables are row-for-row identical to the in-session
+    pipeline.incremental_status and dedup_incremental_paired; (2) a nightly append
     lands through the same bucket spec (row growth equals the appended
     bill; at most one new file per bucket thanks to the writer's
     hash-aligned repartition); (3) ONE COMPACTION CYCLE rewrites every
@@ -3413,6 +3411,7 @@ def test_bucketed_artifact_store_round_trip_with_compaction(spark, tmp_path):
     keepers re-ingest as exact) holds over the compacted store."""
     import numpy as np
 
+    from iceberg_explorer_spark.operators import QUERIES
     from iceberg_explorer_spark.operators.dedup import (
         invalidate_shared_candidates,
     )
@@ -3424,6 +3423,7 @@ def test_bucketed_artifact_store_round_trip_with_compaction(spark, tmp_path):
         incremental_status_from_artifacts,
         write_incremental_artifacts,
     )
+    from iceberg_explorer_spark.operators.pipeline import incremental_status
     from iceberg_explorer_spark.operators.similarity import DIM
 
     t_a = " ".join(f"alpha{i} beta{i % 5} gamma{i % 11}" for i in range(40))
@@ -3464,36 +3464,39 @@ def test_bucketed_artifact_store_round_trip_with_compaction(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
 
     store = BucketedArtifactStore(spark, "t_art_rt", n_buckets=4)
-    art = str(tmp_path / "path_artifacts")
     try:
-        # (1) backfill parity: same per-artifact row counts, identical
-        # waterfall and paired reports from either layout
-        counts_path = write_incremental_artifacts(spark, d, art)
+        # (1) backfill: history is doc 3 alone (one digest, one
+        # signature's band rows, no vectors); the waterfall and paired
+        # reports read from the store equal the in-session references
         counts_store = write_incremental_artifacts(spark, d, store)
-        assert counts_store == counts_path
-        invalidate_shared_candidates(d)
-        from_path = sorted(
-            tuple(r)
-            for r in incremental_status_from_artifacts(spark, d, art).collect()
+        assert counts_store["digests"] == 1
+        assert counts_store["bands"] == N_BANDS
+        assert counts_store["srp"] == 0
+        assert counts_store["shingles"] > 0
+        in_session = sorted(
+            tuple(r) for r in incremental_status(spark, d).collect()
         )
+        paired_in_session = sorted(
+            tuple(r)
+            for r in QUERIES["dedup_incremental_paired"]
+            .builder(spark, d)
+            .collect()
+        )
+        invalidate_shared_candidates(d)
         from_store = sorted(
             tuple(r)
             for r in incremental_status_from_artifacts(
                 spark, d, store
             ).collect()
         )
-        assert from_store == from_path and from_store
-        paired_path = sorted(
-            tuple(r)
-            for r in incremental_paired_from_artifacts(spark, d, art).collect()
-        )
+        assert from_store == in_session and from_store
         paired_store = sorted(
             tuple(r)
             for r in incremental_paired_from_artifacts(
                 spark, d, store
             ).collect()
         )
-        assert paired_store == paired_path
+        assert paired_store == paired_in_session
 
         # (2) nightly append through the bucket spec
         rows_before = {n: store.read(n).count() for n in ARTIFACT_NAMES}
@@ -3816,7 +3819,7 @@ def test_incremental_paired_classification(spark, tmp_path):
     )
 
 
-def test_incremental_paired_artifact_round_trip(spark, tmp_path):
+def test_incremental_paired_artifact_round_trip(spark, tmp_path, request):
     """The paired sibling's persisted-artifact witness, completing the
     family's file-path coverage: (1) write_incremental_artifacts now
     also persists the (doc_id, source, ahash, caption_fp) pair-key
@@ -3861,7 +3864,8 @@ def test_incremental_paired_artifact_round_trip(spark, tmp_path):
         [], "vec_id long, embedding array<float>, label int"
     ).coalesce(1).write.mode("overwrite").parquet(f"{d}/embeddings.parquet")
 
-    art = str(tmp_path / "artifacts")
+    art = BucketedArtifactStore(spark, "t_art_paired_rt", n_buckets=2)
+    request.addfinalizer(art.drop)
     counts = write_incremental_artifacts(spark, d, art)
     assert counts["pairs"] == 1  # doc 7 is the only keyed history doc
 
@@ -3890,7 +3894,7 @@ def test_incremental_paired_artifact_round_trip(spark, tmp_path):
     invalidate_shared_candidates(d)
 
 
-def test_incremental_artifacts_two_day_operation(spark, tmp_path):
+def test_incremental_artifacts_two_day_operation(spark, tmp_path, request):
     """TRUE multi-day operation over the persisted artifacts (VERDICT
     r11 #2): batch membership is a pluggable predicate (id ranges here,
     not the parity fixture), corpus contact is decided by ARTIFACT
@@ -3975,7 +3979,8 @@ def test_incremental_artifacts_two_day_operation(spark, tmp_path):
     any_batch = lambda c: c >= 100                # noqa: E731
 
     # backfill: history = NOT any_batch = ids < 100
-    art = str(tmp_path / "artifacts")
+    art = BucketedArtifactStore(spark, "t_art_two_day", n_buckets=2)
+    request.addfinalizer(art.drop)
     counts = write_incremental_artifacts(spark, d, art, batch_pred=any_batch)
     assert counts["digests"] == 2  # t_a, t_c only
 
@@ -4020,11 +4025,8 @@ def test_incremental_artifacts_two_day_operation(spark, tmp_path):
     assert p2["s200"]["n_pairdup_vs_corpus"] == 1, p2
 
     # (bill) day-2 append = exactly its keepers' artifact rows, and the
-    # files grow by exactly the bill
-    before = {
-        n: spark.read.parquet(f"{art}/{n}.parquet").count()
-        for n in ARTIFACT_NAMES
-    }
+    # tables grow by exactly the bill
+    before = {n: art.read(n).count() for n in ARTIFACT_NAMES}
     a2 = append_incremental_artifacts(
         spark,
         d,
@@ -4037,8 +4039,7 @@ def test_incremental_artifacts_two_day_operation(spark, tmp_path):
     assert a2["srp"] == 1, a2            # only 230 has an embedding
     assert a2["pairs"] == 2, a2
     for n in ARTIFACT_NAMES:
-        grown = spark.read.parquet(f"{art}/{n}.parquet").count()
-        assert grown == before[n] + a2[n], n
+        assert art.read(n).count() == before[n] + a2[n], n
 
     # (idempotence) day-2 keepers are now history: a re-ingest claims
     # them at the exact stage
@@ -4665,7 +4666,7 @@ def test_simhash_hamming_over_cap_contract(spark, tmp_path):
     assert spec.builder(spark, d_at).count() == n * (n - 1) // 2
 
 
-def test_incremental_simhash_claims_and_artifact_twin(spark, tmp_path):
+def test_incremental_simhash_claims_and_artifact_twin(spark, tmp_path, request):
     """dedup_incremental_simhash's distinguishing claims on a crafted
     corpus, plus its persisted-artifact twin (the SIXTH artifact —
     VERDICT r12 #4): (1) a batch doc whose signature matches history is
@@ -4673,8 +4674,8 @@ def test_incremental_simhash_claims_and_artifact_twin(spark, tmp_path):
     its min and drops the rest (component semantics, same tail as the
     near/semantic siblings); (3) a novel doc is kept; (4) the artifact
     twin (history = the (doc_id, simhash) signature artifact ONLY)
-    reproduces the in-session report row-for-row, through BOTH the path
-    layout and the bucketed store; (5) the two-day machinery is generic
+    reproduces the in-session report row-for-row through the bucketed
+    store; (5) the two-day machinery is generic
     for the sixth artifact — after append_incremental_artifacts, a
     day-2 signature-dup of a day-1 KEPT doc reads as corpus contact
     (membership, which no id-parity rule can express), while a day-2
@@ -4747,16 +4748,9 @@ def test_incremental_simhash_claims_and_artifact_twin(spark, tmp_path):
             "dedup_incremental_simhash_crafted",
         )
 
-        # (4) the artifact twin reproduces the in-session report through
-        # both layouts — history = the signature artifact only
-        art = str(tmp_path / "path_artifacts")
-        write_incremental_artifacts(spark, d, art)
+        # (4) the artifact twin reproduces the in-session report —
+        # history = the signature artifact only
         in_session = sorted(tuple(r) for r in spec.builder(spark, d).collect())
-        from_path = sorted(
-            tuple(r)
-            for r in incremental_simhash_from_artifacts(spark, d, art).collect()
-        )
-        assert from_path == in_session
         store = BucketedArtifactStore(spark, "t_art_sim", n_buckets=4)
         try:
             write_incremental_artifacts(spark, d, store)
@@ -4775,7 +4769,8 @@ def test_incremental_simhash_claims_and_artifact_twin(spark, tmp_path):
         # under parity the day-2 ids are already history at backfill):
         # history = {3} only, day-1 = %10==0, then a DAY-2 simhash
         # ingest (%10==5) against artifacts grown by day-1's keeps
-        art2 = str(tmp_path / "twoday_artifacts")
+        art2 = BucketedArtifactStore(spark, "t_art_sim_two_day", n_buckets=2)
+        request.addfinalizer(art2.drop)
         d1 = lambda c: c % 10 == 0  # noqa: E731
         d2 = lambda c: c % 10 == 5  # noqa: E731
         write_incremental_artifacts(
@@ -4943,8 +4938,8 @@ def test_seen_canon_flags_rejects_reserved_key_prefix(spark):
 
 def test_append_before_backfill_fails_clearly(spark, tmp_path):
     """append_incremental_artifacts called before the one-time backfill
-    must fail with a message naming the missing artifacts — not an
-    opaque path-not-found from a parquet append (ADVICE r11)."""
+    must fail with a message naming the missing artifact tables — not an
+    opaque error from an append (ADVICE r11) — and land nothing."""
     from iceberg_explorer_spark.operators.incremental_artifacts import (
         append_incremental_artifacts,
     )
@@ -4952,21 +4947,13 @@ def test_append_before_backfill_fails_clearly(spark, tmp_path):
     status = spark.createDataFrame(
         [(10, "s", "kept")], "doc_id long, source string, stage string"
     )
-    with pytest.raises(FileNotFoundError, match="write_incremental"):
-        append_incremental_artifacts(
-            spark, SF_DIR_SMALL, str(tmp_path / "noart"), status
-        )
-
-    # only PATH_NOT_FOUND means "missing": a directory a crashed append
-    # left EMPTY must surface as its own AnalysisException, never as the
-    # re-run-the-backfill message (following that advice would
-    # mode('overwrite') the intact artifacts' appended history)
-    from pyspark.errors import AnalysisException
-
-    art = tmp_path / "partial"
-    (art / "digests.parquet").mkdir(parents=True)
-    with pytest.raises(AnalysisException):
-        append_incremental_artifacts(spark, SF_DIR_SMALL, str(art), status)
+    store = BucketedArtifactStore(spark, "t_art_noart", n_buckets=2)
+    try:
+        with pytest.raises(FileNotFoundError, match="t_art_noart_digests"):
+            append_incremental_artifacts(spark, SF_DIR_SMALL, store, status)
+        assert not any(store.exists(n) for n in store.artifacts)
+    finally:
+        store.drop()
 
 
 def test_ivf_probe_sweep_claims(spark, tmp_path):
@@ -5074,7 +5061,7 @@ def test_ivf_store_round_trip_pruned_serve(spark):
         IVF_NPROBE,
         ivf_append_lists,
         ivf_backfill_lists,
-        ivf_store,
+        IVF_STORE_ARTIFACTS,
         ivf_topk_from_store,
     )
     from iceberg_explorer_spark.plans import inspect as pi
@@ -5086,7 +5073,10 @@ def test_ivf_store_round_trip_pruned_serve(spark):
 
     d = "/root/testdata/sf0.01"
     n_buckets = 4
-    store = ivf_store(spark, "t_ivf_store", n_buckets=n_buckets)
+    store = BucketedArtifactStore(
+        spark, "t_ivf_store", n_buckets=n_buckets,
+        artifacts=IVF_STORE_ARTIFACTS,
+    )
     try:
         ivf_backfill_lists(spark, d, store)
         served = ivf_topk_from_store(store)
@@ -5531,14 +5521,17 @@ def test_ivfpq_store_round_trip_pruned_serve(spark):
         _with_normalized,
         ivfpq_append,
         ivfpq_backfill,
-        ivfpq_store,
+        IVFPQ_STORE_ARTIFACTS,
         ivfpq_topk_from_store,
     )
     from iceberg_explorer_spark.plans import inspect as pi
 
     d = "/root/testdata/sf0.01"
     n_buckets = 4
-    store = ivfpq_store(spark, "t_ivfpq_store", n_buckets=n_buckets)
+    store = BucketedArtifactStore(
+        spark, "t_ivfpq_store", n_buckets=n_buckets,
+        artifacts=IVFPQ_STORE_ARTIFACTS,
+    )
     try:
         ivfpq_backfill(spark, d, store)
         emb = _with_normalized(_load_emb(spark, d))
@@ -5647,9 +5640,9 @@ def test_index_append_requires_backfill(spark):
         _load_emb,
         _with_normalized,
         ivf_append_lists,
-        ivf_store,
+        IVF_STORE_ARTIFACTS,
         ivfpq_append,
-        ivfpq_store,
+        IVFPQ_STORE_ARTIFACTS,
     )
 
     d = "/root/testdata/sf0.001"
@@ -5658,10 +5651,18 @@ def test_index_append_requires_backfill(spark):
         .filter(F.col("vec_id") == 20)
         .withColumn("vec_id", F.lit(20_000_000).cast("long"))
     )
-    s1 = ivf_store(spark, "t_ivf_nobackfill", n_buckets=2)
-    s2 = ivfpq_store(spark, "t_ivfpq_nobackfill", n_buckets=2)
+    s1 = BucketedArtifactStore(
+        spark, "t_ivf_nobackfill", n_buckets=2,
+        artifacts=IVF_STORE_ARTIFACTS,
+    )
+    s2 = BucketedArtifactStore(
+        spark, "t_ivfpq_nobackfill", n_buckets=2,
+        artifacts=IVFPQ_STORE_ARTIFACTS,
+    )
     try:
-        with pytest.raises(FileNotFoundError, match="ivf_backfill_lists"):
+        with pytest.raises(
+            FileNotFoundError, match="t_ivf_nobackfill_ivf_lists"
+        ):
             ivf_append_lists(s1, inc)
         # the half-backfilled crash state: models landed, marker absent
         emb = _with_normalized(_load_emb(spark, d))
@@ -5671,11 +5672,41 @@ def test_index_append_requires_backfill(spark):
                 F.col("vec_id").alias("cid"), F.col("ne").alias("cvec")
             ),
         )
-        with pytest.raises(FileNotFoundError, match="ivfpq_backfill"):
+        with pytest.raises(
+            FileNotFoundError, match="t_ivfpq_nobackfill_ivfpq_codes"
+        ):
             ivfpq_append(s2, inc)
     finally:
         s1.drop()
         s2.drop()
+
+
+def test_bq_mrl_append_without_backfill_refuses(spark):
+    """The backfill-first check covers id-less appends too: on a fresh
+    store, bq_append and mrl_append with no backfill and no batch_id
+    must raise FileNotFoundError naming the index table and create
+    nothing — a created table would hold only the increment, and every
+    later serve would take it for the whole corpus."""
+    from iceberg_explorer_spark.operators.similarity import (
+        BQ_STORE_ARTIFACTS,
+        MRL_STORE_ARTIFACTS,
+        bq_append,
+        mrl_append,
+    )
+
+    inc = spark.read.parquet(f"{SF_DIR_SMALL}/embeddings.parquet").limit(5)
+    cases = (
+        ("t_bq_nobackfill", BQ_STORE_ARTIFACTS, bq_append, "bq_index"),
+        ("t_mrl_nobackfill", MRL_STORE_ARTIFACTS, mrl_append, "mrl_index"),
+    )
+    for prefix, spec, append, table in cases:
+        st = BucketedArtifactStore(spark, prefix, n_buckets=2, artifacts=spec)
+        try:
+            with pytest.raises(FileNotFoundError, match=f"{prefix}_{table}"):
+                append(st, inc)
+            assert not st.exists(table)
+        finally:
+            st.drop()
 
 
 def test_clean_corpus_v3_claims(spark, tmp_path):
@@ -5886,7 +5917,7 @@ def test_index_store_generative_schedules(spark, tmp_path):
 
     r16 (VERDICT r15 #4): the REFINE cascade joins the step mix —
     after every step ivfpq_refine_from_store (alternating per-serve
-    and hoisted-codebook paths, default check_snapshot ON) is
+    and hoisted-codebook paths, coverage check always on) is
     row-parity-checked against similarity_ivf_pq_refine_topk over the
     evolving corpus, so the cascade's same-snapshot contract is
     exercised across paired appends, replays, and per-store
@@ -5914,21 +5945,21 @@ def test_index_store_generative_schedules(spark, tmp_path):
         _with_normalized,
         bq_append,
         bq_backfill,
-        bq_store,
+        BQ_STORE_ARTIFACTS,
         bq_topk_from_store,
         ivf_append_lists,
         ivf_backfill_lists,
-        ivf_store,
+        IVF_STORE_ARTIFACTS,
         ivf_topk_from_store,
         ivfpq_append,
         ivfpq_backfill,
         ivfpq_codebook,
         ivfpq_refine_from_store,
-        ivfpq_store,
+        IVFPQ_STORE_ARTIFACTS,
         ivfpq_topk_from_store,
         mrl_append,
         mrl_backfill,
-        mrl_store,
+        MRL_STORE_ARTIFACTS,
         mrl_topk_from_store,
     )
 
@@ -5956,10 +5987,22 @@ def test_index_store_generative_schedules(spark, tmp_path):
     def run_schedule(seed):
         corpus_dir = str(tmp_path / f"corpus_{seed}")
         base.write.mode("overwrite").parquet(f"{corpus_dir}/embeddings.parquet")
-        ivf_s = ivf_store(spark, f"t_ivf_gen_{seed}", n_buckets=4)
-        pq_s = ivfpq_store(spark, f"t_ivfpq_gen_{seed}", n_buckets=4)
-        bq_s = bq_store(spark, f"t_bq_gen_{seed}", n_buckets=4)
-        mrl_s = mrl_store(spark, f"t_mrl_gen_{seed}", n_buckets=4)
+        ivf_s = BucketedArtifactStore(
+            spark, f"t_ivf_gen_{seed}", n_buckets=4,
+            artifacts=IVF_STORE_ARTIFACTS,
+        )
+        pq_s = BucketedArtifactStore(
+            spark, f"t_ivfpq_gen_{seed}", n_buckets=4,
+            artifacts=IVFPQ_STORE_ARTIFACTS,
+        )
+        bq_s = BucketedArtifactStore(
+            spark, f"t_bq_gen_{seed}", n_buckets=4,
+            artifacts=BQ_STORE_ARTIFACTS,
+        )
+        mrl_s = BucketedArtifactStore(
+            spark, f"t_mrl_gen_{seed}", n_buckets=4,
+            artifacts=MRL_STORE_ARTIFACTS,
+        )
         from concurrent.futures import ThreadPoolExecutor
 
         # The five model queries / five serves are independent actions
@@ -6067,7 +6110,7 @@ def test_index_store_generative_schedules(spark, tmp_path):
                     codebook=cb if h(seed, step, "hoist") % 2 else None,
                 )
                 # r16: the refine cascade over BOTH stores, same
-                # alternation, default same-snapshot check ON — paired
+                # alternation, same-snapshot coverage check ON — paired
                 # appends keep the contract satisfiable at every step
                 serve_ref = ivfpq_refine_from_store(
                     pq_s,
@@ -6540,19 +6583,25 @@ def test_ivfpq_refine_store_round_trip(spark):
         _with_normalized,
         ivf_append_lists,
         ivf_backfill_lists,
-        ivf_store,
+        IVF_STORE_ARTIFACTS,
         ivfpq_append,
         ivfpq_backfill,
         ivfpq_codebook,
         ivfpq_refine_from_store,
-        ivfpq_store,
+        IVFPQ_STORE_ARTIFACTS,
     )
     from iceberg_explorer_spark.plans import inspect as pi
 
     d = "/root/testdata/sf0.01"
     n_buckets = 4
-    cs = ivfpq_store(spark, "t_refine_codes", n_buckets=n_buckets)
-    vs = ivf_store(spark, "t_refine_vecs", n_buckets=n_buckets)
+    cs = BucketedArtifactStore(
+        spark, "t_refine_codes", n_buckets=n_buckets,
+        artifacts=IVFPQ_STORE_ARTIFACTS,
+    )
+    vs = BucketedArtifactStore(
+        spark, "t_refine_vecs", n_buckets=n_buckets,
+        artifacts=IVF_STORE_ARTIFACTS,
+    )
     try:
         ivfpq_backfill(spark, d, cs)
         ivf_backfill_lists(spark, d, vs)
@@ -6631,13 +6680,10 @@ def test_ivfpq_refine_store_snapshot_guard(spark):
     — its vec lands in the ADC shortlist (exact duplicate of the query
     -> maximal ADC score) but the VECTOR index has no such row, so
     before r16 the pruned scan silently dropped it. Pins: (1) the
-    default serve raises ValueError naming the missing vec_id; (2)
-    check_snapshot=False preserves the documented silent-drop
-    behavior (the result simply lacks the id — the knob for ingest
-    paths whose transactionality is enforced upstream); (3) landing
+    serve raises ValueError naming the missing vec_id; (2) landing
     the SAME increment on the vector store heals the serve, the
-    duplicate takes rank 1 at cosine 1.0, and the default
-    check passes quietly again."""
+    duplicate takes rank 1 at cosine 1.0, and the coverage check
+    passes quietly again."""
     import pytest
 
     from iceberg_explorer_spark.operators.similarity import (
@@ -6645,16 +6691,22 @@ def test_ivfpq_refine_store_snapshot_guard(spark):
         _with_normalized,
         ivf_append_lists,
         ivf_backfill_lists,
-        ivf_store,
+        IVF_STORE_ARTIFACTS,
         ivfpq_append,
         ivfpq_backfill,
         ivfpq_refine_from_store,
-        ivfpq_store,
+        IVFPQ_STORE_ARTIFACTS,
     )
 
     d = "/root/testdata/sf0.01"
-    cs = ivfpq_store(spark, "t_refine_guard_codes", n_buckets=4)
-    vs = ivf_store(spark, "t_refine_guard_vecs", n_buckets=4)
+    cs = BucketedArtifactStore(
+        spark, "t_refine_guard_codes", n_buckets=4,
+        artifacts=IVFPQ_STORE_ARTIFACTS,
+    )
+    vs = BucketedArtifactStore(
+        spark, "t_refine_guard_vecs", n_buckets=4,
+        artifacts=IVF_STORE_ARTIFACTS,
+    )
     try:
         ivfpq_backfill(spark, d, cs)
         ivf_backfill_lists(spark, d, vs)
@@ -6675,14 +6727,6 @@ def test_ivfpq_refine_store_snapshot_guard(spark):
         assert ivfpq_append(cs, inc, batch_id="half-night") is True
         with pytest.raises(ValueError, match=str(new_id)):
             ivfpq_refine_from_store(cs, vs, qv, query_vec_id=0).collect()
-        # the opt-out preserves the documented silent-drop contract
-        silent = [
-            tuple(r)
-            for r in ivfpq_refine_from_store(
-                cs, vs, qv, query_vec_id=0, check_snapshot=False
-            ).collect()
-        ]
-        assert silent and new_id not in {s[0] for s in silent}
         # heal: land the same increment on the vector store
         assert ivf_append_lists(vs, inc, batch_id="half-night") is True
         healed = [
@@ -8120,7 +8164,7 @@ def test_bq_store_round_trip(spark):
     similarity_bq_hamming_topk with its persisted index, the same
     discipline as the IVF/PQ/refine serves): (1) serve parity —
     bq_topk_from_store returns ROW-IDENTICAL results to the registered
-    query, with and without the default snapshot check; (2) the
+    query; (2) the
     returned frame is the cascade's production plan — ONE scan of the
     single artifact, bucket-PRUNED to the shortlist ids' buckets
     (SelectedBucketsCount < total at a small r), Hamming distances as
@@ -8141,19 +8185,20 @@ def test_bq_store_round_trip(spark):
         _bq_hamming_frame,
         _bq_pack_py,
         _load_emb,
-        _serve_session,
-        _serve_table,
         _with_normalized,
         bq_append,
         bq_backfill,
-        bq_store,
+        BQ_STORE_ARTIFACTS,
         bq_topk_from_store,
     )
     from iceberg_explorer_spark.plans import inspect as pi
 
     d = "/root/testdata/sf0.01"
     n_buckets = 4
-    st = bq_store(spark, "t_bq_rt", n_buckets=n_buckets)
+    st = BucketedArtifactStore(
+        spark, "t_bq_rt", n_buckets=n_buckets,
+        artifacts=BQ_STORE_ARTIFACTS,
+    )
     try:
         # backfill-first gate at the store layer: an idempotent append
         # before the backfill must refuse
@@ -8162,7 +8207,7 @@ def test_bq_store_round_trip(spark):
             "CAST(array() AS array<float>) AS embedding",
             "CAST(0 AS int) AS label",
         )
-        with pytest.raises(ValueError, match="does not exist"):
+        with pytest.raises(FileNotFoundError, match="t_bq_rt_bq_index"):
             bq_append(st, inc0, batch_id="too-early")
 
         bq_backfill(spark, d, st)
@@ -8180,12 +8225,6 @@ def test_bq_store_round_trip(spark):
             .collect()
         ]
         assert got == want and got
-        assert [
-            tuple(r)
-            for r in bq_topk_from_store(
-                st, qv, query_vec_id=0, check_snapshot=False
-            ).collect()
-        ] == got
 
         # (2) the production plan of the returned frame
         plan = pi.physical_plan(served)
@@ -8205,8 +8244,7 @@ def test_bq_store_round_trip(spark):
         assert int(m.group(1)) <= 3 < int(m.group(2)) == n_buckets
 
         # (3) stage 1 reads sketches only
-        s = _serve_session(spark)
-        art = s.table(_serve_table(st, "bq_index"))
+        (art,) = st.serve_tables("bq_index")
         qlo, qhi = _bq_pack_py(qv)
         h_plan = pi.physical_plan(_bq_hamming_frame(art, qlo, qhi, 0))
         mm = h_plan[h_plan.index("ReadSchema"):].splitlines()[0]
@@ -8428,9 +8466,8 @@ def test_mrl_store_round_trip(spark):
     compression point without a persisted serving leg; pairing
     similarity_mrl_prefix_topk with its index, the BQ store's
     discipline): (1) serve parity — mrl_topk_from_store returns
-    ROW-IDENTICAL results to the registered query, with and without
-    the default snapshot check; (2) the returned frame is the
-    production plan — ONE scan of the single artifact, bucket-PRUNED
+    ROW-IDENTICAL results to the registered query; (2) the returned
+    frame is the production plan — ONE scan of the single artifact, bucket-PRUNED
     to the shortlist ids' buckets, prefix scores as a literal map, the
     exact cosine inlined: zero joins, zero shuffles, zero Window
     nodes, zero broadcasts; (3) stage 1's prefix frame is
@@ -8452,19 +8489,20 @@ def test_mrl_store_round_trip(spark):
     from iceberg_explorer_spark.operators.similarity import (
         _load_emb,
         _mrl_prefix_frame,
-        _serve_session,
-        _serve_table,
         _with_normalized,
         mrl_append,
         mrl_backfill,
-        mrl_store,
+        MRL_STORE_ARTIFACTS,
         mrl_topk_from_store,
     )
     from iceberg_explorer_spark.plans import inspect as pi
 
     d = "/root/testdata/sf0.01"
     n_buckets = 4
-    st = mrl_store(spark, "t_mrl_rt", n_buckets=n_buckets)
+    st = BucketedArtifactStore(
+        spark, "t_mrl_rt", n_buckets=n_buckets,
+        artifacts=MRL_STORE_ARTIFACTS,
+    )
     try:
         # backfill-first gate at the store layer
         inc0 = spark.range(0).selectExpr(
@@ -8472,7 +8510,7 @@ def test_mrl_store_round_trip(spark):
             "CAST(array() AS array<float>) AS embedding",
             "CAST(0 AS int) AS label",
         )
-        with pytest.raises(ValueError, match="does not exist"):
+        with pytest.raises(FileNotFoundError, match="t_mrl_rt_mrl_index"):
             mrl_append(st, inc0, batch_id="too-early")
 
         mrl_backfill(spark, d, st)
@@ -8490,12 +8528,6 @@ def test_mrl_store_round_trip(spark):
             .collect()
         ]
         assert got == want and got
-        assert [
-            tuple(r)
-            for r in mrl_topk_from_store(
-                st, qv, query_vec_id=0, check_snapshot=False
-            ).collect()
-        ] == got
 
         # (2) the production plan of the returned frame
         plan = pi.physical_plan(served)
@@ -8513,8 +8545,7 @@ def test_mrl_store_round_trip(spark):
         assert int(m.group(1)) <= 3 < int(m.group(2)) == n_buckets
 
         # (3) stage 1 reads the prefix column only
-        s = _serve_session(spark)
-        art = s.table(_serve_table(st, "mrl_index"))
+        (art,) = st.serve_tables("mrl_index")
         p_plan = pi.physical_plan(_mrl_prefix_frame(art, qv, 0))
         mm = p_plan[p_plan.index("ReadSchema"):].splitlines()[0]
         assert set(
@@ -8778,20 +8809,23 @@ def test_lm_store_round_trip(spark, tmp_path):
         lm_append,
         lm_backfill,
         lm_score_from_store,
-        lm_store,
+        LM_STORE_ARTIFACTS,
     )
     from iceberg_explorer_spark.plans import inspect as pi
     from iceberg_explorer_spark.sources.registry import load_table
 
     d = "/root/testdata/sf0.01"
-    st = lm_store(spark, "t_lm_rt", n_buckets=4)
+    st = BucketedArtifactStore(
+        spark, "t_lm_rt", n_buckets=4,
+        artifacts=LM_STORE_ARTIFACTS,
+    )
     doc_schema = (
         "doc_id long, text string, lang string, source string,"
         " n_chars long"
     )
     try:
         # (6) backfill-first: the commit-marker probe refuses loudly
-        with pytest.raises(FileNotFoundError, match="lm_backfill"):
+        with pytest.raises(FileNotFoundError, match="t_lm_rt_lm_bigrams"):
             lm_append(
                 st,
                 spark.createDataFrame([], doc_schema),
@@ -8835,7 +8869,10 @@ def test_lm_store_round_trip(spark, tmp_path):
         docs.filter(F.col("doc_id") % HELDOUT_MOD != 0).unionByName(
             inc
         ).write.mode("overwrite").parquet(f"{union_dir}/documents.parquet")
-        st2 = lm_store(spark, "t_lm_rt2", n_buckets=4)
+        st2 = BucketedArtifactStore(
+            spark, "t_lm_rt2", n_buckets=4,
+            artifacts=LM_STORE_ARTIFACTS,
+        )
         try:
             lm_backfill(spark, union_dir, st2)
             rebuilt = sorted(
@@ -8865,7 +8902,10 @@ def test_lm_store_round_trip(spark, tmp_path):
         ).unionByName(inc2).write.mode("overwrite").parquet(
             f"{union2}/documents.parquet"
         )
-        st3 = lm_store(spark, "t_lm_rt3", n_buckets=4)
+        st3 = BucketedArtifactStore(
+            spark, "t_lm_rt3", n_buckets=4,
+            artifacts=LM_STORE_ARTIFACTS,
+        )
         try:
             lm_backfill(spark, union2, st3)
             rebuilt2 = sorted(
@@ -8995,7 +9035,7 @@ def test_bm25_store_round_trip(spark):
         _bm25_postings,
         bm25_append,
         bm25_backfill,
-        bm25_store,
+        BM25_STORE_ARTIFACTS,
         bm25_topk_from_store,
     )
     from iceberg_explorer_spark.plans import inspect as pi
@@ -9003,14 +9043,17 @@ def test_bm25_store_round_trip(spark):
 
     d = "/root/testdata/sf0.01"
     n_buckets = 8
-    st = bm25_store(spark, "t_bm25_rt", n_buckets=n_buckets)
+    st = BucketedArtifactStore(
+        spark, "t_bm25_rt", n_buckets=n_buckets,
+        artifacts=BM25_STORE_ARTIFACTS,
+    )
     doc_schema = (
         "doc_id long, text string, lang string, source string,"
         " n_chars long"
     )
     try:
         # (6) backfill-first: the commit-marker probe refuses loudly
-        with pytest.raises(FileNotFoundError, match="bm25_backfill"):
+        with pytest.raises(FileNotFoundError, match="t_bm25_rt_bm25_stats"):
             bm25_append(
                 st,
                 spark.createDataFrame([], doc_schema),
@@ -9058,7 +9101,10 @@ def test_bm25_store_round_trip(spark):
         assert bm25_append(st, inc, batch_id="night-1") is True
         got2 = [tuple(r) for r in bm25_topk_from_store(st).collect()]
         assert got2 != got  # the append genuinely moved the ranking
-        st2 = bm25_store(spark, "t_bm25_rb", n_buckets=n_buckets)
+        st2 = BucketedArtifactStore(
+            spark, "t_bm25_rb", n_buckets=n_buckets,
+            artifacts=BM25_STORE_ARTIFACTS,
+        )
         try:
             docs_union = load_table(spark, d, "documents").unionByName(inc)
             postings_u, stats_u = _bm25_postings(docs_union)
@@ -9142,7 +9188,7 @@ def test_bm25_store_generative_schedules(spark, tmp_path):
     from iceberg_explorer_spark.operators.text import (
         bm25_append,
         bm25_backfill,
-        bm25_store,
+        BM25_STORE_ARTIFACTS,
         bm25_topk_from_store,
     )
 
@@ -9160,7 +9206,10 @@ def test_bm25_store_generative_schedules(spark, tmp_path):
             "/root/testdata/sf0.001/documents.parquet"
         )
         base.write.mode("overwrite").parquet(f"{corpus_dir}/documents.parquet")
-        st = bm25_store(spark, f"t_bm25_gen_{seed}", n_buckets=4)
+        st = BucketedArtifactStore(
+            spark, f"t_bm25_gen_{seed}", n_buckets=4,
+            artifacts=BM25_STORE_ARTIFACTS,
+        )
         try:
             bm25_backfill(spark, corpus_dir, st)
 
