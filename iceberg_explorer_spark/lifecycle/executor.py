@@ -34,6 +34,7 @@ from iceberg_explorer_spark.lifecycle.models import (
     QueryStatus,
 )
 from iceberg_explorer_spark.observability import QueryObserver, get_observer
+from iceberg_explorer_spark.plans.inspect import scan_output_rows
 
 DEFAULT_TIMEOUT = 300.0
 MIN_TIMEOUT = 10.0
@@ -182,10 +183,6 @@ class QueryExecutor:
                     table = table.slice(0, cap)
                     result.metrics.truncated = True
                 try:
-                    from iceberg_explorer_spark.plans.inspect import (
-                        scan_output_rows,
-                    )
-
                     result.metrics.rows_scanned = scan_output_rows(capped)
                 except Exception:
                     # metrics are best-effort; never fail a query over them

@@ -152,7 +152,7 @@ class Recorder:
         with self._lock:
             self.spans.append(span)
 
-    def set_retention(self, count: int, nbytes: int, evicted: int = 0) -> None:
+    def set_retention(self, count: int, nbytes: int, evicted: int) -> None:
         with self._lock:
             self.retained_results = count
             self.retained_result_bytes = nbytes
@@ -175,9 +175,7 @@ class QueryObserver:
     def __init__(self, recorder: Optional[Recorder] = None) -> None:
         self.recorder = recorder or Recorder()
 
-    def record_retention(
-        self, count: int, nbytes: int, evicted: int = 0
-    ) -> None:
+    def record_retention(self, count: int, nbytes: int, evicted: int) -> None:
         """Retention-policy gauges (terminal results held + Arrow bytes)
         and the cumulative eviction counter, recorder-backed like the
         reference's three instruments."""

@@ -22,11 +22,8 @@ bit-identical doubles.
 
 from __future__ import annotations
 
-import hashlib
-import os
 import functools
 import threading
-import time
 from collections import OrderedDict
 from collections.abc import Callable
 
@@ -37,6 +34,7 @@ from iceberg_explorer_spark.operators.registry import query
 from iceberg_explorer_spark.sources.registry import (
     eager_checkpoints,
     load_table,
+    table_fingerprint,
 )
 
 N_HASHES = 12
@@ -424,18 +422,21 @@ def pairs_from_band_rows(
 
 
 #: session-scoped materializations of shared artifacts, keyed by
-#: (spark application id, sf_dir, input tables, input fingerprint, kind)
-#: where kind names the declared artifact (``@shared_artifact``),
-#: LRU-bounded: holding a strong reference pins the
-#: checkpointed RDD blocks (ContextCleaner frees them only after the
-#: DataFrame is garbage collected), so an unbounded dict would grow
-#: block-manager memory monotonically in a long-lived session that touches
-#: many corpora (the adversarial sweeps build a fresh tmp corpus per run).
-#: The cap is two entries per declared kind: every artifact of two corpora,
-#: so a session that alternates between two corpora rebuilds nothing, while
-#: entries evicted past that become collectable again.
+#: (spark application id, sf_dir, kind) where kind names the declared
+#: artifact (``@shared_artifact``); the value is (fingerprints of the
+#: declared input tables, frame). One slot per (corpus, kind): a
+#: rewritten input fails the fingerprint comparison, and the rebuild
+#: replaces the stale frame in place. LRU-bounded: holding a strong
+#: reference pins the checkpointed RDD blocks (ContextCleaner frees them
+#: only after the DataFrame is garbage collected), so an unbounded dict
+#: would grow block-manager memory monotonically in a long-lived session
+#: that touches many corpora (the adversarial sweeps build a fresh tmp
+#: corpus per run). The cap is two entries per declared kind: every
+#: artifact of two corpora, so a session that alternates between two
+#: corpora rebuilds nothing, while entries evicted past that become
+#: collectable again.
 _SHARED_CANDIDATES: OrderedDict[
-    tuple[str, str, str, str, str], DataFrame
+    tuple[str, str, str], tuple[tuple[str, ...], DataFrame]
 ] = OrderedDict()
 #: kind -> cached accessor, one entry per ``@shared_artifact`` declaration
 _SHARED_ARTIFACTS: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -454,7 +455,7 @@ _SHARED_ARTIFACTS: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 _SHARED_CANDIDATES_LOCK = threading.Lock()
 #: key -> Event for builds in flight; a failed build removes its entry
 #: and sets the Event, so one of the waiters retakes the build on re-check
-_SHARED_CANDIDATES_BUILDS: dict[tuple[str, str, str, str, str], threading.Event] = {}
+_SHARED_CANDIDATES_BUILDS: dict[tuple[str, str, str], threading.Event] = {}
 #: invalidation generation: bumped by invalidate_shared_candidates. A
 #: build snapshots it before running and declines to INSERT (still
 #: returns its frame) if an invalidation happened meanwhile — otherwise
@@ -463,203 +464,15 @@ _SHARED_CANDIDATES_BUILDS: dict[tuple[str, str, str, str, str], threading.Event]
 _SHARED_CANDIDATES_GEN = 0
 
 
-#: Bytes of file tail folded into the corpus fingerprint. A parquet file's
-#: last bytes are the thrift-compact footer (row-group offsets, column
-#: stats, metadata length, magic) — any data rewrite perturbs them, so the
-#: tail is a strong content signal at a fixed tiny read cost.
-_FINGERPRINT_TAIL_BYTES = 64
-
-#: Stat-gated fingerprint memo: (sf_dir, table) ->
-#: (listing_digest, fingerprint_digest, racy). The listing digest hashes
-#: the sorted (rel, size, mtime_ns, ctime_ns) tuples; if it matches the
-#: previous computation the memoized fingerprint is reused WITHOUT
-#: reopening any file, turning the warm-lookup cost from O(#files)
-#: stat+open+seek+read into O(#files) stat only — the same syscalls
-#: Spark's own file listing already pays. Hashing the listing (rather
-#: than retaining it) keeps each entry O(1) bytes regardless of file
-#: count — a million-file corpus memoizes as two 32-char digests, not a
-#: ~200 MB tuple list. ctime is the safety latch: userspace cannot set
-#: it (``utime``/``touch -r`` restore mtime but the kernel bumps ctime
-#: on every write AND every metadata change), so a metadata-preserving
-#: rewrite can never satisfy the gate — EXCEPT within one timestamp tick
-#: on filesystems with coarse granularity, which the ``racy`` flag
-#: covers (git's "racily clean" rule): an entry whose newest file stamp
-#: is within _FINGERPRINT_RACY_WINDOW_NS of the memo's own computation
-#: time never serves the fast path, because a rewrite landing in the
-#: same coarse tick as the recorded stamp would produce an identical
-#: listing. Racy entries fall through to the full tail read (correct by
-#: construction) and re-memoize; once the stamps age past the window the
-#: entry self-upgrades to trusted. Bounded LRU.
-_FINGERPRINT_MEMO: "OrderedDict[tuple[str, str], tuple[str, str, bool]]" = OrderedDict()
-_FINGERPRINT_MEMO_MAX = 64
-_FINGERPRINT_MEMO_LOCK = threading.Lock()
-#: Stamps newer than this (relative to the moment the stat scan STARTED,
-#: not when it finished — anchoring at scan start keeps the full window
-#: even when the tail-read pass over a large corpus takes seconds, the
-#: same reason git anchors racily-clean at index-READ time) mark the
-#: entry racy. 4 s = two FAT ticks: FAT's mtime granularity is itself
-#: 2 s, so a 2 s window would give zero slack on the coarsest filesystem
-#: it claims to cover; 4 s leaves one full tick of slack on FAT and
-#: three on second-granularity NFSv3/FUSE gateways. Stamps in the
-#: FUTURE of the local clock (skewed NFS server) yield a negative delta
-#: and stay racy — the safe direction: the fast path is merely disabled,
-#: and the entry self-upgrades once the local clock passes stamp+window.
-_FINGERPRINT_RACY_WINDOW_NS = 4_000_000_000
-
-
-def _corpus_fingerprint(sf_dir: str, table: str = "documents") -> str:
-    """Content fingerprint of the candidate generator's input table: the sorted
-    (relative path, size, mtime_ns, last-64-bytes) listing under
-    ``documents.parquet``, md5-hashed. Folded into the cache key so a
-    corpus REWRITTEN at the same path within one Spark application
-    (``mode('overwrite')`` fixtures, a reused sweep path,
-    incremental-ingest style updates) re-materializes instead of silently
-    serving the OLD corpus's candidate pairs. The footer tail catches
-    even metadata-preserving rewrites (``cp -p`` / ``touch -r`` /
-    timestamp-preserving object-store sync) because a parquet footer
-    encodes row-group offsets and column stats — identical tail bytes with
-    different data would need a deliberate byte-level forgery, which is
-    outside this cache's threat model; ``invalidate_shared_candidates``
-    remains the explicit escape hatch for that case.
-
-    Cost: O(#files) stat calls per lookup; the 64-byte tail reads are paid
-    only when the (size, mtime_ns, ctime_ns) listing differs from the
-    memoized computation, or when the memo entry is RACY — its newest
-    file stamp fell within ``_FINGERPRINT_RACY_WINDOW_NS`` of the memo's
-    own computation, the one window where a coarse-timestamp filesystem
-    (second-granularity NFS/FAT/FUSE) could absorb a rewrite into an
-    identical listing (see ``_FINGERPRINT_MEMO``). Warm cache hits at
-    million-file corpus scale stat but never reopen. The digest itself is
-    computed from (rel, size, mtime_ns, tail) exactly as before — ctime
-    guards the memo, it does not enter the fingerprint, so ctime-only
-    churn (chmod, chown) triggers one recompute but never a cache-key
-    change. A missing path fingerprints as empty (the query itself will
-    then raise the real error)."""
-    root = os.path.join(sf_dir, f"{table}.parquet")
-    paths = []
-    if os.path.isfile(root):
-        paths.append(("", root))
-    else:
-        for dirpath, _dirs, files in os.walk(root):
-            for name in files:
-                p = os.path.join(dirpath, name)
-                paths.append((os.path.relpath(p, root), p))
-    # Stat-only gate pass. Any stat failure marks the listing unstable
-    # (a rewrite is in progress) — unstable listings never match or
-    # populate the memo, so mid-rewrite states can't serve or pin a
-    # digest. Two mechanisms cover rewrites that land DURING the scan
-    # (the tail-read pass below can take seconds on a large corpus):
-    # a RE-STAT pass after the tail reads marks the entry unstable if
-    # any (size, mtime_ns, ctime_ns) moved while tails were being read —
-    # the stamps captured here predate the tail reads, so without the
-    # re-stat a mid-pass rewrite would be invisible to them and a mixed
-    # pre/post-rewrite digest could be memoized as trusted under the
-    # pre-rewrite listing digest. The racy window (anchored HERE, before
-    # the scan, at scan_start) covers the one case the re-stat cannot:
-    # a rewrite on a coarse-timestamp filesystem whose post-rewrite
-    # stamps are bit-identical to the captured ones — such stamps are
-    # necessarily within one tick of now, hence inside the window, so
-    # the entry is memoized racy and never serves the fast path.
-    scan_start_ns = time.time_ns()
-    stats: list[tuple[str, str, object]] = []
-    listing_parts = []
-    max_stamp_ns = 0
-    stable = True
-    for rel, p in paths:
-        try:
-            st = os.stat(p)
-            stats.append((rel, p, st))
-            listing_parts.append((rel, st.st_size, st.st_mtime_ns, st.st_ctime_ns))
-            if st.st_mtime_ns > max_stamp_ns:
-                max_stamp_ns = st.st_mtime_ns
-            if st.st_ctime_ns > max_stamp_ns:
-                max_stamp_ns = st.st_ctime_ns
-        except OSError:
-            stats.append((rel, p, None))
-            stable = False
-    memo_key = (sf_dir, table)
-    listing_digest = None
-    if stable:
-        # Stream the listing into the hash entry-by-entry: a single
-        # repr() of the whole sorted tuple would materialize a transient
-        # string proportional to file count on EVERY lookup — the very
-        # hot path the memo exists to keep cheap. Unstable listings
-        # never match or populate the memo, so skip the digest entirely.
-        h = hashlib.md5()
-        for part in sorted(listing_parts):
-            h.update(repr(part).encode())
-        listing_digest = h.hexdigest()
-        with _FINGERPRINT_MEMO_LOCK:
-            memo = _FINGERPRINT_MEMO.get(memo_key)
-            if memo is not None and memo[0] == listing_digest and not memo[2]:
-                _FINGERPRINT_MEMO.move_to_end(memo_key)
-                return memo[1]
-    entries = []
-    for rel, p, st in stats:
-        # A file can vanish between the walk and the stat/read — that is
-        # precisely an in-place rewrite in progress (mode('overwrite')
-        # deletes old part files first), the very event the fingerprint
-        # exists to detect. Record the vanishing itself instead of
-        # crashing the query with a raw FileNotFoundError: the entry
-        # differs from any stable listing, so the in-progress state never
-        # collides with the pre- or post-rewrite fingerprint.
-        try:
-            if st is None:
-                raise OSError(f"stat failed during fingerprint: {p}")
-            with open(p, "rb") as fh:
-                fh.seek(max(0, st.st_size - _FINGERPRINT_TAIL_BYTES))
-                tail = fh.read(_FINGERPRINT_TAIL_BYTES)
-            entries.append((rel, st.st_size, st.st_mtime_ns, tail))
-        except OSError:
-            entries.append((rel, -1, -1, b"<vanished-during-fingerprint>"))
-            stable = False
-    entries.sort()
-    digest = hashlib.md5(repr(entries).encode()).hexdigest()
-    if stable:
-        # Re-stat gate: the stamps above were captured BEFORE the tail
-        # reads, so a rewrite landing during the tail-read pass is
-        # invisible to them — its digest would mix pre- and post-rewrite
-        # bytes. If any file's (size, mtime_ns, ctime_ns) moved (or a
-        # stat now fails), skip memoization: the mixed digest is still a
-        # valid one-shot answer (it differs from both the pre- and
-        # post-rewrite fingerprints, so it cannot collide with either
-        # corpus state's cache key), but it must not be pinned under the
-        # pre-rewrite listing digest. Cost: one extra stat pass, paid
-        # only on the cold path that already opened every file.
-        for rel, p, st in stats:
-            try:
-                st2 = os.stat(p)
-                if (st2.st_size, st2.st_mtime_ns, st2.st_ctime_ns) != (
-                    st.st_size,
-                    st.st_mtime_ns,
-                    st.st_ctime_ns,
-                ):
-                    stable = False
-                    break
-            except OSError:
-                stable = False
-                break
-    if stable:
-        # Negative delta (stamp in the future of the local clock) stays
-        # racy — see _FINGERPRINT_RACY_WINDOW_NS.
-        racy = (scan_start_ns - max_stamp_ns) < _FINGERPRINT_RACY_WINDOW_NS
-        with _FINGERPRINT_MEMO_LOCK:
-            _FINGERPRINT_MEMO[memo_key] = (listing_digest, digest, racy)
-            _FINGERPRINT_MEMO.move_to_end(memo_key)
-            while len(_FINGERPRINT_MEMO) > _FINGERPRINT_MEMO_MAX:
-                _FINGERPRINT_MEMO.popitem(last=False)
-    return digest
-
-
 def invalidate_shared_candidates(sf_dir: str | None = None) -> None:
     """Drop cached candidate materializations — all of them, or only the
     entries for one corpus directory. In-place rewrites are ALSO detected
-    automatically (the content fingerprint is part of the cache key);
-    this helper is for explicit lifecycle control: tests, and long-lived
-    sessions that want the checkpoint blocks collectable NOW rather than
-    at LRU eviction. Builds in flight at the moment of invalidation
-    complete but do NOT re-enter the cache (generation check) — an
-    invalidated entry stays invalidated."""
+    automatically (every lookup compares the input tables' content
+    fingerprints); this helper is for explicit lifecycle control: tests,
+    and long-lived sessions that want the checkpoint blocks collectable
+    NOW rather than at LRU eviction. Builds in flight at the moment of
+    invalidation complete but do NOT re-enter the cache (generation
+    check) — an invalidated entry stays invalidated."""
     global _SHARED_CANDIDATES_GEN
     with _SHARED_CANDIDATES_LOCK:
         _SHARED_CANDIDATES_GEN += 1
@@ -686,11 +499,13 @@ def _shared_candidates(
     artifact — it never re-runs the generator pipeline per report. This
     mirrors that with a session-scoped ``localCheckpoint``: the first
     caller pays the pipeline, every later consumer reads the checkpointed
-    blocks. The registry is keyed by (application id, corpus dir, input
-    tables, content fingerprint, artifact kind) — a new session or a
-    rewritten input re-materializes — and LRU-bounded: while an entry is
-    cached its strong reference pins the checkpoint blocks; once evicted,
-    ContextCleaner frees them when the DataFrame is garbage collected.
+    blocks. The registry is keyed by (application id, corpus dir, artifact
+    kind) and each entry keeps the ``table_fingerprint`` of every table in
+    ``tables`` beside its frame: a new session or a rewrite of ANY input
+    table re-materializes, and the rebuild overwrites the stale slot.
+    While an entry is cached its strong reference pins the checkpoint
+    blocks; once evicted, ContextCleaner frees them when the DataFrame is
+    garbage collected.
     Thread-safe with PER-KEY build dedup: the service layer runs queries
     on concurrent daemon threads; a cold-cache race on one key
     materializes exactly once (same-key threads wait on the in-progress
@@ -701,43 +516,19 @@ def _shared_candidates(
     releases its waiters, and the first to re-check retakes the build.
     The built frame is checkpointed eagerly unless the build already
     returned a checkpoint (``_cc_labels``).
-
-    ``tables`` may hold more than one input table (the incremental
-    status waterfall fingerprints documents AND embeddings): the key's
-    table slot becomes the joined name and the fingerprint the
-    concatenation of per-table fingerprints, so a rewrite of EITHER
-    input re-materializes. The staleness eviction below compares PER
-    table component, so a single-table rebuild also evicts stale
-    multi-table entries that contain the rebuilt table — while an entry
-    over a genuinely different input can never be evicted by another
-    family's cold build (the r8 cross-table eviction lesson).
     """
 
-    def _fp() -> str:
-        fp = "|".join(_corpus_fingerprint(sf_dir, table=t) for t in tables)
-        # same re-split invariant for the fingerprint side ('|' joined,
-        # true today: md5 hexdigest or empty-on-missing per table) — a
-        # future fingerprint format carrying '|' must fail loudly here,
-        # not misalign the eviction zip
-        if len(fp.split("|")) != len(tables):
-            raise ValueError(
-                f"fingerprint components misalign with tables: {fp!r}"
-            )
-        return fp
+    def _fp() -> tuple[str, ...]:
+        return tuple(table_fingerprint(sf_dir, t) for t in tables)
 
-    key = (
-        spark.sparkContext.applicationId,
-        sf_dir,
-        "+".join(tables),
-        _fp(),
-        kind,
-    )
+    key = (spark.sparkContext.applicationId, sf_dir, kind)
     while True:
+        fp = _fp()
         with _SHARED_CANDIDATES_LOCK:
-            df = _SHARED_CANDIDATES.get(key)
-            if df is not None:
+            entry = _SHARED_CANDIDATES.get(key)
+            if entry is not None and entry[0] == fp:
                 _SHARED_CANDIDATES.move_to_end(key)
-                return df
+                return entry[1]
             in_flight = _SHARED_CANDIDATES_BUILDS.get(key)
             if in_flight is None:
                 in_flight = threading.Event()
@@ -759,63 +550,16 @@ def _shared_candidates(
             # Builds run OUTSIDE the lock, so two things can supersede
             # this result before it is inserted: an explicit
             # invalidation (generation bump) or an in-place rewrite of
-            # the input (fingerprint change). In either case the frame
+            # an input (fingerprint change). In either case the frame
             # is still returned to THIS caller — it is correct for the
             # corpus state at build time — but it must not enter the
-            # cache: a stale-fingerprint insert would be unreachable
-            # dead weight AND its staleness eviction would evict the
-            # live post-rewrite entry another thread just built.
-            fresh = _fp() == key[3]
+            # cache under a fingerprint that no longer holds.
+            fresh = _fp() == fp
             with _SHARED_CANDIDATES_LOCK:
                 if _SHARED_CANDIDATES_GEN != gen_at_start or not fresh:
                     return df
-                # A superseded fingerprint for the same (app, corpus dir,
-                # INPUT TABLE) can never be served again — evict it NOW
-                # (any kind over that table) rather than letting it pin
-                # dead checkpoint blocks until LRU age-out (repeated
-                # in-place rewrites of a few corpora would otherwise keep
-                # the cache full of unreachable checkpoints). Scoping by
-                # table matters: the semantic kinds fingerprint
-                # embeddings.parquet while the lsh/probe kinds fingerprint
-                # documents.parquet — comparing fingerprints ACROSS tables
-                # read "different input" as "stale" and made each family's
-                # cold build evict the other's live entries (measured as a
-                # rebuild ping-pong in the r8 bench:
-                # dedup_semantic_clusters timed its full 3.7 s build on
-                # every call instead of the 0.27 s cache-served read).
-                # Comparison is PER-COMPONENT (table slot split on '+',
-                # fingerprint on '|'): a single-table rebuild must also
-                # evict multi-table entries whose slot CONTAINS the
-                # rebuilt table — before this, a documents-only rewrite
-                # left stale 'documents+embeddings' entries pinned until
-                # a multi-table build next completed or LRU age-out
-                # (correctness was never affected — the fingerprint is
-                # in the key — but the dead checkpoint blocks were).
-                fresh_by_table = dict(zip(tables, key[3].split("|")))
-
-                def _components(k) -> list[tuple[str, str]]:
-                    # every inserted key passed the '+'/'|' invariants
-                    # at construction; re-assert before zipping so a
-                    # format drift evicts nothing silently-wrong
-                    ts, fps = k[2].split("+"), k[3].split("|")
-                    if len(ts) != len(fps):
-                        raise AssertionError(
-                            f"cache key components misalign: {k[2]!r}/{k[3]!r}"
-                        )
-                    return list(zip(ts, fps))
-
-                for k in [
-                    k
-                    for k in _SHARED_CANDIDATES
-                    if k[0] == key[0]
-                    and k[1] == key[1]
-                    and any(
-                        t in fresh_by_table and fp != fresh_by_table[t]
-                        for t, fp in _components(k)
-                    )
-                ]:
-                    del _SHARED_CANDIDATES[k]
-                _SHARED_CANDIDATES[key] = df
+                _SHARED_CANDIDATES[key] = (fp, df)
+                _SHARED_CANDIDATES.move_to_end(key)
                 while len(_SHARED_CANDIDATES) > 2 * len(_SHARED_ARTIFACTS):
                     _SHARED_CANDIDATES.popitem(last=False)
             return df
@@ -829,17 +573,12 @@ def shared_artifact(kind: str, tables: tuple[str, ...] = ("documents",)):
     """Declare ``build(spark, sf_dir) -> DataFrame`` as the session-shared
     artifact ``kind`` and return its cached accessor (same name and
     signature). The accessor serves the checkpoint from
-    ``_SHARED_CANDIDATES`` keyed by (application id, corpus dir,
-    ``tables``, their content fingerprint, ``kind``) and runs ``build``
-    only on a miss, so parent artifacts called inside ``build`` are
-    resolved only when the child is actually rebuilt. ``tables`` names
+    ``_SHARED_CANDIDATES`` keyed by (application id, corpus dir, ``kind``)
+    while the content fingerprints of ``tables`` still match, and runs
+    ``build`` only on a miss, so parent artifacts called inside ``build``
+    are resolved only when the child is actually rebuilt. ``tables`` names
     every input table the build reads: a rewrite of any of them
     re-materializes the artifact."""
-    if any("+" in t for t in tables):
-        # the key's table slot re-splits on '+' during staleness
-        # eviction — a '+' inside a name would silently misalign the
-        # per-component zip and evict the wrong entries
-        raise ValueError(f"table names must not contain '+': {tables}")
 
     def declare(build: Callable[[SparkSession, str], DataFrame]):
         if kind in _SHARED_ARTIFACTS:
@@ -872,8 +611,8 @@ def shared_hashed_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``hashed_shingles(...).persist()`` per invocation and the builds each
     re-tokenized on cold paths (bench r8 measured the probe build paying a
     full scan the LSH build had just paid); the shared checkpoint removes
-    both, and the fingerprint key + table-scoped staleness eviction give
-    it the same rewrite-detection contract as every other cached kind.
+    both, and the input fingerprint stored beside the frame gives it the
+    same rewrite-detection contract as every other cached kind.
     min over a multiset equals min over its set, so the LSH signature
     build is unchanged by reading the distinct table."""
     # (r17: fanning this table out before the checkpoint was A/B'd —

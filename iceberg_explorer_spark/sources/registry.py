@@ -10,6 +10,9 @@ scan — check ``df.explain(True)`` for ``PushedFilters`` / ``ReadSchema``.
 
 from __future__ import annotations
 
+import hashlib
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 #: tables materialized by the test-data generator (TESTDATA.md)
@@ -90,7 +93,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Required for the legacy NANOS flavour; harmless when already set.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = f"{sf_dir}/{name}.parquet"
-    df = spark.read.schema(_inferred_schema(spark, path)).parquet(path)
+    df = spark.read.schema(_inferred_schema(spark, sf_dir, name)).parquet(path)
     if name == "events":
         from pyspark.sql import functions as F
 
@@ -104,27 +107,86 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-#: (path, mtime_ns, size) → inferred StructType. Schema inference on a
-#: parquet path runs a small Spark job (footer read) on EVERY
-#: ``spark.read.parquet`` call — one to three per query build, ~25 ms each,
-#: which the bench pays hundreds of times per run. The inferred schema is a
-#: pure metadata object (session-independent), so memoize it per file
-#: identity and hand it to the reader explicitly; the reader then skips the
-#: inference job entirely. Keyed on mtime+size so a regenerated testdata
-#: file can never serve a stale schema. This caches METADATA only — every
-#: query still computes from the parquet data itself.
-_SCHEMA_CACHE: dict = {}
+#: Least bytes of file tail folded into a table fingerprint. A parquet
+#: file's tail is read back to the start of its footer instead: the last
+#: 64 bytes alone are only the writer's ``created_by`` string, the footer
+#: length and the magic, so a rewrite that renames a column or changes
+#: values at the same file size leaves them unchanged.
+_FINGERPRINT_TAIL_BYTES = 64
 
 
-def _inferred_schema(spark: SparkSession, path: str):
-    import os
+def table_fingerprint(sf_dir: str, table: str) -> str:
+    """Content fingerprint of ``{sf_dir}/{table}.parquet``: the md5 of the
+    sorted (relative path, size, mtime_ns, tail digest) entries of its
+    files, where the tail is a parquet file's whole footer (schema,
+    row-group offsets, column stats) or the last 64 bytes of any other
+    file. It is the one staleness rule for everything cached from a
+    corpus table: the schema memo of ``load_table`` and the
+    shared-artifact cache (``operators/dedup.py``) both compare it on
+    every lookup, so a table rewritten at the same path is re-read
+    instead of served stale. The footer catches even metadata-preserving
+    rewrites (``cp -p``, ``touch -r``, a timestamp-preserving sync).
 
-    st = os.stat(path)
-    key = (path, st.st_mtime_ns, st.st_size)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-        _SCHEMA_CACHE[key] = schema
+    Computed afresh on every call: one open and two small reads per file
+    (the footers of the test tables are 2-6 KB). A file that vanishes
+    mid-pass (an in-place rewrite deleting its old part files) enters as
+    a sentinel, so the in-progress state never matches the fingerprint of
+    either the old or the new table. A missing path fingerprints as
+    empty; the read itself then raises the real error."""
+    root = os.path.join(sf_dir, f"{table}.parquet")
+    if os.path.isfile(root):
+        paths = [("", root)]
+    else:
+        paths = []
+        for dirpath, _dirs, files in os.walk(root):
+            for name in files:
+                p = os.path.join(dirpath, name)
+                paths.append((os.path.relpath(p, root), p))
+    entries = []
+    for rel, p in paths:
+        try:
+            with open(p, "rb") as fh:
+                st = os.fstat(fh.fileno())
+                # parquet ends in <footer length, 4 bytes LE> b"PAR1"
+                fh.seek(max(0, st.st_size - 8))
+                end = fh.read(8)
+                n = _FINGERPRINT_TAIL_BYTES
+                if end[4:] == b"PAR1":
+                    n = max(n, int.from_bytes(end[:4], "little") + 8)
+                fh.seek(max(0, st.st_size - n))
+                tail = fh.read(n)
+            entries.append(
+                (rel, st.st_size, st.st_mtime_ns, hashlib.md5(tail).hexdigest())
+            )
+        except OSError:
+            entries.append((rel, -1, -1, "<vanished-during-fingerprint>"))
+    entries.sort()
+    return hashlib.md5(repr(entries).encode()).hexdigest()
+
+
+#: (sf_dir, table) → (table_fingerprint, inferred StructType). Schema
+#: inference on a parquet path runs a small Spark job (footer read) on
+#: EVERY ``spark.read.parquet`` call — one to three per query build,
+#: ~25 ms each, which the bench pays hundreds of times per run. The
+#: inferred schema is a pure metadata object (session-independent), so
+#: memoize it per table and hand it to the reader explicitly; the reader
+#: then skips the inference job entirely. A fingerprint mismatch
+#: re-infers, so a rewritten table never serves a stale schema. This
+#: caches METADATA only — every query still computes from the parquet
+#: data itself.
+_SCHEMA_CACHE: dict[tuple[str, str], tuple[str, object]] = {}
+
+
+def _inferred_schema(spark: SparkSession, sf_dir: str, name: str):
+    # fingerprint BEFORE inferring: a rewrite landing in between stores
+    # the new schema under the old fingerprint, which the next lookup
+    # simply misses
+    fp = table_fingerprint(sf_dir, name)
+    hit = _SCHEMA_CACHE.get((sf_dir, name))
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+    _SCHEMA_CACHE[(sf_dir, name)] = (fp, schema)
     return schema
 
 
@@ -175,8 +237,6 @@ def repartition_for_compute(df: DataFrame, min_factor: float = 0.5) -> DataFrame
     ``.rdd`` forces full plan analysis through a deprecated conversion path
     on every query build).
     """
-    import os
-
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     try:

@@ -5,8 +5,8 @@ the executor registry must hold up under concurrent access.
 Covers the round-7 items: (1) a cold-cache race on shared_lsh_candidates
 materializes the checkpoint exactly once (a module lock guards the
 check-then-set); (2) an in-place corpus rewrite invalidates the cache via
-the content fingerprint in the key; (3) parallel execute / cancel /
-stream against ONE session keep per-query state isolated.
+the content fingerprint stored beside each entry; (3) parallel execute /
+cancel / stream against ONE session keep per-query state isolated.
 """
 
 from __future__ import annotations
@@ -195,8 +195,8 @@ def test_multi_table_kind_fingerprints_both_inputs(spark, tmp_path):
     re-materializes, and the fresh frame reflects the new vectors (the
     semantic stage flips); (3) rewriting DOCUMENTS alone re-materializes
     too; (4) a multi-table rebuild never evicts a live single-table
-    entry (the composite table-name slot keeps the staleness-eviction
-    scoping disjoint — the r8 cross-table eviction lesson)."""
+    entry (each kind has its own slot — the r8 cross-table eviction
+    lesson)."""
     import numpy as np
 
     from iceberg_explorer_spark.operators import dedup
@@ -259,10 +259,9 @@ def test_multi_table_kind_fingerprints_both_inputs(spark, tmp_path):
     assert stages3 == {10: "exact", 20: "exact"}, stages3
 
     # (5) a documents-only rewrite followed by a SINGLE-TABLE documents
-    # build evicts the now-stale multi-table entry too (per-component
-    # staleness comparison): before this, only the next multi-table
-    # build would, so repeated rewrites pinned dead checkpoint blocks
-    # until LRU age-out (ADVICE r11).
+    # build leaves at most one entry per kind: the stale multi-table
+    # entry keeps its one slot until its own kind is rebuilt, so
+    # repeated rewrites can never pile up dead checkpoint blocks.
     spark.createDataFrame(
         [(i, t, "en", s, len(t)) for i, t, s in
          [(9, t1, "web"), (10, t2, "s1"), (20, t1, "s2")]],
@@ -270,11 +269,8 @@ def test_multi_table_kind_fingerprints_both_inputs(spark, tmp_path):
     ).coalesce(1).write.mode("overwrite").parquet(f"{d}/documents.parquet")
     dedup.shared_lsh_candidates(spark, d)  # single-table cold build
     with dedup._SHARED_CANDIDATES_LOCK:
-        slots = {k[2] for k in dedup._SHARED_CANDIDATES if k[1] == d}
-    assert "documents+embeddings" not in slots, slots
-    # ...while the LIVE embeddings-only entries of other corpora are
-    # untouched by design (fingerprints compared per component only
-    # for tables the rebuild actually read)
+        kinds = [k[2] for k in dedup._SHARED_CANDIDATES if k[1] == d]
+    assert len(kinds) == len(set(kinds)), kinds
     dedup.invalidate_shared_candidates(d)
 
 
@@ -357,11 +353,11 @@ def test_corpus_is_tokenized_at_most_once_per_session(spark):
 
 
 def test_candidate_families_over_different_tables_coexist(spark):
-    """The staleness eviction is scoped by INPUT TABLE: the semantic
+    """Entries over different input tables coexist: the semantic
     kinds fingerprint embeddings.parquet while lsh/probe fingerprint
     documents.parquet, and the two fingerprints always differ — the
-    unscoped r8 comparison read that as 'superseded' and made each
-    family's cold build evict the other's live entries (a rebuild
+    unscoped r8 staleness comparison read that as 'superseded' and made
+    each family's cold build evict the other's live entries (a rebuild
     ping-pong the bench measured as dedup_semantic_clusters timing its
     full build on every call). Both families must stay cached side by
     side, and a repeat call must return the SAME materialization."""
@@ -485,14 +481,14 @@ def test_fingerprint_detects_metadata_preserving_rewrite(tmp_path):
     timestamp-preserving object-store sync) must still change the corpus
     fingerprint: the footer-tail bytes are part of it, so metadata-only
     forgery is not enough to get a stale cache hit."""
-    from iceberg_explorer_spark.operators.dedup import _corpus_fingerprint
+    from iceberg_explorer_spark.sources.registry import table_fingerprint
 
     d = tmp_path / "meta"
     d.mkdir()
     p = d / "documents.parquet"
     p.write_bytes(b"A" * 200)
     st = p.stat()
-    fp1 = _corpus_fingerprint(str(d))
+    fp1 = table_fingerprint(str(d), "documents")
     # same length, different trailing bytes, mtime restored exactly
     p.write_bytes(b"A" * 199 + b"B")
     import os as _os
@@ -500,19 +496,20 @@ def test_fingerprint_detects_metadata_preserving_rewrite(tmp_path):
     _os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
     assert p.stat().st_size == st.st_size
     assert p.stat().st_mtime_ns == st.st_mtime_ns
-    fp2 = _corpus_fingerprint(str(d))
+    fp2 = table_fingerprint(str(d), "documents")
     assert fp2 != fp1
     # tiny files (shorter than the tail window) fingerprint fine too
     p.write_bytes(b"xy")
-    assert _corpus_fingerprint(str(d)) not in (fp1, fp2)
+    assert table_fingerprint(str(d), "documents") not in (fp1, fp2)
 
 
 def test_rewrite_evicts_stale_fingerprint_entry(spark, tmp_path):
     """After an in-place rewrite re-materializes, the OLD fingerprint's
-    entry for the same (application, corpus dir) must be evicted from the
-    LRU immediately — it can never be served again, and leaving it would
-    pin dead checkpoint blocks until age-out."""
+    entry for the same (application, corpus dir, kind) must be replaced,
+    not shadowed — it can never be served again, and keeping it would pin
+    dead checkpoint blocks until age-out."""
     from iceberg_explorer_spark.operators import dedup
+    from iceberg_explorer_spark.sources.registry import table_fingerprint
 
     dedup.invalidate_shared_candidates()
     d = str(tmp_path / "evict")
@@ -524,11 +521,18 @@ def test_rewrite_evicts_stale_fingerprint_entry(spark, tmp_path):
         ).coalesce(1).write.mode("overwrite").parquet(f"{d}/documents.parquet")
         dedup.shared_lsh_candidates(spark, d)
         with dedup._SHARED_CANDIDATES_LOCK:
-            mine = [k for k in dedup._SHARED_CANDIDATES if k[1] == d]
+            mine = {
+                k: fp for k, (fp, _df) in dedup._SHARED_CANDIDATES.items()
+                if k[1] == d
+            }
         # multiple KINDS per dir are fine (the lsh build reads the shared
-        # shingle checkpoint since r9) — but never two FINGERPRINTS: the
-        # pre-rewrite generation must be evicted, not shadowed
-        assert len({k[3] for k in mine}) == 1, mine
+        # shingle checkpoint since r9) — but one entry per kind, and it
+        # holds the current fingerprint: the pre-rewrite generation must
+        # be replaced, not shadowed
+        kinds = [k[2] for k in mine]
+        assert len(kinds) == len(set(kinds)), mine
+        current = (table_fingerprint(d, "documents"),)
+        assert all(fp == current for fp in mine.values()), mine
     dedup.invalidate_shared_candidates(d)
 
 
@@ -738,239 +742,6 @@ def test_concurrent_csv_exports_are_isolated():
         assert len(rows) == n + 1
         assert all(r[1] == tag for r in rows[1:])  # no cross-export bleed
         assert [int(r[0]) for r in rows[1:]] == list(range(n))
-
-
-def test_fingerprint_warm_lookup_is_stat_only(tmp_path, monkeypatch):
-    """The stat-gated memo (dedup._FINGERPRINT_MEMO): a repeat lookup over
-    an unchanged corpus must reuse the memoized digest WITHOUT reopening
-    any file — at a million-file corpus the warm path pays stat calls
-    only, the same syscalls Spark's own file listing already makes. Any
-    content rewrite still falls through to the full footer-tail read:
-    userspace cannot restore ctime, so the gate can't be satisfied by
-    mtime forgery (test_fingerprint_detects_metadata_preserving_rewrite
-    pins that exact case end-to-end against this same memo). The racy
-    window is patched to 0 here because tmp_path files are necessarily
-    fresh; test_fingerprint_racy_entries_never_serve_fast_path pins the
-    window's own behavior."""
-    import builtins
-    from unittest import mock
-
-    from iceberg_explorer_spark.operators import dedup
-
-    monkeypatch.setattr(dedup, "_FINGERPRINT_RACY_WINDOW_NS", 0)
-    d = tmp_path / "memo"
-    root = d / "documents.parquet"
-    root.mkdir(parents=True)
-    for i in range(50):
-        (root / f"part-{i:05d}.parquet").write_bytes(b"x" * 100 + bytes([i]))
-
-    fp_cold = dedup._corpus_fingerprint(str(d))
-
-    real_open = builtins.open
-    opened: list[str] = []
-
-    def counting_open(file, *a, **kw):
-        opened.append(str(file))
-        return real_open(file, *a, **kw)
-
-    with mock.patch.object(builtins, "open", counting_open):
-        fp_warm = dedup._corpus_fingerprint(str(d))
-    assert fp_warm == fp_cold
-    assert opened == []  # zero file opens on the warm path
-
-    # a one-byte content rewrite reopens (ctime bump defeats the gate)
-    # and changes the digest
-    (root / "part-00000.parquet").write_bytes(b"y" * 100 + b"\x00")
-    with mock.patch.object(builtins, "open", counting_open):
-        fp_new = dedup._corpus_fingerprint(str(d))
-    assert fp_new != fp_cold
-    assert opened  # full tail-read pass ran
-
-    # and the memo re-arms on the new state
-    opened.clear()
-    with mock.patch.object(builtins, "open", counting_open):
-        assert dedup._corpus_fingerprint(str(d)) == fp_new
-    assert opened == []
-
-
-def test_fingerprint_racy_entries_never_serve_fast_path(tmp_path, monkeypatch):
-    """Git's "racily clean" rule: a memo entry whose newest file stamp is
-    within _FINGERPRINT_RACY_WINDOW_NS of the memo computation never
-    serves the stat-only fast path — on coarse-timestamp filesystems
-    (second-granularity NFS/FAT/FUSE gateways) a rewrite landing in the
-    same tick as the recorded stamp yields an IDENTICAL
-    (size, mtime, ctime) listing, and only the fall-through tail read
-    catches it. Coarse stamps are simulated by pinning mtime/ctime; the
-    racy clock is driven with a fake time_ns so the self-upgrade to
-    trusted is pinned too."""
-    import builtins
-    import os as _os
-    import types
-    from unittest import mock
-
-    from iceberg_explorer_spark.operators import dedup
-
-    d = tmp_path / "racy"
-    root = d / "documents.parquet"
-    root.mkdir(parents=True)
-    f = root / "part-00000.parquet"
-    f.write_bytes(b"x" * 100)
-
-    # one coarse filesystem tick: every stat under root reports the same
-    # stamps however often the file is rewritten
-    TICK_NS = 1_000_000_000_000
-    real_stat = _os.stat
-
-    import stat as _statmod
-
-    def coarse_stat(path, *a, **kw):
-        st = real_stat(path, *a, **kw)
-        if _statmod.S_ISREG(st.st_mode) and str(path).startswith(str(root)):
-            return types.SimpleNamespace(
-                st_mode=st.st_mode,
-                st_size=st.st_size,
-                st_mtime_ns=TICK_NS,
-                st_ctime_ns=TICK_NS,
-            )
-        return st
-
-    # fake clock: starts just after the tick (inside the racy window)
-    clock = {"now": TICK_NS + 100}
-    monkeypatch.setattr(
-        dedup, "time", types.SimpleNamespace(time_ns=lambda: clock["now"])
-    )
-
-    real_open = builtins.open
-    opened: list[str] = []
-
-    def counting_open(file, *a, **kw):
-        opened.append(str(file))
-        return real_open(file, *a, **kw)
-
-    with mock.patch.object(dedup.os, "stat", coarse_stat):
-        fp1 = dedup._corpus_fingerprint(str(d))
-        assert dedup._FINGERPRINT_MEMO[(str(d), "documents")][2] is True
-
-        # same-tick rewrite: size, mtime, ctime all identical — ONLY the
-        # tail read can see it, and the racy gate forces that read
-        f.write_bytes(b"y" * 100)
-        with mock.patch.object(builtins, "open", counting_open):
-            fp2 = dedup._corpus_fingerprint(str(d))
-        assert opened  # fell through to the tail read
-        assert fp2 != fp1  # the rewrite was caught
-
-        # clock advances past the window: the next fall-through
-        # re-memoizes as trusted, and the lookup after THAT is stat-only
-        clock["now"] = TICK_NS + dedup._FINGERPRINT_RACY_WINDOW_NS + 1
-        dedup._corpus_fingerprint(str(d))
-        assert dedup._FINGERPRINT_MEMO[(str(d), "documents")][2] is False
-        opened.clear()
-        with mock.patch.object(builtins, "open", counting_open):
-            assert dedup._corpus_fingerprint(str(d)) == fp2
-        assert opened == []  # trusted entry serves stat-only
-
-
-def test_fingerprint_racy_window_anchored_at_scan_start(tmp_path, monkeypatch):
-    """The racy window is measured from the moment the stat scan STARTED,
-    not from when the computation finished: a slow tail-read pass over a
-    large corpus must not eat the window. Simulated by a fake clock that
-    jumps past the window between the first time_ns() call (scan start)
-    and any later call — an end-anchored implementation would memoize
-    trusted; the start anchor keeps the entry racy."""
-    import types
-
-    from iceberg_explorer_spark.operators import dedup
-
-    d = tmp_path / "slow-scan"
-    root = d / "documents.parquet"
-    root.mkdir(parents=True)
-    f = root / "part-00000.parquet"
-    f.write_bytes(b"x" * 100)
-    stamp = os.stat(f).st_mtime_ns
-
-    # First call returns a now just after the file's stamp (inside the
-    # window); every later call pretends the scan took longer than the
-    # whole window.
-    calls = {"n": 0}
-
-    def fake_time_ns():
-        calls["n"] += 1
-        if calls["n"] == 1:
-            return stamp + 100
-        return stamp + dedup._FINGERPRINT_RACY_WINDOW_NS + 1_000_000_000
-
-    monkeypatch.setattr(dedup, "time", types.SimpleNamespace(time_ns=fake_time_ns))
-    dedup._corpus_fingerprint(str(d))
-    assert dedup._FINGERPRINT_MEMO[(str(d), "documents")][2] is True
-
-
-def test_fingerprint_rewrite_during_tail_read_not_memoized(tmp_path):
-    """A rewrite landing DURING the tail-read pass produces a digest that
-    mixes pre- and post-rewrite bytes; the stamps captured in the stat
-    pass predate the rewrite, so without the post-read re-stat gate that
-    mixed digest would be memoized as trusted under the PRE-rewrite
-    listing digest — and a later lookup over the (never again occurring,
-    but on this test deliberately restored) pre-rewrite listing would be
-    poisoned. Pins that the entry is NOT memoized: simulated by a
-    concurrent writer hooked into the first tail-read ``open``."""
-    import builtins
-    import os as _os
-    from unittest import mock
-
-    from iceberg_explorer_spark.operators import dedup
-
-    d = tmp_path / "midpass"
-    root = d / "documents.parquet"
-    root.mkdir(parents=True)
-    for i in range(3):
-        (root / f"part-{i:05d}.parquet").write_bytes(b"x" * 100 + bytes([i]))
-
-    dedup._FINGERPRINT_MEMO.pop((str(d), "documents"), None)
-    real_open = builtins.open
-    fired = {"done": False}
-
-    def racing_open(file, *a, **kw):
-        # first tail-read open: a "concurrent writer" rewrites a SIBLING
-        # file (its tail may already have been read, or not — either way
-        # the resulting digest is a pre/post mix) before the open runs
-        if not fired["done"] and str(file).startswith(str(root)):
-            fired["done"] = True
-            victim = root / "part-00002.parquet"
-            fd = _os.open(victim, _os.O_WRONLY | _os.O_APPEND)
-            try:
-                _os.write(fd, b"rewritten-mid-pass")
-            finally:
-                _os.close(fd)
-        return real_open(file, *a, **kw)
-
-    with mock.patch.object(builtins, "open", racing_open):
-        dedup._corpus_fingerprint(str(d))
-    # the re-stat gate saw the moved (size, mtime, ctime) and refused to
-    # pin the mixed digest
-    assert (str(d), "documents") not in dedup._FINGERPRINT_MEMO
-    # the next (quiet) lookup computes and memoizes the settled state
-    settled = dedup._corpus_fingerprint(str(d))
-    assert (str(d), "documents") in dedup._FINGERPRINT_MEMO
-    assert dedup._corpus_fingerprint(str(d)) == settled
-
-
-def test_fingerprint_memo_is_bounded(tmp_path):
-    """The memo is LRU-bounded: fingerprinting more distinct corpora than
-    _FINGERPRINT_MEMO_MAX never grows the dict past the cap, and evicted
-    entries simply recompute (same digest) on their next lookup."""
-    from iceberg_explorer_spark.operators import dedup
-
-    digests = {}
-    n = dedup._FINGERPRINT_MEMO_MAX + 5
-    for i in range(n):
-        d = tmp_path / f"c{i}"
-        (d / "documents.parquet").parent.mkdir(parents=True)
-        (d / "documents.parquet").write_bytes(b"corpus-%d" % i * 20)
-        digests[str(d)] = dedup._corpus_fingerprint(str(d))
-    assert len(dedup._FINGERPRINT_MEMO) <= dedup._FINGERPRINT_MEMO_MAX
-    # an evicted (oldest) corpus still fingerprints identically
-    first = str(tmp_path / "c0")
-    assert dedup._corpus_fingerprint(first) == digests[first]
 
 
 # ---------------------------------------------------------------------------

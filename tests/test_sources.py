@@ -181,3 +181,31 @@ def test_repartition_for_compute_spreads_single_split_scan(spark):
     # non-file-based plans (in-memory ranges) pass through unchanged
     rng = spark.range(10)
     assert repartition_for_compute(rng) is rng
+
+
+def test_load_table_rereads_schema_after_metadata_preserving_rewrite(
+    spark, tmp_path
+):
+    """The schema memo of ``load_table`` compares the table fingerprint, so
+    a same-size rewrite with its mtime restored (``cp -p``) whose column is
+    renamed is read with the NEW schema. A memo keyed on
+    (path, mtime, size) kept serving ``['aa']`` with every row NULL."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"aa": pa.array([1, 2, 3], pa.int64())}), p)
+    first = load_table(spark, str(tmp_path), "t")
+    assert first.columns == ["aa"]
+    assert [r.aa for r in first.collect()] == [1, 2, 3]
+    st = p.stat()
+    pq.write_table(pa.table({"bb": pa.array([1, 2, 3], pa.int64())}), p)
+    os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
+    assert p.stat().st_size == st.st_size
+    assert p.stat().st_mtime_ns == st.st_mtime_ns
+
+    second = load_table(spark, str(tmp_path), "t")
+    assert second.columns == ["bb"]
+    assert sorted(r.bb for r in second.collect()) == [1, 2, 3]
