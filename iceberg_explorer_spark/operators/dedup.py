@@ -1569,7 +1569,6 @@ def _cc_labels(edges: DataFrame, node_alias: str) -> DataFrame:
 
 def connected_components(
     edges: DataFrame,
-    checkpoint_every: int = CC_CHECKPOINT_EVERY,
     max_rounds: int = CC_MAX_ROUNDS,
     local_max_edges: int = CC_LOCAL_MAX_EDGES,
 ) -> DataFrame:
@@ -1587,7 +1586,7 @@ def connected_components(
     (r9 deep-chain stress: diameter 32 took 19 s / 33 rounds before, see
     SCALE.md round-9 for the after numbers). Two scale guards:
 
-    - every ``checkpoint_every`` rounds the label table is
+    - every ``CC_CHECKPOINT_EVERY`` rounds the label table is
       ``localCheckpoint(eager=False)``'d — LAZY, because the convergence
       count in the same round is the materializing action, so lineage
       truncation costs no extra job. Without it the logical plan, scheduler
@@ -1768,11 +1767,11 @@ def connected_components(
                     doubling = True
                     compressions += 1
             rounds_done += steps
-            if doubling or rounds_done % checkpoint_every < steps:
+            if doubling or rounds_done % CC_CHECKPOINT_EVERY < steps:
                 # lazy: the convergence count below is the materializing
                 # action, so lineage truncation costs no extra job. In the
                 # doubling regime truncation happens EVERY span, not every
-                # checkpoint_every rounds: compress() is a label-table
+                # CC_CHECKPOINT_EVERY rounds: compress() is a label-table
                 # self-join, so each compressed round references the prior
                 # plan TWICE and the logical plan grows 4× per span —
                 # exponential by the second checkpoint window (measured:
@@ -2037,7 +2036,7 @@ def _incremental_exact_sql() -> str:
 def incremental_exact_flags(
     docs: DataFrame,
     history_digests: DataFrame | None = None,
-    batch_pred=None,
+    batch_pred=parity_batch_predicate,
 ) -> DataFrame:
     """(doc_id, source, seen, is_canon) for every batch doc — the Spark
     twin of ``_incremental_exact_sql``, shared by
@@ -2067,7 +2066,7 @@ def incremental_seen_canon_flags(
     rows: DataFrame,
     key_cols: list[str],
     history_keys: DataFrame | None = None,
-    batch_pred=None,
+    batch_pred=parity_batch_predicate,
 ) -> DataFrame:
     """(doc_id, source, seen, is_canon) for the batch rows of a keyed
     (doc_id, source, *key_cols) frame — the exact-match incremental rule
@@ -2095,8 +2094,6 @@ def incremental_seen_canon_flags(
         raise ValueError(
             f"key_cols may not use the reserved '__incr_' prefix: {bad}"
         )
-    if batch_pred is None:
-        batch_pred = parity_batch_predicate
     is_b = batch_pred(F.col("doc_id"))
     hist = (
         (
@@ -3246,8 +3243,7 @@ def _cls_assemble(
 def incremental_component_cls(
     be: DataFrame,
     batch: DataFrame,
-    batch_members: DataFrame | bool | None = None,
-    members_materialized: bool = False,
+    batch_members: DataFrame | None = None,
 ) -> DataFrame:
     """Spark classification stage shared by the incremental ingest family
     — the executable twin of ``_incremental_cls_sql``: returns one row
@@ -3284,46 +3280,21 @@ def incremental_component_cls(
     production rule the persisted-artifact path needs: on day 2 an
     edge to a day-1 KEPT doc (now appended to the artifacts) must read
     as corpus contact, which the default id-parity fixture cannot
-    express (a day-1 doc keeps its batch parity forever). Pass the
-    literal ``True`` when the spine IS the full population (the
-    two-day near operator's day-2 call): the internally checkpointed
-    ``batch`` frame is reused as the member table, saving a second
-    eager materialization — on tiny increments each extra
-    driver-synchronized job is a fixed ~0.3 s scheduling tax (the
-    round-10 CC lesson). When None — or the literal ``False``, which
-    reads naturally as "no membership frame" and must not crash — the
-    parity fixture applies, byte-identical to every oracle (all four
-    spellings pinned by test_batch_membership_generalizes_parity).
-
-    ``members_materialized``: callers that already hold a materialized
-    one-row-per-id members frame (the artifact path checkpoints it once
-    and feeds TWO cls calls) pass True to use it AS-IS — skipping the
-    defensive distinct+checkpoint saves one eager driver-synchronized
-    job per call, the same ~0.3 s scheduling tax the True sentinel
-    avoids by reusing the batch checkpoint."""
+    express (a day-1 doc keeps its batch parity forever). It is used
+    as given, so it must be one row per id and SHOULD be materialized:
+    it feeds both the batch-batch and the contact branches (every
+    production caller hands in an eager checkpoint). When None the
+    parity fixture applies, byte-identical to every oracle (both
+    spellings pinned by test_batch_membership_generalizes_parity)."""
     batch = batch.localCheckpoint(eager=True)
     ids = batch.select("doc_id")
-    if batch_members is None or batch_members is False:
-        # False reads naturally as "no membership frame" — same as None
+    if batch_members is None:
         a_b = parity_batch_predicate(F.col("id_a"))
         b_b = parity_batch_predicate(F.col("id_b"))
     else:
-        # increment-sized membership frame joined to the edge endpoints
-        # (broadcast at scale); checkpointed (or reusing the batch
-        # checkpoint, for the True sentinel, or the caller's own
-        # materialization under the members_materialized contract)
-        # because it feeds both the bb and contact branches below
-        if batch_members is True:
-            m = ids
-        elif members_materialized:
-            m = batch_members.select("doc_id")
-        else:
-            m = (
-                batch_members.select("doc_id")
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-        be = endpoint_member_flags(be, m, "id_a", "id_b")
+        be = endpoint_member_flags(
+            be, batch_members.select("doc_id"), "id_a", "id_b"
+        )
         a_b = F.col("__incr_a").isNotNull()
         b_b = F.col("__incr_b").isNotNull()
     bb = _spine_bb(be, ids, a_b, b_b)
@@ -3339,16 +3310,12 @@ def incremental_component_cls(
 
 
 def incremental_component_report(
-    be: DataFrame, batch: DataFrame, kind: str,
-    batch_members: DataFrame | bool | None = None,
+    be: DataFrame, batch: DataFrame, kind: str
 ) -> DataFrame:
-    """Per-source report over ``incremental_component_cls`` — the tail
-    of the standalone incremental operators (the capstone consumes the
-    cls rows directly instead)."""
-    return component_cls_report(
-        incremental_component_cls(be, batch, batch_members=batch_members),
-        kind,
-    )
+    """Per-source report over ``incremental_component_cls`` under the
+    parity rule — the tail of the standalone incremental operators (the
+    capstone consumes the cls rows directly instead)."""
+    return component_cls_report(incremental_component_cls(be, batch), kind)
 
 
 def component_cls_report(cls: DataFrame, kind: str) -> DataFrame:
@@ -3576,12 +3543,12 @@ def dedup_incremental_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "appended — its content is corpus now), while a day-2 near-dup of a "
     "day-1 DROPPED doc is NOT tainted by it (the drop appended nothing; "
     "its edges are excluded from day 2's universe) — both directions "
-    "pinned by the crafted chain test. Day-1 classification is the "
-    "shared incremental_component_cls under the default parity rule; "
-    "day-2 is the SAME function under MEMBERSHIP (batch_members = the "
-    "day-2 ids), because on day 2 'corpus' = history PLUS day-1 keeps — "
-    "an id rule cannot express that, which is exactly what the round's "
-    "batch_members parameter is for. ONE signature pass and ONE "
+    "pinned by the crafted chain test. Both days run the classification "
+    "tail incremental_component_cls uses, over ONE connected-components "
+    "pass (the two days' batch-batch edges live on disjoint ids); on "
+    "day 2 'corpus' = history PLUS day-1 keeps, so day-1 drops' edges "
+    "are removed from day 2's edges before its contacts are read. "
+    "ONE signature pass and ONE "
     "Jaccard verify cover both generations (candidates touching either "
     "batch, verified once, split per generation by endpoint filters). "
     "At 100 TB: per-day cost is O(batch signatures + touched-bucket "

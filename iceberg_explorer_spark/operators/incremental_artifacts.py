@@ -95,6 +95,7 @@ import weakref
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from iceberg_explorer_spark.operators.dedup import parity_batch_predicate
 from iceberg_explorer_spark.sources.registry import load_table
 
 #: Process-wide store lock (re-entrant: compact's swap calls exists()
@@ -570,20 +571,6 @@ class BucketedArtifactStore:
             )
 
 
-def _resolve_pred(batch_pred):
-    """Default the batch-membership predicate to the id-parity fixture
-    (every oracle bakes it in); callers hand in their real ingest
-    partition's predicate instead — the two-day test runs id ranges
-    through here."""
-    if batch_pred is None:
-        from iceberg_explorer_spark.operators.dedup import (
-            parity_batch_predicate,
-        )
-
-        return parity_batch_predicate
-    return batch_pred
-
-
 def _all_batch(col):
     """Predicate for frames that ARE the batch by construction (the
     artifact path's slices are pre-filtered), so the shared flag helpers
@@ -643,7 +630,7 @@ def write_incremental_artifacts(
     spark: SparkSession,
     sf_dir: str,
     store: BucketedArtifactStore,
-    batch_pred=None,
+    batch_pred=parity_batch_predicate,
 ) -> dict[str, int]:
     """Derive the six history artifacts (``ARTIFACT_NAMES``) from the
     corpus at ``sf_dir`` and write them to ``store``; returns row
@@ -653,12 +640,11 @@ def write_incremental_artifacts(
     does NOT select (default: the id-parity fixture)."""
     from iceberg_explorer_spark.operators.similarity import _load_emb
 
-    pred = _resolve_pred(batch_pred)
     frames = _artifact_frames(
         load_table(spark, sf_dir, "documents").filter(
-            ~pred(F.col("doc_id"))
+            ~batch_pred(F.col("doc_id"))
         ),
-        _load_emb(spark, sf_dir).filter(~pred(F.col("vec_id"))),
+        _load_emb(spark, sf_dir).filter(~batch_pred(F.col("vec_id"))),
     )
     counts: dict[str, int] = {}
     for name, df in frames.items():
@@ -671,7 +657,7 @@ def incremental_status_from_artifacts(
     spark: SparkSession,
     sf_dir: str,
     store: BucketedArtifactStore,
-    batch_pred=None,
+    batch_pred=parity_batch_predicate,
 ) -> DataFrame:
     """(doc_id, source, stage) for every batch doc — the SAME waterfall as
     ``pipeline.incremental_status`` (shared assembly tail, shared stage
@@ -711,14 +697,13 @@ def incremental_status_from_artifacts(
         _load_emb,
     )
 
-    pred = _resolve_pred(batch_pred)
     batch_docs = load_table(spark, sf_dir, "documents").filter(
-        pred(F.col("doc_id"))
+        batch_pred(F.col("doc_id"))
     )
     # the embeddings batch slice feeds THREE branches (the membership
     # frame, the SRP coding, emb_ids) — one eager checkpoint
     emb_batch = _load_emb(spark, sf_dir).filter(
-        pred(F.col("vec_id"))
+        batch_pred(F.col("vec_id"))
     ).localCheckpoint(eager=True)
     # the batch MEMBER frame drives every classification decision below
     # (edge endpoints, candidate touching): document ids UNION batch
@@ -829,11 +814,9 @@ def incremental_status_from_artifacts(
         be,
         be2,
         emb_ids,
+        # already .distinct().localCheckpoint()'d above: one
+        # materialization for the whole waterfall, not one per cls call
         batch_members=batch_members,
-        # batch_members above is already .distinct().localCheckpoint()'d
-        # — hand it down as-is (one materialization for the whole
-        # waterfall, not one per cls call; r13 review finding)
-        members_materialized=True,
     )
 
 
@@ -841,7 +824,7 @@ def incremental_paired_from_artifacts(
     spark: SparkSession,
     sf_dir: str,
     store: BucketedArtifactStore,
-    batch_pred=None,
+    batch_pred=parity_batch_predicate,
 ) -> DataFrame:
     """``dedup_incremental_paired``'s report with history read ONLY from
     the persisted pair-key artifact — the fourth sibling's file-probed
@@ -863,7 +846,7 @@ def incremental_paired_from_artifacts(
     )
 
     batch_docs = load_table(spark, sf_dir, "documents").filter(
-        _resolve_pred(batch_pred)(F.col("doc_id"))
+        batch_pred(F.col("doc_id"))
     )
     # increment-sized decode; checkpointed because the flags helper
     # reads the key frame from TWO branches here (batch rows and the
@@ -964,16 +947,14 @@ def simhash_cls_from_history(
         # the shared tail's CC loop re-reads the edge frame per round
         .localCheckpoint(eager=True)
     )
-    return incremental_component_cls(
-        be, batch, batch_members=members, members_materialized=True
-    )
+    return incremental_component_cls(be, batch, batch_members=members)
 
 
 def incremental_simhash_from_artifacts(
     spark: SparkSession,
     sf_dir: str,
     store: BucketedArtifactStore,
-    batch_pred=None,
+    batch_pred=parity_batch_predicate,
 ) -> DataFrame:
     """``dedup_incremental_simhash``'s report with history read ONLY
     from the persisted signature artifact — the fifth sibling's
@@ -985,9 +966,8 @@ def incremental_simhash_from_artifacts(
         component_cls_report,
     )
 
-    pred = _resolve_pred(batch_pred)
     batch_docs = load_table(spark, sf_dir, "documents").filter(
-        pred(F.col("doc_id"))
+        batch_pred(F.col("doc_id"))
     )
     return component_cls_report(
         simhash_cls_from_history(batch_docs, store.read("simhash")), "simdup"
@@ -999,7 +979,7 @@ def append_incremental_artifacts(
     sf_dir: str,
     store: BucketedArtifactStore,
     status: DataFrame,
-    batch_pred=None,
+    batch_pred=parity_batch_predicate,
     batch_id: "str | None" = None,
 ) -> dict[str, int]:
     """Append the kept batch docs' artifact rows to ``store``.
@@ -1038,14 +1018,13 @@ def append_incremental_artifacts(
     from iceberg_explorer_spark.operators.similarity import _load_emb
 
     store.require(*ARTIFACT_NAMES)
-    pred = _resolve_pred(batch_pred)
     kept = status.filter(F.col("stage") == "kept").select("doc_id")
     frames = _artifact_frames(
         load_table(spark, sf_dir, "documents")
-        .filter(pred(F.col("doc_id")))
+        .filter(batch_pred(F.col("doc_id")))
         .join(kept, "doc_id"),
         _load_emb(spark, sf_dir)
-        .filter(pred(F.col("vec_id")))
+        .filter(batch_pred(F.col("vec_id")))
         .join(kept.select(F.col("doc_id").alias("vec_id")), "vec_id"),
     )
     appended: dict[str, int] = {}

@@ -1883,7 +1883,6 @@ def assemble_incremental_status(
     be2: DataFrame,
     emb_ids: DataFrame,
     batch_members: DataFrame | None = None,
-    members_materialized: bool = False,
 ) -> DataFrame:
     """The waterfall tail shared by the in-session and persisted-artifact
     status paths: given the exact-stage ``flags``, the batch-touching
@@ -1896,33 +1895,19 @@ def assemble_incremental_status(
     classification from the id-parity fixture to membership — the
     production rule the artifact path passes so day-2 edges to day-1
     appended docs read as corpus contact (see
-    incremental_component_cls)."""
+    incremental_component_cls). It feeds both classification calls
+    as given, so hand it in materialized and one row per id."""
     from iceberg_explorer_spark.operators.dedup import (
         incremental_component_cls,
     )
 
     exact_keep = (F.col("seen") == 0) & (F.col("is_canon") == 1)
     surv1 = flags.filter(exact_keep).select("doc_id", "source")
-    # the members frame feeds BOTH cls calls below: materialize the
-    # one-row-per-id form ONCE here — or not at all when the caller
-    # already did (members_materialized=True: the artifact path hands
-    # in its own distinct+checkpointed frame) — and hand it down under
-    # the same contract. Letting each cls call re-run its defensive
-    # distinct+checkpoint costs redundant eager driver-synchronized
-    # jobs per ingest (the ~0.3 s/job scheduling tax of the round-10
-    # lesson).
-    members = batch_members
-    if batch_members is not None and not members_materialized:
-        members = (
-            batch_members.select("doc_id")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
     # cls1 feeds TWO branches (the near drop list for the status join
     # and the stage-2 survivor spine) — one eager checkpoint of the
     # increment-sized classification, both consumers filter it
     cls1 = incremental_component_cls(
-        be, surv1, batch_members=members, members_materialized=True
+        be, surv1, batch_members=batch_members
     ).localCheckpoint(eager=True)
     dropped = (F.col("vs_corpus") == 1) | (F.col("in_batch") == 1)
     near_drops = cls1.filter(dropped).select(
@@ -1931,7 +1916,7 @@ def assemble_incremental_status(
     surv2 = cls1.filter(~dropped).select("doc_id", "source")
     batch2 = surv2.join(emb_ids, "doc_id")
     cls2 = incremental_component_cls(
-        be2, batch2, batch_members=members, members_materialized=True
+        be2, batch2, batch_members=batch_members
     )
     sem_drops = cls2.filter(dropped).select(
         "doc_id", F.lit(True).alias("sem_drop")

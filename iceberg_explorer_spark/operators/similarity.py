@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from iceberg_explorer_spark.operators.dedup import (
@@ -631,6 +631,75 @@ def similarity_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: exact two-stage top-k fan-in of the PQ geometry and MRL truncation
+#: sweeps: local rank within (config, vec_id mod this) buckets first,
+#: global rank over <= configs * buckets * 10 rows after — the global
+#: top-k is a subset of the local winners for ANY row partition, so the
+#: result is independent of the bucket rule.
+_SWEEP_BUCKETS = 16
+
+
+def _exact_hits(spark: SparkSession, sf_dir: str, emb: DataFrame) -> DataFrame:
+    """(vec_id, hit=1) for the exact top-10 over ``emb``, built by the
+    registered brute-force builder so every recall denominator measures
+    the same baseline. Lazy: each caller materializes it its own way."""
+    return (
+        similarity_bruteforce_topk(spark, sf_dir, emb=emb)
+        .select("vec_id")
+        .withColumn("hit", F.lit(1))
+    )
+
+
+def _two_stage_topk(scored: DataFrame, key: str, score: str) -> DataFrame:
+    """The top 10 rows of ``scored`` per ``key`` by (``score`` DESC,
+    vec_id), as the exact two-stage fan-in of ``_SWEEP_BUCKETS``."""
+    order = (F.col(score).desc(), "vec_id")
+    wl = Window.partitionBy(
+        key, F.pmod(F.col("vec_id"), F.lit(_SWEEP_BUCKETS))
+    ).orderBy(*order)
+    wg = Window.partitionBy(key).orderBy(*order)
+    return (
+        scored.withColumn("lrn", F.row_number().over(wl))
+        .filter(F.col("lrn") <= 10)
+        .withColumn("crn", F.row_number().over(wg))
+        .filter(F.col("crn") <= 10)
+    )
+
+
+def _recall_tail(
+    base: DataFrame, topk: DataFrame, bf: DataFrame, key: str, *extra
+) -> DataFrame:
+    """One row per ``base`` row: ``key``, the ``extra`` columns, then
+    n_returned, n_hits and recall of that config's ``topk`` rows against
+    the exact hits ``bf`` (``_exact_hits``). A config with no returned
+    rows reads 0/0, and recall is 0.0 when the exact set is empty."""
+    n_exact = bf.agg(F.count(F.lit(1)).alias("_n_exact"))
+    hits = (
+        topk.join(bf, "vec_id", "left")
+        .groupBy(key)
+        .agg(
+            F.count(F.lit(1)).alias("n_returned"),
+            F.count("hit").alias("n_hits"),
+        )
+    )
+    n_hits = F.coalesce("n_hits", F.lit(0))
+    return (
+        base.join(hits, key, "left")
+        .crossJoin(F.broadcast(n_exact))
+        .select(
+            key,
+            *extra,
+            F.coalesce("n_returned", F.lit(0))
+            .cast("bigint")
+            .alias("n_returned"),
+            n_hits.cast("bigint").alias("n_hits"),
+            F.when(F.col("_n_exact") == 0, F.lit(0.0))
+            .otherwise(n_hits * 1.0 / F.col("_n_exact"))
+            .alias("recall"),
+        )
+    )
+
+
 #: nprobe grid for the IVF calibration sweep. The last entry equals
 #: IVF_K deliberately: probing every list degenerates to the exact scan,
 #: so that row is the sweep's built-in exactness anchor (recall must be
@@ -736,8 +805,6 @@ def _ivf_probe_sweep_oracle() -> str:
     "reference: no analogue — training-pipeline extension.",
 )
 def similarity_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     # (r18 measured-and-rejected: the one-materialization emb checkpoint
     # — see similarity_ivf_pq_topk's note — AND the un-fanned seed
     # sourcing that won elsewhere: both probe-sweep variants measured
@@ -784,12 +851,7 @@ def similarity_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # recall denominator). The candidate frame and the exact baseline
     # are INDEPENDENT — materialize both concurrently (guide §2.6; see
     # eager_checkpoints)
-    bf_lazy = (
-        similarity_bruteforce_topk(spark, sf_dir, emb=emb)
-        .select("vec_id")
-        .withColumn("hit", F.lit(1))
-    )
-    cand, bf = eager_checkpoints(cand_lazy, bf_lazy)
+    cand, bf = eager_checkpoints(cand_lazy, _exact_hits(spark, sf_dir, emb))
     conf = spark.createDataFrame(
         [(n,) for n in IVF_SWEEP_NPROBES], "nprobe int"
     )
@@ -823,32 +885,7 @@ def similarity_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("crn", F.row_number().over(wg))
         .filter(F.col("crn") <= _IVF_SWEEP_K)
     )
-    n_exact = bf.agg(F.count(F.lit(1)).alias("_n_exact"))
-    hits = (
-        topk.join(bf, "vec_id", "left")
-        .groupBy("nprobe")
-        .agg(
-            F.count(F.lit(1)).alias("n_returned"),
-            F.count("hit").alias("n_hits"),
-        )
-    )
-    return (
-        bill.join(hits, "nprobe", "left")
-        .crossJoin(F.broadcast(n_exact))
-        .select(
-            "nprobe",
-            "n_candidates",
-            F.coalesce("n_returned", F.lit(0))
-            .cast("bigint")
-            .alias("n_returned"),
-            F.coalesce("n_hits", F.lit(0)).cast("bigint").alias("n_hits"),
-            F.when(F.col("_n_exact") == 0, F.lit(0.0))
-            .otherwise(
-                F.coalesce("n_hits", F.lit(0)) * 1.0 / F.col("_n_exact")
-            )
-            .alias("recall"),
-        )
-    )
+    return _recall_tail(bill, topk, bf, "nprobe", "n_candidates")
 
 
 # ---------------------------------------------------------------------------
@@ -1445,6 +1482,27 @@ def _rerank_shortlist(
     )
 
 
+def _serve_shortlist(
+    art: DataFrame, stage1: DataFrame, order: tuple, r: int,
+    query_vec: "list[float]", k: int, carry: "dict[str, str]", serve: str,
+) -> DataFrame:
+    """The two-stage serve shared by the BQ and MRL stores: heap-cut
+    the stage-1 frame (vec_id and the ``carry`` score columns) to its
+    top ``r`` by ``order``, COLLECT those r rows (the bounded O(R)
+    driver legitimacy class) and re-rank them with
+    ``_rerank_shortlist``. An empty shortlist returns an empty
+    (vec_id, *carry, cos_sim) frame of the same column types, with no
+    second read."""
+    shortlist = stage1.orderBy(*order).limit(r).collect()
+    if not shortlist:
+        return art.filter(F.lit(False)).select(
+            "vec_id",
+            *[F.lit(0).cast(t).alias(c) for c, t in carry.items()],
+            F.lit(0.0).alias("cos_sim"),
+        )
+    return _rerank_shortlist(art, shortlist, query_vec, k, carry, serve)
+
+
 def _gemm_schema() -> str:
     return "vec_a long, vec_b long, cos_sim double"
 
@@ -1618,8 +1676,6 @@ KNN_K = 3
     "or multi-probe raise it without changing the plan shape.",
 )
 def similarity_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     pairs = _bucket_pairs_gemm(spark, sf_dir)
     sym = pairs.unionByName(
         pairs.select(
@@ -1971,11 +2027,6 @@ def similarity_pq_adc_topk(
 #: compression-vs-recall tradeoff at 128x / 64x / 32x.
 #: SUB = DIM // M per config; PQ_K codebook entries throughout.
 PQ_SWEEP_MS = (2, 4, 8)
-#: exact two-stage top-k fan-in: local rank within (config, vec_id mod
-#: this) buckets first, global rank over <= configs * buckets * k rows
-#: after — the global top-k is a subset of the local winners for ANY
-#: row partition, so the result is independent of the bucket rule.
-_PQ_SWEEP_BUCKETS = 16
 
 
 def _pq_sweep_oracle() -> str:
@@ -2081,8 +2132,8 @@ def _pq_sweep_oracle() -> str:
     "exchanges), so the whole grid is one pipeline, never a rerun "
     "per geometry (the dedup_lsh_band_tuning rule applied to PQ). "
     "Per-config top-k is an EXACT two-stage fan-in: local rank inside "
-    f"(config, vec_id mod {_PQ_SWEEP_BUCKETS}) buckets, then global "
-    f"rank over <= {len(PQ_SWEEP_MS)}x{_PQ_SWEEP_BUCKETS}x10 survivors "
+    f"(config, vec_id mod {_SWEEP_BUCKETS}) buckets, then global "
+    f"rank over <= {len(PQ_SWEEP_MS)}x{_SWEEP_BUCKETS}x10 survivors "
     "— a global top-k is a subset of local winners under any row "
     "partition, so a config's window never ranks the whole corpus in "
     "one partition (the skew a bare partitionBy(config) window has at "
@@ -2092,8 +2143,6 @@ def _pq_sweep_oracle() -> str:
     "reference: no analogue — training-pipeline extension.",
 )
 def similarity_pq_geometry_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     # (r18 measured-and-rejected: the one-materialization emb checkpoint
     # — see similarity_ivf_pq_topk's note; interleaved 3-way A/B here:
     # 1.987 old / 1.904 map-fold-only / 2.030 with the checkpoint.)
@@ -2104,57 +2153,19 @@ def similarity_pq_geometry_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores = _pq_scores(
         emb, PQ_SWEEP_MS, seed_emb=_seed_emb(spark, sf_dir)
     )
-    # exact two-stage per-config top-k (see doc): local winners per
-    # bucket, then the global rank over the tiny survivor set
-    wl = Window.partitionBy(
-        "m_subspaces", F.pmod(F.col("vec_id"), F.lit(_PQ_SWEEP_BUCKETS))
-    ).orderBy(F.col("approx_cos_sim").desc(), "vec_id")
-    wg = Window.partitionBy("m_subspaces").orderBy(
-        F.col("approx_cos_sim").desc(), "vec_id"
-    )
-    topk = (
-        scores.withColumn("lrn", F.row_number().over(wl))
-        .filter(F.col("lrn") <= 10)
-        .withColumn("crn", F.row_number().over(wg))
-        .filter(F.col("crn") <= 10)
-    )
-    bf = (
-        similarity_bruteforce_topk(spark, sf_dir, emb=emb)
-        .select("vec_id")
-        .withColumn("hit", F.lit(1))
-        .localCheckpoint(eager=True)
-    )
-    n_exact = bf.agg(F.count(F.lit(1)).alias("_n_exact"))
-    hits = (
-        topk.join(bf, "vec_id", "left")
-        .groupBy("m_subspaces")
-        .agg(
-            F.count(F.lit(1)).alias("n_returned"),
-            F.count("hit").alias("n_hits"),
-        )
-    )
+    bf = _exact_hits(spark, sf_dir, emb).localCheckpoint(eager=True)
     conf = spark.createDataFrame(
         [(m,) for m in PQ_SWEEP_MS], "m_subspaces int"
     )
-    return (
-        conf.join(hits, "m_subspaces", "left")
-        .crossJoin(F.broadcast(n_exact))
-        .select(
-            "m_subspaces",
-            F.col("m_subspaces").cast("bigint").alias("bytes_per_vec"),
-            (F.lit(DIM * 4).cast("bigint") / F.col("m_subspaces"))
-            .cast("bigint")
-            .alias("compression_x"),
-            F.coalesce("n_returned", F.lit(0))
-            .cast("bigint")
-            .alias("n_returned"),
-            F.coalesce("n_hits", F.lit(0)).cast("bigint").alias("n_hits"),
-            F.when(F.col("_n_exact") == 0, F.lit(0.0))
-            .otherwise(
-                F.coalesce("n_hits", F.lit(0)) * 1.0 / F.col("_n_exact")
-            )
-            .alias("recall"),
-        )
+    return _recall_tail(
+        conf,
+        _two_stage_topk(scores, "m_subspaces", "approx_cos_sim"),
+        bf,
+        "m_subspaces",
+        F.col("m_subspaces").cast("bigint").alias("bytes_per_vec"),
+        (F.lit(DIM * 4).cast("bigint") / F.col("m_subspaces"))
+        .cast("bigint")
+        .alias("compression_x"),
     )
 
 
@@ -2506,6 +2517,48 @@ def similarity_bq_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _shortlist_r_sweep(
+    scored: DataFrame, candidates: DataFrame, order: tuple, rs: tuple, cut
+) -> DataFrame:
+    """Recall@10 of a shortlist-then-exact-re-rank cascade at every
+    shortlist size in ``rs``, from one scored pass. The true top-10 is
+    ``scored`` (vec_id, cos, ...) by (cos DESC, vec_id); the stage-1
+    shortlist is ``candidates`` heap-cut to max(``rs``) rows by
+    ``order`` and ranked in that order (the row_number Window runs on
+    the cut frame, never the corpus); the explode over ``rs`` keeps
+    everything after the heaps O(sum(rs)) rows. Returns (shortlist_r,
+    n_candidates, ``cut`` — the aggregate reporting the stage-1 radius
+    each size implies — n_hits, recall_at_10)."""
+    t10 = F.broadcast(
+        scored.orderBy(F.col("cos").desc(), "vec_id")
+        .limit(10)
+        .select("vec_id", F.lit(1).alias("hit"))
+    )
+    d = F.broadcast(t10.agg(F.count(F.lit(1)).cast("bigint").alias("nt")))
+    ranked = (
+        candidates.orderBy(*order)
+        .limit(max(rs))
+        .withColumn("rk", F.row_number().over(Window.orderBy(*order)))
+        .join(t10, "vec_id", "left")
+    )
+    hit = F.coalesce(F.col("hit"), F.lit(0))
+    return (
+        ranked.withColumn(
+            "shortlist_r", F.explode(F.array(*[F.lit(r) for r in rs]))
+        )
+        .filter(F.col("rk") <= F.col("shortlist_r"))
+        .crossJoin(d)
+        .groupBy("shortlist_r", "nt")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
+            cut,
+            F.sum(hit).cast("bigint").alias("n_hits"),
+            (F.sum(hit).cast("double") / F.first("nt")).alias("recall_at_10"),
+        )
+        .drop("nt")
+    )
+
+
 #: The BQ calibration grid: shortlist sizes priced by the sweep.
 #: Unlike the IVF probe sweep there is NO structural saturation rung
 #: (nprobe=K provably reaches recall 1.0; no fixed R does, because the
@@ -2603,8 +2656,6 @@ BQ_SWEEP_RS = (10, 30, 100)
     "extension.",
 )
 def similarity_bq_r_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = _with_normalized(_load_emb(spark, sf_dir))
     sk = emb.select(
         "vec_id",
@@ -2633,48 +2684,12 @@ def similarity_bq_r_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    t10 = F.broadcast(
-        scored.orderBy(F.col("cos").desc(), "vec_id")
-        .limit(10)
-        .select("vec_id", F.lit(1).alias("hit"))
-    )
-    d = F.broadcast(t10.agg(F.count(F.lit(1)).cast("bigint").alias("nt")))
-    # the max(Rs)-row shortlist, ranked: the row_number Window runs on
-    # a frame the heap already cut to 100 rows — never the corpus
-    ranked = (
-        scored.orderBy("ham", "vec_id")
-        .limit(max(BQ_SWEEP_RS))
-        .withColumn(
-            "rk", F.row_number().over(Window.orderBy("ham", "vec_id"))
-        )
-        .join(t10, "vec_id", "left")
-    )
-    return (
-        ranked.withColumn(
-            "shortlist_r",
-            F.explode(F.array(*[F.lit(r) for r in BQ_SWEEP_RS])),
-        )
-        .filter(F.col("rk") <= F.col("shortlist_r"))
-        .crossJoin(d)
-        .groupBy("shortlist_r", "nt")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
-            F.max("ham").cast("bigint").alias("hamming_cut"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-            .cast("bigint")
-            .alias("n_hits"),
-            (
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("double")
-                / F.first("nt")
-            ).alias("recall_at_10"),
-        )
-        .select(
-            "shortlist_r",
-            "n_candidates",
-            "hamming_cut",
-            "n_hits",
-            "recall_at_10",
-        )
+    return _shortlist_r_sweep(
+        scored,
+        scored,
+        ("ham", "vec_id"),
+        BQ_SWEEP_RS,
+        F.max("ham").cast("bigint").alias("hamming_cut"),
     )
 
 
@@ -2793,8 +2808,6 @@ def _mrl_r_sweep_oracle() -> str:
     "row) once. reference: no analogue — training-pipeline extension.",
 )
 def similarity_mrl_r_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = _with_normalized(_load_emb(spark, sf_dir))
     q = F.broadcast(
         emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
@@ -2812,52 +2825,14 @@ def similarity_mrl_r_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    t10 = F.broadcast(
-        scored.orderBy(F.col("cos").desc(), "vec_id")
-        .limit(10)
-        .select("vec_id", F.lit(1).alias("hit"))
-    )
-    d = F.broadcast(t10.agg(F.count(F.lit(1)).cast("bigint").alias("nt")))
-    # the max(Rs)-row shortlist, ranked: the row_number Window runs on
-    # a frame the heap already cut — never the corpus
-    ranked = (
-        scored.filter(F.col("tcos").isNotNull())
-        .orderBy(F.col("tcos").desc(), "vec_id")
-        .limit(max(MRL_SWEEP_RS))
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.orderBy(F.col("tcos").desc(), "vec_id")
-            ),
-        )
-        .join(t10, "vec_id", "left")
-    )
-    return (
-        ranked.withColumn(
-            "shortlist_r",
-            F.explode(F.array(*[F.lit(r) for r in MRL_SWEEP_RS])),
-        )
-        .filter(F.col("rk") <= F.col("shortlist_r"))
-        .crossJoin(d)
-        .groupBy("shortlist_r", "nt")
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_candidates"),
-            F.min("tcos").alias("prefix_cos_cut"),
-            F.sum(F.coalesce(F.col("hit"), F.lit(0)))
-            .cast("bigint")
-            .alias("n_hits"),
-            (
-                F.sum(F.coalesce(F.col("hit"), F.lit(0))).cast("double")
-                / F.first("nt")
-            ).alias("recall_at_10"),
-        )
-        .select(
-            "shortlist_r",
-            "n_candidates",
-            "prefix_cos_cut",
-            "n_hits",
-            "recall_at_10",
-        )
+    # t10 comes from the unfiltered frame: a zero-prefix true neighbor
+    # counts in the denominator but can never be shortlisted
+    return _shortlist_r_sweep(
+        scored,
+        scored.filter(F.col("tcos").isNotNull()),
+        (F.col("tcos").desc(), "vec_id"),
+        MRL_SWEEP_RS,
+        F.min("tcos").alias("prefix_cos_cut"),
     )
 
 
@@ -2867,8 +2842,6 @@ def similarity_mrl_r_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: cosine up to one round-6 quantization of the ~1.0 norm ratio, so the
 #: final row measures 1.0 recall everywhere we have run it.
 MRL_DIMS = (8, 16, 32, DIM)
-
-_MRL_BUCKETS = 16
 
 
 def _mrl_prefix_cos_sql(d: int, a: str = "ne", b: str = "qne") -> str:
@@ -2977,8 +2950,8 @@ def _mrl_sweep_oracle() -> str:
     "cosine and are filtered identically on both engines (NULL, never "
     "an engine-specific inf/NaN). Per-config top-k is the EXACT "
     f"two-stage fan-in (local rank inside (config, vec_id mod "
-    f"{_MRL_BUCKETS}) buckets, then global rank over <= "
-    f"{len(MRL_DIMS)}x{_MRL_BUCKETS}x10 survivors) — no corpus-wide "
+    f"{_SWEEP_BUCKETS}) buckets, then global rank over <= "
+    f"{len(MRL_DIMS)}x{_SWEEP_BUCKETS}x10 survivors) — no corpus-wide "
     "single-partition window; the recall denominator composes the "
     f"registered brute-force spec. The d = {DIM} rung is the "
     "STRUCTURAL saturation anchor (the probe sweep's nprobe=K rule): "
@@ -3001,8 +2974,6 @@ def _mrl_sweep_oracle() -> str:
 def similarity_mrl_truncation_sweep(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql import Window
-
     emb = _with_normalized(_load_emb(spark, sf_dir))
     q = F.broadcast(
         emb.filter(F.col("vec_id") == QUERY_VEC_ID).select(
@@ -3026,53 +2997,17 @@ def similarity_mrl_truncation_sweep(
                 F.col("s.tcos").alias("tcos"))
         .filter(F.col("tcos").isNotNull())
     )
-    wl = Window.partitionBy(
-        "trunc_dim", F.pmod(F.col("vec_id"), F.lit(_MRL_BUCKETS))
-    ).orderBy(F.col("tcos").desc(), "vec_id")
-    wg = Window.partitionBy("trunc_dim").orderBy(
-        F.col("tcos").desc(), "vec_id"
-    )
-    topk = (
-        scored.withColumn("lrn", F.row_number().over(wl))
-        .filter(F.col("lrn") <= 10)
-        .withColumn("crn", F.row_number().over(wg))
-        .filter(F.col("crn") <= 10)
-    )
-    bf = (
-        similarity_bruteforce_topk(spark, sf_dir, emb=emb)
-        .select("vec_id")
-        .withColumn("hit", F.lit(1))
-        .localCheckpoint(eager=True)
-    )
-    n_exact = bf.agg(F.count(F.lit(1)).alias("_n_exact"))
-    hits = (
-        topk.join(bf, "vec_id", "left")
-        .groupBy("trunc_dim")
-        .agg(
-            F.count(F.lit(1)).alias("n_returned"),
-            F.count("hit").alias("n_hits"),
-        )
-    )
+    bf = _exact_hits(spark, sf_dir, emb).localCheckpoint(eager=True)
     conf = spark.createDataFrame([(d,) for d in MRL_DIMS], "trunc_dim int")
-    return (
-        conf.join(hits, "trunc_dim", "left")
-        .crossJoin(F.broadcast(n_exact))
-        .select(
-            "trunc_dim",
-            (F.col("trunc_dim") * 4).cast("bigint").alias("bytes_per_vec"),
-            (F.lit(DIM) / F.col("trunc_dim"))
-            .cast("bigint")
-            .alias("compression_x"),
-            F.coalesce("n_returned", F.lit(0))
-            .cast("bigint")
-            .alias("n_returned"),
-            F.coalesce("n_hits", F.lit(0)).cast("bigint").alias("n_hits"),
-            F.when(F.col("_n_exact") == 0, F.lit(0.0))
-            .otherwise(
-                F.coalesce("n_hits", F.lit(0)) * 1.0 / F.col("_n_exact")
-            )
-            .alias("recall"),
-        )
+    return _recall_tail(
+        conf,
+        _two_stage_topk(scored, "trunc_dim", "tcos"),
+        bf,
+        "trunc_dim",
+        (F.col("trunc_dim") * 4).cast("bigint").alias("bytes_per_vec"),
+        (F.lit(DIM) / F.col("trunc_dim"))
+        .cast("bigint")
+        .alias("compression_x"),
     )
 
 
@@ -3295,21 +3230,10 @@ def bq_topk_from_store(
     _validate_query_vec(query_vec)
     (art,) = store.serve_tables("bq_index")
     qlo, qhi = _bq_pack_py([float(x) for x in query_vec])
-    shortlist = (
-        _bq_hamming_frame(art, qlo, qhi, query_vec_id)
-        .orderBy("hamming_dist", "vec_id")
-        .limit(r)
-        .collect()
-    )
-    if not shortlist:
-        return art.filter(F.lit(False)).select(
-            "vec_id",
-            F.lit(0).cast("bigint").alias("hamming_dist"),
-            F.lit(0.0).alias("cos_sim"),
-        )
-    return _rerank_shortlist(
-        art, shortlist, query_vec, k, {"hamming_dist": "bigint"},
-        "bq_topk_from_store",
+    return _serve_shortlist(
+        art, _bq_hamming_frame(art, qlo, qhi, query_vec_id),
+        ("hamming_dist", "vec_id"), r, query_vec, k,
+        {"hamming_dist": "bigint"}, "bq_topk_from_store",
     )
 
 
@@ -3443,21 +3367,11 @@ def mrl_topk_from_store(
             "this rung; serve it with a full-width method instead"
         )
     (art,) = store.serve_tables("mrl_index")
-    shortlist = (
-        _mrl_prefix_frame(art, [float(x) for x in query_vec], query_vec_id)
-        .orderBy(F.col("prefix_cos").desc(), "vec_id")
-        .limit(r)
-        .collect()
-    )
-    if not shortlist:
-        return art.filter(F.lit(False)).select(
-            "vec_id",
-            F.lit(0.0).alias("prefix_cos"),
-            F.lit(0.0).alias("cos_sim"),
-        )
-    return _rerank_shortlist(
-        art, shortlist, query_vec, k, {"prefix_cos": "double"},
-        "mrl_topk_from_store",
+    qv = [float(x) for x in query_vec]
+    return _serve_shortlist(
+        art, _mrl_prefix_frame(art, qv, query_vec_id),
+        (F.col("prefix_cos").desc(), "vec_id"), r, query_vec, k,
+        {"prefix_cos": "double"}, "mrl_topk_from_store",
     )
 
 
@@ -3517,8 +3431,6 @@ KMEANS_SCALE = 1_000_000
 def similarity_kmeans_step(
     spark: SparkSession, sf_dir: str, *, emb: DataFrame | None = None
 ) -> DataFrame:
-    from pyspark.sql import Window
-
     ext = emb is not None
     emb = _with_normalized(
         emb if ext else _load_emb(spark, sf_dir)
@@ -3620,8 +3532,6 @@ def similarity_kmeans_step(
     "shuffles.",
 )
 def dedup_semantic_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window
-
     pairs = _bucket_pairs_gemm(spark, sf_dir).select(
         F.col("vec_a").alias("id_a"),
         F.col("vec_b").alias("id_b"),
@@ -3729,11 +3639,7 @@ def similarity_ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # O(variants x k)-row aggregation. (No result-frame persist: caching
     # the top-k outputs would memoize the report across runs and hide the
     # index cost the harness exists to measure.)
-    bf = (
-        similarity_bruteforce_topk(spark, sf_dir, emb=emb_shared)
-        .select("vec_id")
-        .withColumn("hit", F.lit(1))
-    )
+    bf = _exact_hits(spark, sf_dir, emb_shared)
     arms = None
     for name, fn in (
         ("lsh", similarity_lsh_ann),
@@ -4135,8 +4041,6 @@ DECON_TAU = 0.35
 def similarity_semantic_decontaminate(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    from pyspark.sql import Window
-
     coded = _load_emb(spark, sf_dir).withColumn(
         "bucket", F.expr(_srp_code_sql("embedding"))
     )

@@ -4364,24 +4364,6 @@ def test_batch_membership_generalizes_parity(spark):
         ).collect()
     )
     assert default == via_members, (default, via_members)
-    # the True sentinel (spine IS the population, one checkpoint for
-    # both roles) must be indistinguishable from passing the frame
-    via_sentinel = sorted(
-        tuple(r)
-        for r in incremental_component_cls(
-            be, batch, batch_members=True
-        ).collect()
-    )
-    assert default == via_sentinel, (default, via_sentinel)
-    # False reads as "no membership frame" — the parity default, not a
-    # crash on .select
-    via_false = sorted(
-        tuple(r)
-        for r in incremental_component_cls(
-            be, batch, batch_members=False
-        ).collect()
-    )
-    assert default == via_false, (default, via_false)
     # and the crafted edges exercise all three outcomes
     by_id = {r[0]: (r[2], r[3]) for r in default}
     assert by_id[20] == (1, 0) and by_id[50] == (1, 0)  # direct contact
@@ -8459,6 +8441,50 @@ def test_mrl_r_sweep_generative_parity(spark, tmp_path):
         assert_matches_oracle(
             spec.builder(spark, d), con, spec.oracle, f"mrlrsg_{seed}"
         )
+
+
+def test_bq_mrl_serve_empty_shortlist(spark):
+    """An index whose only row is the excluded query_vec_id leaves
+    stage 1 with nothing to shortlist: both store serves return an
+    empty frame with the registered cascade's columns and types, and
+    never reach the exact stage."""
+    from iceberg_explorer_spark.operators import QUERIES
+    from iceberg_explorer_spark.operators.similarity import (
+        _bq_sketched,
+        _load_emb,
+        _mrl_prefixed,
+        _with_normalized,
+        BQ_STORE_ARTIFACTS,
+        bq_topk_from_store,
+        MRL_STORE_ARTIFACTS,
+        mrl_topk_from_store,
+    )
+
+    d = "/root/testdata/sf0.01"
+    only = _with_normalized(_load_emb(spark, d)).filter(F.col("vec_id") == 0)
+    qv = [float(x) for x in only.first()["ne"]]
+    cases = (
+        ("bq", BQ_STORE_ARTIFACTS, _bq_sketched, bq_topk_from_store,
+         "similarity_bq_hamming_topk", ("hamming_dist", "bigint")),
+        ("mrl", MRL_STORE_ARTIFACTS, _mrl_prefixed, mrl_topk_from_store,
+         "similarity_mrl_prefix_topk", ("prefix_cos", "double")),
+    )
+    for kind, spec, rows, serve, registered, score in cases:
+        st = BucketedArtifactStore(
+            spark, f"t_{kind}_empty", n_buckets=2, artifacts=spec
+        )
+        try:
+            (name,) = spec
+            st.write(name, rows(only))
+            served = serve(st, qv, query_vec_id=0)
+            assert served.collect() == []
+            assert served.dtypes == [
+                ("vec_id", "bigint"), score, ("cos_sim", "double")
+            ]
+            want = QUERIES[registered].builder(spark, d).dtypes
+            assert served.dtypes == want
+        finally:
+            st.drop()
 
 
 def test_mrl_store_round_trip(spark):
